@@ -14,7 +14,6 @@ handles, mmap'd weights) can still ship as a loader closure.
 
 from __future__ import annotations
 
-import pickle
 from typing import Any, Callable, Sequence, Union
 
 from pyspark.broadcast import Broadcast

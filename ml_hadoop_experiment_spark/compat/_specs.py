@@ -11,7 +11,7 @@ fixed, ``dtype`` only for varlen) and tf dtypes by their ``name`` attr.
 
 from __future__ import annotations
 
-from typing import Any, Dict, Mapping
+from typing import Any, Mapping
 
 from ml_hadoop_experiment_spark.schema.feature_spec import (
     FeatureSpec,

@@ -26,11 +26,9 @@ greedy left-to-right ``list_reduce`` fold — exactly the
 ``kmeans_ctes`` precedent for data-dependent iterative state inside
 one SQL statement.
 
-This lives in its own module (not corpus.py) deliberately: it shares
-corpus.py's tokenization CONVENTION (split ``trim(lower(text))`` on
-``\\s+``, keep words of length >= 2) by construction, without touching
-corpus.py — so the eight declared queries whose import closure is
-corpus.py keep their verified fingerprints.
+It shares corpus.py's tokenization CONVENTION (split
+``trim(lower(text))`` on ``\\s+``, keep words of length >= 2) by
+construction.
 
 Reference parity: criteo/ml-hadoop-experiment has no tokenizer surface
 (SURVEY.md §2) — north-star extension for LLM data pipelines.

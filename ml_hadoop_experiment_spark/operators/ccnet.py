@@ -23,10 +23,6 @@ same two-scan contract as ``equi_depth_histogram``. At 100 TB, swap
 exact-yardstick vs approx-production pairing in SCALE.md) or persist
 the xent frame; the bucket assignment itself is a broadcast + map.
 
-Lives in its own module (the ``bpe.py``/``urldedup.py`` isolation
-precedent): importing from ``corpus.py``/``stats.py`` here does not
-re-fingerprint their query families.
-
 Reference parity: criteo/ml-hadoop-experiment has no curation surface
 (SURVEY.md §2) — north-star extension for LLM data pipelines.
 """

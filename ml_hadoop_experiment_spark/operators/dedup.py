@@ -3,14 +3,15 @@
 Extensions beyond the reference (BASELINE.json north-star). Four families:
 
 - exact:      content-hash groupBy — one shuffle on a 128-bit digest, never
-              on the raw text (a 100 TB corpus shuffles ~32 bytes/row).
+              on the raw text (a 100 TB corpus shuffles ~32 bytes/row);
+              ``dedup_by_url`` keys it on the canonical URL.
 - MinHash:    k min-hash aggregates over the token set -> LSH banding ->
               bucket self-join for candidates -> exact Jaccard verify.
               The classic shingle->minhash->band->bucket-join pipeline; every
               stage is a DataFrame op with one shuffle.
-- SimHash:    b-bit fingerprint from per-token hash bits, pure expression
-              (no shuffle at all); near-dups share fingerprints or differ in
-              few bits.
+- SimHash:    b-bit fingerprint from per-token hash bits, one Arrow
+              projection (no shuffle at all); near-dups share fingerprints
+              or differ in few bits.
 - n-gram Jaccard: exact pairwise similarity on candidate pairs via distinct
               n-gram joins.
 
@@ -25,6 +26,8 @@ import logging
 import math
 from typing import List, Optional
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -107,6 +110,32 @@ def duplicate_stats(df: DataFrame, content_cols: List[str]) -> DataFrame:
         .count()
         .where(F.col("count") > 1)
     )
+
+
+def dedup_by_url(
+    df: DataFrame,
+    id_col: str,
+    url_col: str,
+    out_col: str = "canonical_url",
+) -> DataFrame:
+    """URL-level dedup — the crawl pipeline's standard FIRST pass
+    (CCNet / RefinedWeb order: URL dedup before any content is fetched
+    or compared): canonicalize ``url_col``
+    (:func:`~..functions.url.canonicalize_url` — scheme/host case,
+    ``www.``, default ports, fragments, tracking params, param order,
+    trailing slashes) and keep one representative row (lowest
+    ``id_col``) per canonical URL, via the :func:`dedup_exact` digest
+    machinery. The surviving rows carry the canonical form in
+    ``out_col``.
+
+    At 100 TB: canonicalization is a map-only expression; the single
+    shuffle is ``dedup_exact``'s, keyed on the 16-byte digest of the
+    canonical URL — never on page payloads.
+    """
+    from ml_hadoop_experiment_spark.functions.url import canonicalize_url
+
+    with_canon = df.withColumn(out_col, canonicalize_url(F.col(url_col)))
+    return dedup_exact(with_canon, [out_col], id_col)
 
 
 # --------------------------------------------------------------------------
@@ -815,49 +844,76 @@ def near_dup_against_index(
 # --------------------------------------------------------------------------
 
 
+#: per-bits cache of the Arrow fingerprint UDFs (pandas_udf registration
+#: costs a py4j round trip; every call site reuses one function object)
+_SIMHASH_ARROW_UDFS: dict = {}
+
+
+def _simhash_arrow_udf(bits: int):
+    """Vectorized SimHash vote kernel: an Arrow ``pandas_udf`` taking the
+    TOKEN ARRAY column and returning the ``bits``-bit fingerprint. Per
+    batch: md5/sha256 each token once (hashlib — C speed), extract the
+    top bit of each digest nibble with two numpy shifts, sum votes per
+    bit, pack the sign bits.
+
+    Nibble b of the hex digest >= '8' == bit 7 (even b) / bit 3 (odd b)
+    of digest byte b//2; vote rule ``2 * set_count > n`` strict; NULL or
+    empty token array -> 0."""
+    if bits in _SIMHASH_ARROW_UDFS:
+        return _SIMHASH_ARROW_UDFS[bits]
+    assert 1 <= bits <= 63, "bigint fingerprint holds at most 63 bits"
+    import hashlib
+
+    nbytes = (bits + 1) // 2  # digest bytes that carry the used nibbles
+    hasher = hashlib.md5 if bits <= 32 else hashlib.sha256
+    digest_len = 16 if bits <= 32 else 32
+
+    @F.pandas_udf("long")
+    def _fp(tokens: pd.Series) -> pd.Series:
+        shifts = np.arange(bits, dtype=np.uint64)
+        out = np.zeros(len(tokens), dtype=np.int64)
+        for i, toks in enumerate(tokens):
+            if toks is None or len(toks) == 0:
+                continue
+            n = len(toks)
+            buf = b"".join(hasher(t.encode("utf-8")).digest() for t in toks)
+            arr = np.frombuffer(buf, dtype=np.uint8).reshape(n, digest_len)
+            arr = arr[:, :nbytes]
+            # even nibble index 2j = high nibble of byte j (>= 8 == top
+            # bit); odd nibble 2j+1 = low nibble (its bit 3)
+            mat = np.empty((n, 2 * nbytes), dtype=np.uint8)
+            mat[:, 0::2] = arr >> 7
+            mat[:, 1::2] = (arr >> 3) & 1
+            votes = mat[:, :bits].sum(axis=0, dtype=np.int64)
+            fp_bits = (votes * 2 > n).astype(np.uint64)
+            out[i] = int((fp_bits << shifts).sum())
+        return pd.Series(out)
+
+    _SIMHASH_ARROW_UDFS[bits] = _fp
+    return _fp
+
+
 def simhash(col: Column, bits: int = 16) -> Column:
     """``bits``-bit SimHash fingerprint of the whitespace token multiset.
 
     Bit b of a token's hash = (hex digit b of md5(token)) >= '8' — i.e. the
-    top bit of each md5 nibble, giving up to 32 independent bits. The
-    fingerprint sets bit b when the signed token-vote sum is positive:
-    sum_b = 2*|{t: bit_b(t)}| - n. Pure column expression — zero shuffle.
+    top bit of each md5 nibble, giving up to 32 independent bits; wider
+    fingerprints read sha2-256's 64 nibbles. The fingerprint sets bit b
+    when the signed token-vote sum is positive: sum_b = 2*|{t: bit_b(t)}|
+    - n. NULL text -> 0. Zero shuffle.
 
-    Per-bit votes are ``ascii(char) >= 56`` filter scans over the digest
-    array: md5 hex is ``0-9a-f``, so the top-nibble-bit test is one byte
-    compare instead of an 8-way string ``isin`` (round-1 form). Measured
-    A/B at sf0.1 local[32], steady-state minimums: ascii-filter 0.70 s,
-    8-way isin 0.78-0.87 s, hex→int ``conv`` + integer aggregates 1.95 s,
-    packed-lane struct accumulators (true single pass) 0.95 s — the
-    "single pass" rewrites LOSE because aggregate/struct per-element
-    allocation outweighs a cheap byte compare, and the scan+split+md5
-    floor is ~0.26 s of that total. ``simhash_sql`` keeps the value-
-    identical nibble-compare form (the oracle only runs at toy scale).
+    Tokenization (``split(trim(lower(col)), '\\s+')``) stays in the JVM,
+    so the token contract is Spark's own; only the token arrays cross to
+    Python, where one Arrow ``pandas_udf`` projection hashes and votes.
+    A per-bit expression form (32 filter scans, ~1.5k Catalyst nodes)
+    costs more to analyze and compile than to run, and is recompiled per
+    streaming micro-batch (measured at sf0.1 local[32]: simhash 1.30 ->
+    0.84 s, streaming_simhash 15.6 -> 2.6 s). ``simhash_sql`` is the
+    value-identical DuckDB twin; tests/test_simhash_arrow.py pins
+    bit-identity against the expression form.
     """
-    assert 1 <= bits <= 63, "bigint fingerprint holds at most 63 bits"
     tokens = F.split(F.trim(F.lower(col)), r"\s+")
-    # hash each token ONCE; per-bit votes then read nibbles of the digest
-    # (md5 is ~16x the cost of a byte compare). md5 hex has 32 nibbles;
-    # wider fingerprints (the 100 TB auto path) read sha2-256's 64.
-    digest = (
-        (lambda t: F.md5(t)) if bits <= 32 else (lambda t: F.sha2(t, 256))
-    )
-    hashes = F.transform(tokens, digest)
-    n = F.size(tokens)
-    fp = F.lit(0).cast("bigint")
-
-    # NB: the loop variable must be captured via a factory, not a lambda
-    # default — PySpark reads lambda arity, and a 2-arg lambda is treated as
-    # an (element, index) function.
-    def _bit_predicate(b: int):
-        # '8'=56 < '9' < 'a'-'f' — the only chars above are the set-bit ones
-        return lambda h: F.ascii(F.substring(h, b + 1, 1)) >= 56
-
-    for b in range(bits):
-        set_count = F.size(F.filter(hashes, _bit_predicate(b)))
-        bit_on = (set_count * 2) > n  # strict: vote sum > 0
-        fp = fp + F.when(bit_on, F.lit(1 << b).cast("bigint")).otherwise(F.lit(0))
-    return fp
+    return _simhash_arrow_udf(bits)(tokens)
 
 
 def simhash_sql(expr: str, bits: int = 16) -> str:
@@ -910,11 +966,10 @@ def _simhash_block_frame(
     one row per disjoint fingerprint segment per doc. Single-scan
     blocking (the round-3 minhash banding lesson): ONE explode of an
     array(struct(part, block)) column, not one union arm per segment —
-    union arms re-evaluate the fingerprint expression per arm AND per
-    join side (8x the 32 bit-vote scans at 4 blocks; measured 2.6x
-    slower at sf0.1). The exploded frame auto-persists above the
-    measured crossover so the fingerprint computes exactly once; toy
-    inputs skip the materialization stage overhead."""
+    union arms re-evaluate the fingerprint per arm AND per join side
+    (measured 2.6x slower at sf0.1). The exploded frame auto-persists
+    above the measured crossover so the fingerprint computes exactly
+    once; toy inputs skip the materialization stage overhead."""
     entries = F.array(
         *[
             F.struct(
@@ -1051,7 +1106,7 @@ def auto_simhash_bits(n_docs: int, max_hamming: int = 2) -> int:
     n = 2^21 per segment at d=2 — beyond that, cap dominant blocks
     upstream the way minhash banding caps ``max_bucket_ids``).
 
-    The trade: fingerprint cost is O(n * bits * tokens) (one vote scan
+    The trade: fingerprint cost is O(n * bits * tokens) (one vote
     per bit) while candidate-join cost is O(sum over buckets of
     load^2) — the n^2-shaped term blocking exists to control. Measured
     at sf0.1 (5k docs, d=2): auto=39 bits cuts candidates 6.9x vs
@@ -1076,7 +1131,7 @@ def simhash_near_dup_pairs(
 ) -> DataFrame:
     """Pairs within ``max_hamming`` bit flips of their ``bits``-bit SimHash.
 
-    Fingerprint is a pure column expression (zero shuffle); candidates come
+    Fingerprint is one Arrow projection (zero shuffle); candidates come
     from pigeonhole blocking on ``max_hamming + 1`` disjoint bit segments
     (exact recall — see ``simhash_pairs_from_fingerprints``), then exact
     popcount verifies. Never materializes all-pairs.

@@ -1,7 +1,7 @@
 """HyperLogLog distinct-count sketch with an est-vs-truth audit.
 
-The third sketch family next to KMV (``operators/sketches.py``) and
-Count-Min (``operators/cms.py``): KMV answers "how many distinct" by
+The third sketch family next to KMV and Count-Min (both in
+``operators/sketches.py``): KMV answers "how many distinct" by
 keeping the k minimum hashes (k-sized state), Count-Min answers "how
 often each" with a depth×width counter table; HLL answers "how many
 distinct" with ``m = 2^p`` one-byte registers — the industry-standard

@@ -28,7 +28,7 @@ from __future__ import annotations
 from typing import Iterator, Optional
 
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 IMAGE_FEATURE_SCHEMA = (

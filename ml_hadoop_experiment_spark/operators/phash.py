@@ -44,7 +44,6 @@ from typing import Iterator, Optional
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from .dedup import simhash_pairs_from_fingerprints
 

@@ -22,10 +22,7 @@ arithmetic that would put a second Lloyd chain per list into the
 oracle; the no-residual variant is the documented, oracle-replayable
 member of the family.
 
-This lives in its own module deliberately: it composes pq.py /
-clustering.py / similarity.py public helpers WITHOUT touching them, so
-the declared queries whose import closure is those files keep their
-verified fingerprints.
+It composes pq.py / clustering.py / similarity.py public helpers.
 
 Scale shape: build cost is the sample-bounded trainer plus ONE encode
 scan; the pinned index is ``n_subspaces`` ints per vector (64-dim

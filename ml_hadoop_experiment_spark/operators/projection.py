@@ -24,7 +24,7 @@ north-star extension surface (SURVEY.md §2 extensions).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # the portable multiplicative hash family's constants

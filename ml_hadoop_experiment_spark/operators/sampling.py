@@ -17,6 +17,10 @@ Scale notes: the whole operator is a single Catalyst expression pipeline —
 no shuffle, no Python boundary; it fuses into the scan's whole-stage-codegen
 and the sampling filter combines with pushed-down predicates. At 100 TB this
 is a pure map-side pass.
+
+Beyond the reference: split/fold assignment, priority and mixture
+sampling, and ``neyman_sample`` (stratified sampling with Neyman-optimal
+allocation).
 """
 
 from __future__ import annotations
@@ -573,4 +577,175 @@ rates AS (
 SELECT t.*, 1.0 / r.rate AS {weight_col}
 FROM {relation} t JOIN rates r ON t.{source_expr} = r.s
 WHERE r.thr >= 4294967296 OR {portable_int_hash_sql(f"t.{key_expr}", salt=seed)} < r.thr
+"""
+
+
+# --------------------------------------------------------------------------
+# Stratified sampling with statistically optimal (Neyman) allocation
+# --------------------------------------------------------------------------
+
+
+def neyman_sample(
+    df: DataFrame,
+    stratum_col: str,
+    value_col: str,
+    key_expr: Column,
+    total_n: int,
+    salt: int = 0,
+) -> DataFrame:
+    """Neyman-allocation stratified sample: a total budget of
+    ``total_n`` rows allocated across strata proportional to
+    ``N_h * sigma_h`` (Neyman 1934 — the allocation that minimizes the
+    variance of the estimated population mean of ``value_col`` for a
+    fixed budget), each stratum's quota then drawn by deterministic
+    portable-hash rank on ``key_expr`` (a non-negative integral row
+    key). Returns the sampled rows with ``stratum``, ``n_rows``
+    (stratum population) and ``alloc`` (stratum quota) attached.
+
+    Determinism & portability (the oracle contract): the per-stratum
+    moments are EXACT decimal sums (count / sum / sum-of-squares of the
+    value rounded to 6 decimals), so the variance expression
+    ``(sumsq - sum^2/n)/n`` sees identical doubles in both engines; the
+    allocation is largest-remainder rounding of ``total_n * w_h / W``
+    under the total order (remainder DESC, stratum) — integer-exact
+    given identical doubles; quotas cap at the stratum population
+    (capped strata simply under-fill the budget, documented, not
+    silently redistributed); and the within-stratum draw ranks the
+    portable unit hash with the row key as tie-break. Every step is
+    replayable in DuckDB SQL (:func:`neyman_sample_sql`).
+
+    Scale: the moments are one map-combined aggregation; the allocation
+    math runs entirely on the strata-bounded stats frame (its global
+    windows hold |strata| rows, never data); the draw is the canonical
+    one-shuffle rank window partitioned by stratum — the sort cost is
+    the largest stratum, the usual stratified-sampling bound. All-zero
+    variance corpora fall back to proportional allocation (w_h = N_h).
+    """
+    if total_n < 1:
+        raise ValueError(f"total_n must be positive, got {total_n}")
+    from pyspark.sql import Window
+
+    v = F.col(value_col).cast("decimal(18,6)")
+    stats = df.groupBy(F.col(stratum_col).alias("stratum")).agg(
+        F.count(F.lit(1)).alias("n_rows"),
+        F.sum(v).alias("__sum"),
+        F.sum(v * v).alias("__sumsq"),
+    )
+    n_d = F.col("n_rows").cast("double")
+    var = (
+        F.col("__sumsq").cast("double")
+        - F.col("__sum").cast("double") * F.col("__sum").cast("double") / n_d
+    ) / n_d
+    stats = stats.withColumn(
+        "__w", n_d * F.sqrt(F.greatest(var, F.lit(0.0)))
+    )
+    everything = Window.rowsBetween(
+        Window.unboundedPreceding, Window.unboundedFollowing
+    )
+    # all-constant strata: Neyman weights all zero -> proportional
+    stats = stats.withColumn(
+        "__w",
+        F.when(F.sum("__w").over(everything) > 0, F.col("__w")).otherwise(
+            n_d
+        ),
+    )
+    raw = F.lit(float(total_n)) * F.col("__w") / F.sum("__w").over(everything)
+    stats = stats.withColumn("__base", F.floor(raw).cast("long")).withColumn(
+        "__rem", raw - F.floor(raw)
+    )
+    leftover = F.lit(total_n) - F.sum("__base").over(everything)
+    rk = F.row_number().over(Window.orderBy(F.desc("__rem"), "stratum"))
+    alloc = stats.select(
+        "stratum",
+        "n_rows",
+        F.least(
+            F.col("__base")
+            + F.when(rk <= leftover, F.lit(1)).otherwise(F.lit(0)),
+            F.col("n_rows"),
+        ).alias("alloc"),
+    )
+    keyed = df.withColumn("__key", key_expr.cast("bigint")).withColumn(
+        "__u", portable_unit_hash(F.col("__key"), salt)
+    )
+    ranked = keyed.join(
+        F.broadcast(alloc),
+        keyed[stratum_col] == alloc["stratum"],
+    ).withColumn(
+        "__rk",
+        F.row_number().over(
+            Window.partitionBy("stratum").orderBy("__u", "__key")
+        ),
+    )
+    return ranked.where(F.col("__rk") <= F.col("alloc")).drop(
+        "__key", "__u", "__rk"
+    )
+
+
+def neyman_sample_sql(
+    relation: str,
+    stratum_expr: str,
+    value_expr: str,
+    key_expr: str,
+    total_n: int,
+    salt: int = 0,
+    select: str = "stratum, key, n_rows, alloc",
+) -> str:
+    """DuckDB twin of :func:`neyman_sample` (same decimal moments, same
+    largest-remainder allocation, same hash-rank draw); emits
+    ``stratum, key`` plus the audit columns by default."""
+    u = portable_unit_hash_sql("key", salt)
+    return f"""
+WITH base AS (
+  -- the square is computed at DECIMAL(28,6): DuckDB stores DECIMAL(18)
+  -- in int64 and overflows on the raw (18,6)*(18,6) multiply; at
+  -- (28,6) it works in int128 and the (38,12) product equals Spark's
+  -- (37,12) exactly (both exact decimal arithmetic, no rounding)
+  SELECT {stratum_expr} AS stratum, CAST({key_expr} AS BIGINT) AS key,
+         CAST({value_expr} AS DECIMAL(18,6)) AS v,
+         CAST({value_expr} AS DECIMAL(28,6)) AS vw
+  FROM {relation}
+),
+stats AS (
+  SELECT stratum, count(*) AS n_rows,
+         CAST(sum(v) AS DOUBLE) AS s, CAST(sum(vw * vw) AS DOUBLE) AS sq
+  FROM base GROUP BY stratum
+),
+weighted AS (
+  SELECT stratum, n_rows,
+         CAST(n_rows AS DOUBLE)
+           * sqrt(greatest((sq - s * s / CAST(n_rows AS DOUBLE))
+                           / CAST(n_rows AS DOUBLE), 0.0)) AS w
+  FROM stats
+),
+weighted2 AS (
+  SELECT stratum, n_rows,
+         CASE WHEN sum(w) OVER () > 0 THEN w
+              ELSE CAST(n_rows AS DOUBLE) END AS w
+  FROM weighted
+),
+rawalloc AS (
+  SELECT stratum, n_rows,
+         CAST({total_n} AS DOUBLE) * w / sum(w) OVER () AS raw
+  FROM weighted2
+),
+rounded AS (
+  SELECT stratum, n_rows, CAST(floor(raw) AS BIGINT) AS base,
+         raw - floor(raw) AS rem
+  FROM rawalloc
+),
+alloc AS (
+  SELECT stratum, n_rows,
+         least(base + CASE WHEN row_number()
+                 OVER (ORDER BY rem DESC, stratum)
+               <= {total_n} - sum(base) OVER () THEN 1 ELSE 0 END,
+               n_rows) AS alloc
+  FROM rounded
+),
+ranked AS (
+  SELECT b.stratum, b.key, a.n_rows, a.alloc,
+         row_number() OVER (PARTITION BY b.stratum
+                            ORDER BY {u}, b.key) AS rk
+  FROM base b JOIN alloc a ON a.stratum = b.stratum
+)
+SELECT {select} FROM ranked WHERE rk <= alloc
 """

@@ -20,10 +20,6 @@ stays bounded at 100 TB corpus scale. Same recall contract as
 ``cosine_near_dup_pairs``: candidate generation is bucket-exact
 (documented LSH recall), verification is exact and oracle-replayed.
 
-Lives in its own module (the ``urldedup.py``/``ccnet.py`` isolation
-precedent): importing from ``similarity.py`` here does not
-re-fingerprint its ANN query family.
-
 Reference parity: criteo/ml-hadoop-experiment has no curation surface
 (SURVEY.md §2) — north-star extension for LLM data pipelines.
 """

@@ -25,12 +25,9 @@ and every estimate degrades to exact (two complete sketches of sets
 whose union exceeds ``k`` still truncate at the combine, so the
 estimator arm runs).
 
-This lives in its own module (not sketches.py) so `kmv_distinct`'s
-import closure keeps its verified fingerprint.
-
 Reference parity: criteo/ml-hadoop-experiment has no sketch surface
-(SURVEY.md §2) — north-star extension, sibling of `operators/cms.py`
-and `operators/hll.py`.
+(SURVEY.md §2) — north-star extension, sibling of the KMV and Count-Min
+sketches in `operators/sketches.py` and `operators/hll.py`.
 """
 
 from __future__ import annotations

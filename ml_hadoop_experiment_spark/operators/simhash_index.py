@@ -9,10 +9,7 @@ rotation, not once per batch — exactly the argument (and the API shape)
 of :class:`~.dedup.NearDupCorpusIndex` / ``build_corpus_index`` for the
 MinHash pipeline (SCALE.md "near_dup_incr steady-state index A/B").
 
-This lives in its own module (not dedup.py) deliberately: it composes
-dedup.py's public ``simhash`` expression and block-frame builder without
-touching them, so the fourteen declared queries whose import closure is
-dedup.py keep their verified fingerprints.
+It composes dedup.py's ``simhash`` fingerprint and block-frame builder.
 
 Reference parity: criteo/ml-hadoop-experiment has no dedup surface at
 all (its ~2.1k LoC are ML-inference glue; see SURVEY.md §2) — this is
@@ -26,8 +23,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _simhash_block_frame
-from .simhash_fp import simhash  # r14: Arrow-vectorized fingerprint
+from .dedup import _simhash_block_frame, simhash
 
 
 class SimHashCorpusIndex:

@@ -26,6 +26,9 @@ Scale notes (SCALE.md):
   in DuckDB); beyond ~1M distinct keys the estimate saturates. That bound is
   for the oracle gate only — ``mode="native"`` hashes with xxhash64 (full
   64-bit space, JVM codegen) for production.
+
+The Count-Min frequency sketch (``cms_counters`` / ``cms_topk_audit``)
+lives here too: "how often each key" next to KMV's "how many distinct".
 """
 
 from __future__ import annotations
@@ -132,4 +135,133 @@ SELECT {g}, n_kept, kth_hash,
        CASE WHEN n_kept < {k} THEN CAST(n_kept AS DOUBLE)
             ELSE {float(k - 1)!r} / kth_hash END AS distinct_est
 FROM agg
+"""
+
+
+# --------------------------------------------------------------------------
+# Count-Min sketch (Cormode & Muthukrishnan, J. Algorithms 2005)
+# --------------------------------------------------------------------------
+
+
+def _cms_cells(key: Column, width: int, depth: int) -> Column:
+    """array<struct<i, b>>: the ``depth`` (row, bucket) cells a key maps
+    to, via the portable md5→affine-permutation family (bit-identical
+    in DuckDB; see ``cms_topk_audit_sql``)."""
+    from ml_hadoop_experiment_spark.functions.hashing import (
+        minhash_permutation_params,
+        minhash_permute,
+        portable_token_hash_int,
+    )
+
+    h = portable_token_hash_int(key)
+    return F.array(
+        *[
+            F.struct(
+                F.lit(i).alias("i"),
+                (minhash_permute(h, a, b) % F.lit(width)).alias("b"),
+            )
+            for i, (a, b) in enumerate(minhash_permutation_params(depth))
+        ]
+    )
+
+
+def cms_counters(
+    df: DataFrame, key_col: str, width: int = 1024, depth: int = 4
+) -> DataFrame:
+    """Count-Min counter table ``(i, b, cnt)`` over the key-instance
+    stream: ``depth`` hash rows of ``width`` buckets each.
+
+    THE scale property: the exchange carries at most ``depth*width``
+    cells (map-side partial aggregation folds the instance stream into
+    cells before any shuffle), so building the sketch over 100 TB of
+    tokens shuffles a few thousand rows — the frequency-tracking
+    counterpart of ``kmv_distinct``'s bounded cardinality sketch, for
+    when the EXACT ``heavy_hitters`` pass (which shuffles candidate
+    keys) is still too much, or when sketches from disjoint corpus
+    shards must be mergeable by plain cell-wise addition.
+    """
+    cells = df.select(
+        F.explode(_cms_cells(F.col(key_col), width, depth)).alias("c")
+    )
+    return cells.groupBy(
+        F.col("c.i").alias("i"), F.col("c.b").alias("b")
+    ).agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def cms_topk_audit(
+    df: DataFrame,
+    key_col: str,
+    width: int = 1024,
+    depth: int = 4,
+    k: int = 50,
+) -> DataFrame:
+    """``(key, n_exact, n_cms)`` for the ``k`` exactly-most-frequent
+    keys: the est-vs-truth display for the Count-Min sketch, same
+    audit shape as the declared ``kmv_distinct`` query. The CMS
+    guarantee ``n_cms >= n_exact`` holds row-for-row (min over depth
+    counters only ever OVER-counts, by colliding keys' mass).
+
+    The counter table (``depth*width`` rows) broadcasts to the top-k
+    frame; ordering is total (count DESC, key) so LIMIT is
+    deterministic.
+    """
+    exact = (
+        df.groupBy(F.col(key_col).alias("key"))
+        .agg(F.count(F.lit(1)).alias("n_exact"))
+        .orderBy(F.desc("n_exact"), "key")
+        .limit(k)
+    )
+    counters = cms_counters(df, key_col, width, depth)
+    probes = exact.select(
+        "key",
+        "n_exact",
+        F.explode(_cms_cells(F.col("key"), width, depth)).alias("c"),
+    ).select("key", "n_exact", F.col("c.i").alias("i"), F.col("c.b").alias("b"))
+    return (
+        probes.join(F.broadcast(counters), ["i", "b"])
+        .groupBy("key", "n_exact")
+        .agg(F.min("cnt").alias("n_cms"))
+    )
+
+
+def cms_topk_audit_sql(
+    relation_tokens: str,
+    key_expr: str,
+    width: int = 1024,
+    depth: int = 4,
+    k: int = 50,
+) -> str:
+    """DuckDB twin of :func:`cms_topk_audit` over a relation/subquery
+    producing one row per key INSTANCE (same md5→affine bucket family,
+    same min-over-rows estimate, same total order)."""
+    from ml_hadoop_experiment_spark.functions.hashing import (
+        minhash_permutation_params,
+        minhash_permute_sql,
+        portable_token_hash_int_sql,
+    )
+
+    params = minhash_permutation_params(depth)
+    h = portable_token_hash_int_sql(key_expr)
+    cell_rows = " UNION ALL ".join(
+        f"SELECT key, {i} AS i, ({minhash_permute_sql('h', a, b)}) % {width} AS b"
+        " FROM hashed"
+        for i, (a, b) in enumerate(params)
+    )
+    return f"""
+WITH stream AS (SELECT {key_expr} AS key FROM {relation_tokens}),
+hashed AS (SELECT key, {portable_token_hash_int_sql('key')} AS h FROM stream),
+cells AS ({cell_rows}),
+counters AS (SELECT i, b, count(*) AS cnt FROM cells GROUP BY i, b),
+exact AS (
+  SELECT key, count(*) AS n_exact FROM stream GROUP BY key
+  ORDER BY n_exact DESC, key LIMIT {k}
+),
+probes AS (
+  SELECT e.key, e.n_exact, c.i, c.b
+  FROM exact e
+  JOIN (SELECT DISTINCT key, i, b FROM cells) c ON c.key = e.key
+)
+SELECT p.key, p.n_exact, CAST(min(ct.cnt) AS BIGINT) AS n_cms
+FROM probes p JOIN counters ct ON ct.i = p.i AND ct.b = p.b
+GROUP BY p.key, p.n_exact
 """

@@ -29,7 +29,7 @@ plan clean).
 
 from __future__ import annotations
 
-from typing import Any, Dict, List, Union
+from typing import Dict, List, Union
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F

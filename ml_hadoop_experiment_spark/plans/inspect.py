@@ -1,11 +1,7 @@
 """Executed-plan inspection: measured receipts for plan audits.
 
-Split from plans/optimize.py deliberately: optimize.py sits in the
-import closure of nearly every declared query (``fan_out`` backs the
-``_t`` fixture loader), so adding INSPECTION-ONLY helpers there
-re-fingerprints the whole query set under the stale-green guard
-(tools/green_state.py). These helpers are consumed by tests and
-tools/plan_report.py, never by a query plan.
+These helpers are consumed by tests and tools/plan_report.py, never by
+a query plan.
 """
 
 from __future__ import annotations

@@ -17,10 +17,16 @@ The result equals the single-partition window bit-for-bit for integer
 values (exact addition), at cluster parallelism. Used by
 ``operators/packing.py`` for sequence packing; the DuckDB oracle is the
 plain ``SUM() OVER (ORDER BY ...)`` window.
+
+The same range-exchange machinery also serves
+``exact_group_percentiles``: exact interpolated percentiles,
+bit-identical to Spark's ``percentile`` aggregate, without that
+aggregate's single-reducer value buffer.
 """
 
 from __future__ import annotations
 
+import math
 from typing import Iterator, List, Optional
 
 import numpy as np
@@ -582,9 +588,233 @@ def with_keyed_min_rank(
     return with_pid.mapInPandas(rank_partition, out_schema)
 
 
+def _range_driver_key(x):
+    """Driver-side sort key matching Spark's range-partitioner ordering
+    (ascending, NULLS FIRST) for the group-key types the percentile
+    helper admits: strings order by UTF-8 bytes (Spark's UTF8String
+    binary comparison), booleans/ints/floats numerically. Float-NaN
+    group keys are rejected — Spark sorts NaN last while Python cannot
+    order it at all."""
+    if x is None:
+        return (0, 0)
+    if isinstance(x, str):
+        return (1, x.encode("utf-8"))
+    if isinstance(x, (bytes, bytearray)):
+        return (1, bytes(x))
+    if isinstance(x, bool):
+        return (1, int(x))
+    if isinstance(x, (int, float)):
+        if isinstance(x, float) and x != x:
+            raise ValueError(
+                "exact_group_percentiles: NaN group keys are unsupported"
+            )
+        return (1, x)
+    raise TypeError(
+        f"exact_group_percentiles: unorderable group key type {type(x)!r}"
+    )
+
+
+def exact_group_percentiles(
+    df: DataFrame,
+    group_cols: List[str],
+    value_col: str,
+    fracs: List[float],
+    num_partitions: Optional[int] = None,
+):
+    """Exact interpolated percentiles per group, bit-identical to Spark's
+    ``percentile`` aggregate, WITHOUT its single-reducer value buffer.
+
+    Spark's ``percentile(col, p)`` accumulates every (value, count) pair
+    of a group into one OpenHashMap, merges the per-partition maps in ONE
+    reducer task, sorts, and interpolates — at 600k near-unique doubles
+    that merge+sort is ~2.5 s of single-threaded work per aggregation
+    (guide §2.5: a single giant key no partitioning can split). This
+    helper computes the IDENTICAL values through the range-exchange
+    machinery above (guide §2.3 "shuffle keys, not payloads"):
+
+    1. range-partition + sort ``(group..., value)`` — the only full-data
+       exchange, at full parallelism;
+    2. one tiny aggregation: per-(partition, group) row/null counts —
+       collect is O(partitions x groups), KB-sized for the bounded group
+       cardinalities this helper is for;
+    3. the driver converts each target rank ``floor/ceil(p*(N-1))`` into
+       an absolute row position inside one partition (range order makes
+       group blocks contiguous; intra-partition block order is
+       reconstructed with :func:`_range_driver_key` and VERIFIED against
+       the rows actually fetched);
+    4. one codegen filter selects those <= 2*|fracs|*|groups| rows by
+       ``monotonically_increasing_id``'s low 33 bits (the documented
+       within-partition row number) — no Python crossing, no second
+       shuffle;
+    5. interpolation happens on the driver with Spark's own formula
+       ``(higher - position) * lowerKey + (position - lower) * higherKey``
+       including both of its no-interpolation shortcuts (integral
+       position; equal neighbor keys) — the bit-exactness contract is
+       pinned by tests/test_exact_percentile.py against the builtin.
+
+    Returns ``(percentiles, counts)``: ``percentiles[group] = [value per
+    frac]`` (``None`` when the group has no non-null values, matching the
+    builtin's NULL), ``counts[group] = (total_rows, nonnull_rows)``.
+    Groups are Python tuples of the group-key values, ``()`` for global.
+
+    Contract: group cardinality must be BOUNDED (driver holds one row per
+    (partition, group) — use the builtin ``percentile`` for high-
+    cardinality keys, whose per-key buffers are small anyway); ``fracs``
+    in [0, 1]; a float ``value_col`` must not contain NaN (NULL and NaN
+    are both excluded from ranks here, while the builtin sorts NaN last).
+    Values are compared after a cast to double — monotone for every
+    numeric type, so order statistics (hence results) are unchanged.
+
+    Eager: the caller receives VALUES, not a plan — collects are bounded
+    by partitions x groups + 2*|fracs|*|groups|. The pinned exchange is
+    released before returning (nothing lazy references it).
+    """
+    if not fracs:
+        raise ValueError("fracs must be non-empty")
+    for p in fracs:
+        if not (0.0 <= float(p) <= 1.0):
+            raise ValueError(f"percentile fraction out of [0,1]: {p!r}")
+    spark = df.sparkSession
+    key_list = list(group_cols)
+    proj = df.select(
+        *key_list, F.col(value_col).cast("double").alias("__v")
+    )
+    parts = num_partitions or _auto_partitions(proj)
+    order_cols = [*key_list, "__v"]
+    mark = len(_CACHED)
+    with_pid = _range_exchange(proj, order_cols, parts)
+    try:
+        with _no_aqe(spark):
+            layout = (
+                with_pid.groupBy("__pid", *key_list)
+                .agg(
+                    F.count(F.lit(1)).alias("c"),
+                    F.sum(F.isnull("__v").cast("long")).alias("cn"),
+                )
+                .collect()
+            )
+
+        # driver: per-group totals + needed global (non-null) ranks
+        per_pid: dict = {}
+        counts: dict = {}
+        for r in layout:
+            g = tuple(r[c] for c in key_list)
+            c, cn = int(r["c"]), int(r["cn"])
+            per_pid.setdefault(int(r["__pid"]), {})[g] = (c, cn)
+            tot, nn = counts.get(g, (0, 0))
+            counts[g] = (tot + c, nn + c - cn)
+
+        pos_info: dict = {}
+        needed: dict = {}
+        for g, (_tot, nn) in counts.items():
+            if nn == 0:
+                continue
+            lst, idxs = [], set()
+            for p in fracs:
+                position = (nn - 1) * float(p)
+                lower = math.floor(position)
+                higher = math.ceil(position)
+                idxs.update((lower, higher))
+                lst.append((position, lower, higher))
+            pos_info[g] = lst
+            needed[g] = idxs
+
+        # rank -> (pid, absolute row position inside that partition)
+        norm_g = {g: tuple(_null_norm(x) for x in g) for g in counts}
+        want_by_pid: dict = {}
+        expect: dict = {}
+        cum_nonnull = {g: 0 for g in counts}
+        for pid in sorted(per_pid):
+            block = 0
+            groups_here = sorted(
+                per_pid[pid],
+                key=lambda g: tuple(_range_driver_key(x) for x in g),
+            )
+            for g in groups_here:
+                c, cn = per_pid[pid][g]
+                nn_here = c - cn
+                start = cum_nonnull[g]
+                for k in needed.get(g, ()):
+                    if start <= k < start + nn_here:
+                        abs_idx = block + cn + (k - start)
+                        want_by_pid.setdefault(pid, []).append(abs_idx)
+                        expect[(pid, abs_idx)] = (g, k)
+                cum_nonnull[g] += nn_here
+                block += c
+
+        val_at: dict = {}
+        if expect:
+            # low 33 bits of monotonically_increasing_id = row position
+            # within the partition; the cached frame scans in stored
+            # (sorted) order, so this addresses rows without any Python
+            # crossing or extra exchange.
+            conds = " OR ".join(
+                f"(__pid = {pid} AND __lid IN ({','.join(map(str, sorted(ids)))}))"
+                for pid, ids in sorted(want_by_pid.items())
+            )
+            picked = (
+                with_pid.withColumn(
+                    "__lid",
+                    F.expr("monotonically_increasing_id() & 8589934591"),
+                )
+                .where(conds)
+                .collect()
+            )
+            if len(picked) != len(expect):
+                raise RuntimeError(
+                    "exact_group_percentiles: row-address mismatch "
+                    f"(fetched {len(picked)}, expected {len(expect)}) — "
+                    "range-order reconstruction failed"
+                )
+            for r in picked:
+                key = (int(r["__pid"]), int(r["__lid"]))
+                g, k = expect[key]
+                row_g = tuple(_null_norm(r[c]) for c in key_list)
+                if row_g != norm_g[g]:
+                    raise RuntimeError(
+                        "exact_group_percentiles: fetched row's group "
+                        f"{row_g!r} != expected {norm_g[g]!r} — driver key "
+                        "ordering out of sync with the range partitioner"
+                    )
+                val_at[(g, k)] = float(r["__v"])
+
+        percentiles: dict = {}
+        for g, (_tot, nn) in counts.items():
+            if nn == 0:
+                percentiles[g] = None
+                continue
+            vals = []
+            for position, lower, higher in pos_info[g]:
+                lo_v = val_at[(g, lower)]
+                if higher == lower:
+                    vals.append(lo_v)
+                    continue
+                hi_v = val_at[(g, higher)]
+                if hi_v == lo_v:
+                    # Spark's equal-neighbor shortcut: returns the key
+                    # itself, NOT the interpolation (whose weights can
+                    # sum to 1±1ulp) — required for bit-exactness.
+                    vals.append(lo_v)
+                else:
+                    vals.append(
+                        (higher - position) * lo_v + (position - lower) * hi_v
+                    )
+            percentiles[g] = vals
+        return percentiles, counts
+    finally:
+        # eager helper: nothing lazy references the pinned exchange(s)
+        while len(_CACHED) > mark:
+            frame = _CACHED.pop()
+            try:
+                frame.unpersist()
+            except Exception:
+                pass
+
+
 __all__ = [
     "with_global_running_sum",
     "with_global_rank",
     "with_keyed_min_rank",
     "release_prefix_caches",
+    "exact_group_percentiles",
 ]

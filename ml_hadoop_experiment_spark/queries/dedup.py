@@ -1,59 +1,28 @@
 """Deduplication, similarity-join, and decontamination queries.
 
-Split verbatim from the single-file queries.py (round 11) so the
-per-domain modules stay small; QUERIES / ORACLE_SQL in the package
-__init__ are the only public surface. Block order within this module
-preserves the original file order (two-stage SQL template/finalize
-assignments depend on it).
+Each ``q_<name>`` defined here is registered as the query ``<name>``,
+with this module's ``SQL_<NAME>`` as its DuckDB oracle (see the
+package ``__init__``).
 """
 
 from __future__ import annotations
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ml_hadoop_experiment_spark.functions.hashing import (
-    portable_unit_hash_sql,
-)
-from ml_hadoop_experiment_spark.operators.inference import with_inference_column
-from ml_hadoop_experiment_spark.operators.sampling import sample_with_predicate
-from ml_hadoop_experiment_spark.operators.vocabulary import vocabulary_dataframe
-# --------------------------------------------------------------------------
-# A4/A5: bootstrap metric evaluation (scalable Poisson form; the exact
-# multinomial port is operators/bootstrap.evaluate_bootstrap, unit-tested).
-# --------------------------------------------------------------------------
 
-from ml_hadoop_experiment_spark.operators.bootstrap import (
-    poisson_bootstrap_metrics,
-    poisson_bootstrap_metrics_sql,
-)
-# ==========================================================================
-# Extension queries (BASELINE.json north-star): text analysis, dedup,
-# similarity search, multimodal plumbing.
-# ==========================================================================
-
-from ml_hadoop_experiment_spark.functions import text as TX
 from ml_hadoop_experiment_spark.operators.dedup import (
     dedup_exact,
     minhash_dedup_pairs,
     minhash_signatures,
-    simhash,
     simhash_sql,
     tokens_frame,
 )
-from ml_hadoop_experiment_spark.operators.multimodal import (
-    extract_audio_features,
-    extract_image_features,
-)
 from ml_hadoop_experiment_spark.operators.similarity import (
     cosine_near_dup_pairs,
-    cosine_topk,
     lsh_bucket_sql,
-    lsh_bucketed,
 )
-from ml_hadoop_experiment_spark.queries._shared import _t  # noqa: E501
-from ml_hadoop_experiment_spark.queries.ann import _PAIR_DOT_NORMED, _ROW_NORM  # noqa: E501
-
-
+from ml_hadoop_experiment_spark.queries._shared import _t
+from ml_hadoop_experiment_spark.queries.ann import _PAIR_DOT_NORMED, _ROW_NORM
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -110,7 +79,7 @@ def _url_fixture(d):
 
 
 def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """URL-level dedup (operators/urldedup.dedup_by_url) — the crawl
+    """URL-level dedup (operators/dedup.dedup_by_url) — the crawl
     pipeline's standard first pass: canonicalize the synthesized crawl
     URLs (functions/url.canonicalize_url: case, www., default port,
     fragment, tracking params, param order, trailing slash) and keep
@@ -119,9 +88,7 @@ def q_url_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frozen canonicalization spec in DuckDB string/list functions — the
     gate passes only if the two independent canonicalizers agree
     bit-for-bit on every URL."""
-    from ml_hadoop_experiment_spark.operators.urldedup import (
-        dedup_by_url,
-    )
+    from ml_hadoop_experiment_spark.operators.dedup import dedup_by_url
 
     docs = _t(spark, sf_dir, "documents").select(
         "doc_id", _url_fixture(F.col("doc_id")).alias("url")
@@ -424,14 +391,14 @@ def q_near_dup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return near_dup_against_index(new, index, "doc_id", "text", threshold=0.3)
 
 
+SQL_NEAR_DUP_INDEX = SQL_NEAR_DUP_INCR
+
+
 def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r14: Arrow-vectorized fingerprint (operators/simhash_fp) — one
-    # ArrowEvalPython projection instead of 32 HOF filter scans;
-    # bit-identical (tests/test_simhash_arrow.py), same oracle SQL
-    from ml_hadoop_experiment_spark.operators.simhash_fp import simhash as simhash_fp
+    from ml_hadoop_experiment_spark.operators.dedup import simhash
 
     docs = _t(spark, sf_dir, "documents")
-    return docs.select("doc_id", simhash_fp(F.col("text"), bits=16).alias("simhash16"))
+    return docs.select("doc_id", simhash(F.col("text"), bits=16).alias("simhash16"))
 
 
 SQL_SIMHASH = f"""
@@ -529,7 +496,7 @@ def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     32 bits (vs the earlier 16) gives each block 256 values, so candidate
     buckets stay discriminating: measured 2.1x fewer candidate pairs and
     >2x faster at sf0.1 with identical recall semantics."""
-    from ml_hadoop_experiment_spark.operators.simhash_fp import (
+    from ml_hadoop_experiment_spark.operators.dedup import (
         simhash_near_dup_pairs,
     )
 
@@ -568,7 +535,7 @@ def q_simhash_incr(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a 32-bit SimHash — new-vs-corpus only, corpus never self-paired,
     recall EXACT at the declared radius (pigeonhole segments), unlike
     the Jaccard-recalled near_dup_incr."""
-    from ml_hadoop_experiment_spark.operators.simhash_fp import simhash_against
+    from ml_hadoop_experiment_spark.operators.dedup import simhash_against
 
     docs = _t(spark, sf_dir, "documents")
     new = docs.where(F.col("doc_id") % 10 == 0)
@@ -627,6 +594,9 @@ def q_simhash_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return simhash_against_index(new, index, "doc_id", "text")
 
 
+SQL_SIMHASH_INDEX = SQL_SIMHASH_INCR
+
+
 def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality-aware near-dup retention: simhash clusters (hamming <= 3,
     32-bit) + keep the highest-quality_score doc per cluster (ties by
@@ -635,7 +605,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept rows."""
     from ml_hadoop_experiment_spark.functions.text import quality_score
     from ml_hadoop_experiment_spark.operators.dedup import keep_best_per_cluster
-    from ml_hadoop_experiment_spark.operators.simhash_fp import (
+    from ml_hadoop_experiment_spark.operators.dedup import (
         simhash_near_dup_pairs,
     )
 
@@ -674,7 +644,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle computes the identical closure with a DuckDB recursive
     CTE — two independent transitive-closure algorithms."""
     from ml_hadoop_experiment_spark.operators.dedup import dedup_clusters
-    from ml_hadoop_experiment_spark.operators.simhash_fp import (
+    from ml_hadoop_experiment_spark.operators.dedup import (
         simhash_near_dup_pairs,
     )
 
@@ -742,7 +712,7 @@ def q_group_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ml_hadoop_experiment_spark.operators.group_split import (
         leakage_safe_split,
     )
-    from ml_hadoop_experiment_spark.operators.simhash_fp import (
+    from ml_hadoop_experiment_spark.operators.dedup import (
         simhash_near_dup_pairs,
     )
 
@@ -783,7 +753,7 @@ def q_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ml_hadoop_experiment_spark.operators.group_split import (
         split_leakage_audit,
     )
-    from ml_hadoop_experiment_spark.operators.simhash_fp import (
+    from ml_hadoop_experiment_spark.operators.dedup import (
         simhash_near_dup_pairs,
     )
     from ml_hadoop_experiment_spark.operators.sampling import assign_split

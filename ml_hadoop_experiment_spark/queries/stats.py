@@ -1,58 +1,16 @@
 """Statistics, drift, sketch-audit, and layout-audit queries.
 
-Split verbatim from the single-file queries.py (round 11) so the
-per-domain modules stay small; QUERIES / ORACLE_SQL in the package
-__init__ are the only public surface. Block order within this module
-preserves the original file order (two-stage SQL template/finalize
-assignments depend on it).
+Each ``q_<name>`` defined here is registered as the query ``<name>``,
+with this module's ``SQL_<NAME>`` as its DuckDB oracle (see the
+package ``__init__``).
 """
 
 from __future__ import annotations
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ml_hadoop_experiment_spark.functions.hashing import (
-    portable_unit_hash_sql,
-)
-from ml_hadoop_experiment_spark.operators.inference import with_inference_column
-from ml_hadoop_experiment_spark.operators.sampling import sample_with_predicate
-from ml_hadoop_experiment_spark.operators.vocabulary import vocabulary_dataframe
-# --------------------------------------------------------------------------
-# A4/A5: bootstrap metric evaluation (scalable Poisson form; the exact
-# multinomial port is operators/bootstrap.evaluate_bootstrap, unit-tested).
-# --------------------------------------------------------------------------
 
-from ml_hadoop_experiment_spark.operators.bootstrap import (
-    poisson_bootstrap_metrics,
-    poisson_bootstrap_metrics_sql,
-)
-# ==========================================================================
-# Extension queries (BASELINE.json north-star): text analysis, dedup,
-# similarity search, multimodal plumbing.
-# ==========================================================================
-
-from ml_hadoop_experiment_spark.functions import text as TX
-from ml_hadoop_experiment_spark.operators.dedup import (
-    dedup_exact,
-    minhash_dedup_pairs,
-    minhash_signatures,
-    simhash,
-    simhash_sql,
-    tokens_frame,
-)
-from ml_hadoop_experiment_spark.operators.multimodal import (
-    extract_audio_features,
-    extract_image_features,
-)
-from ml_hadoop_experiment_spark.operators.similarity import (
-    cosine_near_dup_pairs,
-    cosine_topk,
-    lsh_bucket_sql,
-    lsh_bucketed,
-)
-from ml_hadoop_experiment_spark.queries._shared import _t  # noqa: E501
-
-
+from ml_hadoop_experiment_spark.queries._shared import _t
 
 
 def q_hll_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -89,7 +47,7 @@ SQL_HLL_AUDIT = _sql_hll_audit()
 
 def q_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r14: REVERTED to the builtin `percentile` aggregate. The r13
-    # range-exchange helper (plans/percentiles.exact_group_percentiles)
+    # range-exchange helper (plans/prefix.exact_group_percentiles)
     # won in isolated probes (1.31 s) but regressed ~5x in BOTH of the
     # driver's independent sweeps (9.44 s quiet 8-core / 10.30 s noisy
     # 32-core vs 2.0 s on this builtin in r12) — the r13 verdict's #1
@@ -369,7 +327,7 @@ def q_feature_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the documented 100 TB path.
 
     r13: boundaries come from the range-exchange exact-percentile plan
-    (``plans/percentiles.exact_group_percentiles`` — bit-identical to
+    (``plans/prefix.exact_group_percentiles`` — bit-identical to
     the builtin ``percentile`` whose single-reducer value buffer cost
     ~2.5 s at 600k near-unique doubles; 3.63 -> 1.11 s isolated) and are
     inlined into the binning projection, replacing the
@@ -377,9 +335,7 @@ def q_feature_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast subtree; bin rule (strict greater) and output identical —
     same oracle SQL, plan diff in plans/r13."""
     from ml_hadoop_experiment_spark.functions.fastexpr import double_array
-    from ml_hadoop_experiment_spark.plans.percentiles import (
-        exact_group_percentiles,
-    )
+    from ml_hadoop_experiment_spark.plans.prefix import exact_group_percentiles
 
     li = _t(spark, sf_dir, "lineitem")
     num_bins = 10
@@ -612,7 +568,7 @@ def q_cms_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary forces real collisions, so the gate exercises the
     over-count path (n_cms >= n_exact row-for-row), not a trivially
     collision-free sketch."""
-    from ml_hadoop_experiment_spark.operators.cms import cms_topk_audit
+    from ml_hadoop_experiment_spark.operators.sketches import cms_topk_audit
 
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
@@ -622,7 +578,7 @@ def q_cms_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_cms_audit() -> str:
-    from ml_hadoop_experiment_spark.operators.cms import cms_topk_audit_sql
+    from ml_hadoop_experiment_spark.operators.sketches import cms_topk_audit_sql
 
     return cms_topk_audit_sql(
         "(SELECT unnest(regexp_split_to_array(trim(lower(text)), '\\s+'))"

@@ -1,61 +1,27 @@
 """Structured Streaming drains (availableNow stateful queries).
 
-Split verbatim from the single-file queries.py (round 11) so the
-per-domain modules stay small; QUERIES / ORACLE_SQL in the package
-__init__ are the only public surface. Block order within this module
-preserves the original file order (two-stage SQL template/finalize
-assignments depend on it).
+Each ``q_<name>`` defined here is registered as the query ``<name>``,
+with this module's ``SQL_<NAME>`` as its DuckDB oracle (see the
+package ``__init__``).
 """
 
 from __future__ import annotations
-import pandas as pd
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from ml_hadoop_experiment_spark.functions.hashing import (
-    portable_unit_hash_sql,
-)
-from ml_hadoop_experiment_spark.operators.inference import with_inference_column
-from ml_hadoop_experiment_spark.operators.sampling import sample_with_predicate
-from ml_hadoop_experiment_spark.operators.vocabulary import vocabulary_dataframe
-# --------------------------------------------------------------------------
-# A4/A5: bootstrap metric evaluation (scalable Poisson form; the exact
-# multinomial port is operators/bootstrap.evaluate_bootstrap, unit-tested).
-# --------------------------------------------------------------------------
 
-from ml_hadoop_experiment_spark.operators.bootstrap import (
-    poisson_bootstrap_metrics,
-    poisson_bootstrap_metrics_sql,
+from ml_hadoop_experiment_spark.queries._shared import (
+    _drained_state_partitions,
+    _ensure_confs,
+    _normalize_event_time,
+    _t,
 )
-# ==========================================================================
-# Extension queries (BASELINE.json north-star): text analysis, dedup,
-# similarity search, multimodal plumbing.
-# ==========================================================================
-
-from ml_hadoop_experiment_spark.functions import text as TX
-from ml_hadoop_experiment_spark.operators.dedup import (
-    dedup_exact,
-    minhash_dedup_pairs,
-    minhash_signatures,
-    simhash,
-    simhash_sql,
-    tokens_frame,
+from ml_hadoop_experiment_spark.queries.dedup import SQL_SIMHASH_INCR
+from ml_hadoop_experiment_spark.queries.reference import (
+    SQL_UDF_LINEAR_SCORE,
+    _LinearScorer,
 )
-from ml_hadoop_experiment_spark.operators.multimodal import (
-    extract_audio_features,
-    extract_image_features,
-)
-from ml_hadoop_experiment_spark.operators.similarity import (
-    cosine_near_dup_pairs,
-    cosine_topk,
-    lsh_bucket_sql,
-    lsh_bucketed,
-)
-from ml_hadoop_experiment_spark.queries._shared import _drained_state_partitions, _ensure_confs, _normalize_event_time, _t  # noqa: E501
-from ml_hadoop_experiment_spark.queries.reference import SQL_UDF_LINEAR_SCORE, _LinearScorer  # noqa: E501
-from ml_hadoop_experiment_spark.queries.stats import SQL_PSI_DRIFT  # noqa: E501
-from ml_hadoop_experiment_spark.queries.dedup import SQL_SIMHASH_INCR  # noqa: E501
-
-
+from ml_hadoop_experiment_spark.queries.stats import SQL_PSI_DRIFT
 
 
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -384,7 +350,6 @@ r AS (
 )
 SELECT event_type, user_id, n_occurrences FROM r WHERE rn <= 5
 """
-
 
 
 def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -1,58 +1,17 @@
 """Tokenizer training and application queries (BPE, unigram-LM).
 
-Split verbatim from the single-file queries.py (round 11) so the
-per-domain modules stay small; QUERIES / ORACLE_SQL in the package
-__init__ are the only public surface. Block order within this module
-preserves the original file order (two-stage SQL template/finalize
-assignments depend on it).
+Each ``q_<name>`` defined here is registered as the query ``<name>``,
+with this module's ``SQL_<NAME>`` as its DuckDB oracle (see the
+package ``__init__``).
 """
 
 from __future__ import annotations
-import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from ml_hadoop_experiment_spark.functions.hashing import (
-    portable_unit_hash_sql,
-)
-from ml_hadoop_experiment_spark.operators.inference import with_inference_column
-from ml_hadoop_experiment_spark.operators.sampling import sample_with_predicate
+
 from ml_hadoop_experiment_spark.operators.vocabulary import vocabulary_dataframe
-# --------------------------------------------------------------------------
-# A4/A5: bootstrap metric evaluation (scalable Poisson form; the exact
-# multinomial port is operators/bootstrap.evaluate_bootstrap, unit-tested).
-# --------------------------------------------------------------------------
-
-from ml_hadoop_experiment_spark.operators.bootstrap import (
-    poisson_bootstrap_metrics,
-    poisson_bootstrap_metrics_sql,
-)
-# ==========================================================================
-# Extension queries (BASELINE.json north-star): text analysis, dedup,
-# similarity search, multimodal plumbing.
-# ==========================================================================
-
-from ml_hadoop_experiment_spark.functions import text as TX
-from ml_hadoop_experiment_spark.operators.dedup import (
-    dedup_exact,
-    minhash_dedup_pairs,
-    minhash_signatures,
-    simhash,
-    simhash_sql,
-    tokens_frame,
-)
-from ml_hadoop_experiment_spark.operators.multimodal import (
-    extract_audio_features,
-    extract_image_features,
-)
-from ml_hadoop_experiment_spark.operators.similarity import (
-    cosine_near_dup_pairs,
-    cosine_topk,
-    lsh_bucket_sql,
-    lsh_bucketed,
-)
-from ml_hadoop_experiment_spark.queries._shared import _materialize_ctes, _t  # noqa: E501
-
-
+from ml_hadoop_experiment_spark.queries._shared import _materialize_ctes, _t
 
 
 def q_tokens_to_ids(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -21,7 +21,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ml_hadoop_experiment_spark.schema.feature_spec import (
-    DTYPES,
     FeatureSpecs,
     FixedLenFeature,
     VarLenFeature,

@@ -25,7 +25,7 @@ tests/tensorflow/test_dataframe_to_tf_helper.py:11-114):
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any, Dict, Optional, Tuple, Union
 
 from pyspark.sql import DataFrame

@@ -39,11 +39,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ml_hadoop_experiment_spark.schema.feature_spec import (
-    FeatureSpecs,
-    FixedLenFeature,
-    VarLenFeature,
-)
+from ml_hadoop_experiment_spark.schema.feature_spec import FeatureSpecs, FixedLenFeature
 
 # --------------------------------------------------------------------------
 # CRC32C (Castagnoli), table-driven; TFRecord masks it.

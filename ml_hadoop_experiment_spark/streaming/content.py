@@ -4,10 +4,10 @@ The steady-state production shape of content dedup: the corpus SimHash
 index (``operators/simhash_index.build_simhash_index`` — fingerprint +
 pigeonhole block rows, pinned once per corpus rotation) is STATIC; each
 streaming micro-batch of new documents is fingerprinted in-flight (the
-r14 Arrow-vectorized SimHash projection runs on a streaming DataFrame
-unchanged — and, unlike the pre-r14 ~1.5k-node codegen expression,
-is not re-Janino-compiled per micro-batch: measured 15.6 -> 2.6 s on
-the isolated sf0.1 drain) and equi-joined against the pinned blocks — a
+Arrow SimHash projection, ``operators/dedup.simhash``, runs on a
+streaming DataFrame unchanged — and, unlike the older ~1.5k-node codegen
+expression, is not re-Janino-compiled per micro-batch: measured 15.6 ->
+2.6 s on the isolated sf0.1 drain) and equi-joined against the pinned blocks — a
 stream-static join, stateless on the stream side except for the
 candidate de-duplication. Recall stays EXACT at the index's declared
 Hamming radius (the pigeonhole guarantee is per-pair, independent of
@@ -31,8 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import simhash_block_bounds
-from ..operators.simhash_fp import simhash  # r14: Arrow-vectorized fingerprint
+from ..operators.dedup import simhash, simhash_block_bounds
 from ..operators.simhash_index import SimHashCorpusIndex
 
 
@@ -50,7 +49,7 @@ def stream_simhash_against_index(
     batch operator (the drained stream is oracle-checked against the
     SAME SQL as ``simhash_incr``).
 
-    Per-batch cost: the batch's fingerprint scan (codegen expression)
+    Per-batch cost: the batch's fingerprint scan (one Arrow projection)
     plus the segment-keyed stream-static join against the pinned block
     frame. The stream-side state is the ``dropDuplicates`` key set over
     emitted candidate pairs — proportional to matches, not corpus.

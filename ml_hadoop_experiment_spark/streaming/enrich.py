@@ -2,10 +2,7 @@
 
 Extension beyond the reference (which has no streaming): the canonical
 streaming feature / dimension lookup — each micro-batch of a stream
-joined to a bounded static table. Lives in its own module (not
-``joins.py``) so the stream-stream interval join's import closure — and
-therefore its correctness-rotation fingerprint — is independent of this
-operator.
+joined to a bounded static table.
 """
 
 from __future__ import annotations

@@ -90,8 +90,6 @@ def stateful_priority_sample(
         pdf_iter: Iterator[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
-        import numpy as np
-
         if state.exists:
             ids, pris, seq = state.get
             cur = pd.DataFrame(

@@ -23,7 +23,7 @@ bounded key spaces like content digests within a retention window).
 
 from __future__ import annotations
 
-from typing import Any, Iterator, List, Sequence, Tuple
+from typing import Any, Iterator, Sequence, Tuple
 
 import pandas as pd
 from pyspark.sql import DataFrame

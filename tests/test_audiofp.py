@@ -8,7 +8,6 @@ declared radius — the phash test discipline on the audio modality.
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from ml_hadoop_experiment_spark.operators.audiofp import (
     audio_near_dup_pairs,
@@ -58,7 +57,6 @@ class TestFingerprint:
 
 
 class TestNearDup:
-    @pytest.mark.nightly
     def test_perturbed_copy_within_radius_unrelated_not(self, spark):
         rng = np.random.RandomState(11)
         base = rng.randint(-2000, 2000, 256).astype(np.int64)

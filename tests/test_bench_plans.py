@@ -18,7 +18,7 @@ import pytest
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import bench  # noqa: E402  (repo-root module)
-from ml_hadoop_experiment_spark.queries import ORACLE_SQL, QUERIES  # noqa: E402
+from ml_hadoop_experiment_spark.queries import QUERIES  # noqa: E402
 
 SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 
@@ -46,9 +46,3 @@ def test_extra_bench_runs_at_smoke_scale(spark, name, monkeypatch):
     monkeypatch.setattr(bench, "SF_DIR", SF_SMOKE)
     bench.EXTRA_BENCHES[name](spark)
 
-
-def test_every_declared_query_has_oracle_or_waiver():
-    from ml_hadoop_experiment_spark.queries import NO_ORACLE
-
-    for name in QUERIES:
-        assert name in ORACLE_SQL or name in NO_ORACLE, name

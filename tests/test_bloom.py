@@ -7,8 +7,6 @@ passthrough and the exact-verify anti-join, never change the result.
 
 from __future__ import annotations
 
-import pytest
-
 import numpy as np
 from pyspark.sql import functions as F
 
@@ -93,7 +91,6 @@ class TestDedupAgainstBloom:
         )
         assert got == expected
 
-    @pytest.mark.nightly
     def test_prebuilt_bloom_reuse(self, spark):
         batch, ref = self._frames(spark)
         flt = build_digest_bloom(ref, ["text"])

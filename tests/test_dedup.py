@@ -553,7 +553,6 @@ class TestNearDupAgainst:
 
 
 class TestNearDupCorpusIndex:
-    @pytest.mark.nightly
     def test_index_path_equals_from_scratch(self, spark):
         """build_corpus_index + near_dup_against_index returns exactly
         the from-scratch near_dup_against result (same LSH params), for
@@ -617,7 +616,6 @@ class TestNearDupCorpusIndex:
 
 
 class TestSimhashAgainst:
-    @pytest.mark.nightly
     def test_matches_full_pipeline_cross_pairs(self, spark):
         """Incremental result == the full self-join restricted to cross
         pairs — EXACT, not probabilistic (pigeonhole recall)."""
@@ -716,7 +714,6 @@ class TestKeepBestPerCluster:
         with pytest.raises(ValueError, match="cluster"):
             keep_best_per_cluster(df, pairs, "doc_id", "score")
 
-    @pytest.mark.nightly
     def test_auto_bits_guard_preserves_retention_on_stable_clusters(
         self, spark
     ):

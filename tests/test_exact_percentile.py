@@ -1,4 +1,4 @@
-"""Bit-exactness of plans/percentiles.exact_group_percentiles vs the builtin
+"""Bit-exactness of plans/prefix.exact_group_percentiles vs the builtin
 ``percentile`` aggregate (the r13 optimization that removes the builtin's
 single-reducer OpenHashMap merge — OPTIMIZATION_r13.md "Exact-percentile
 family").
@@ -17,7 +17,7 @@ import struct
 import pytest
 from pyspark.sql import functions as F
 
-from ml_hadoop_experiment_spark.plans.percentiles import exact_group_percentiles
+from ml_hadoop_experiment_spark.plans.prefix import exact_group_percentiles
 
 FRACS = [0.0, 0.05, 1.0 / 3.0, 0.5, 0.95, 1.0]
 

@@ -56,7 +56,7 @@ def test_event_type_vocabulary_covers_user_similarity():
     on BOTH engines (still hash-equal, but meaningless). Catch it here."""
     import duckdb
 
-    from ml_hadoop_experiment_spark.queries import _EVENT_TYPES
+    from ml_hadoop_experiment_spark.queries._shared import _EVENT_TYPES
 
     sf = SF_DIRS[0]
     got = {
@@ -67,7 +67,7 @@ def test_event_type_vocabulary_covers_user_similarity():
     }
     assert got <= set(_EVENT_TYPES), (
         f"fixture event types {got - set(_EVENT_TYPES)} missing from "
-        "queries._EVENT_TYPES: extend the pivot vocabulary"
+        "queries._shared._EVENT_TYPES: extend the pivot vocabulary"
     )
 
 

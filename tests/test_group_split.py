@@ -3,7 +3,6 @@ determinism, and the audit's census on a deliberately leaky split."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 
@@ -14,7 +13,6 @@ def _doc_fixture(spark):
 
 
 class TestLeakageSafeSplit:
-    @pytest.mark.nightly
     def test_no_near_dup_pair_straddles_any_boundary(self, spark):
         from ml_hadoop_experiment_spark.operators.dedup import (
             simhash_near_dup_pairs,

@@ -55,11 +55,8 @@ def test_fan_out_scan_only_placement_contract():
     prefix.py:270-295). The engine's placement CONTRACT is therefore:
     fan_out is called ONLY immediately after a parquet scan (before any
     shuffle), where the probe reads leaf-scan partitioning and triggers
-    nothing. The in-code fix would re-fingerprint every declared query
-    (queries/_shared.py::_t imports fan_out, so plans/optimize.py is in all 140
-    import closures — a 50-slot window cannot re-verify 140 queries),
-    so the contract is pinned HERE, mechanically: every call site of
-    fan_out inside the engine package must be _t's scan-adjacent one.
+    nothing. The contract is pinned HERE, mechanically: every call site
+    of fan_out inside the engine package must be _t's scan-adjacent one.
     A new call site fails this test until its placement is audited and
     listed below."""
     import re
@@ -82,7 +79,7 @@ def test_fan_out_scan_only_placement_contract():
         ("queries/_shared.py", _t_fan_out_line())
     ], call_sites
     # and that one site sits in _t, directly after the parquet scan
-    from ml_hadoop_experiment_spark import queries as q
+    from ml_hadoop_experiment_spark.queries import _shared as q
     import inspect
 
     src = inspect.getsource(q._t)
@@ -97,7 +94,7 @@ def test_fan_out_scan_only_placement_contract():
 def _t_fan_out_line() -> int:
     import inspect
 
-    from ml_hadoop_experiment_spark import queries as q
+    from ml_hadoop_experiment_spark.queries import _shared as q
 
     src, start = inspect.getsourcelines(q._t)
     for i, line in enumerate(src):

@@ -16,13 +16,7 @@ import pytest
 
 from ml_hadoop_experiment_spark.common.cache_registry import release_pinned
 from ml_hadoop_experiment_spark.plans.prefix import release_prefix_caches
-from ml_hadoop_experiment_spark.queries import (
-    NO_ORACLE,
-    ORACLE_SQL,
-    PENDING_ORACLE_SQL,
-    PENDING_QUERIES,
-    QUERIES,
-)
+from ml_hadoop_experiment_spark.queries import ORACLE_SQL, QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_ORACLE_DIR", "/root/testdata/sf0.001")
 
@@ -75,16 +69,10 @@ def _assert_frames_match(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFr
                 assert a == b, f"{name}.{col}[{i}]: {a!r} != {b!r}"
 
 
-# staged queries (window at capacity — see PENDING_QUERIES in queries/__init__.py)
-# are gated here exactly like declared ones
-_ALL_QUERIES = {**QUERIES, **PENDING_QUERIES}
-_ALL_ORACLES = {**ORACLE_SQL, **PENDING_ORACLE_SQL}
-
-
-@pytest.mark.parametrize("name", sorted(set(_ALL_QUERIES) - NO_ORACLE))
+@pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
-    spark_pdf = _ALL_QUERIES[name](spark, SF_DIR).toPandas()
-    duck_pdf = duck.execute(_ALL_ORACLES[name]).df()
+    spark_pdf = QUERIES[name](spark, SF_DIR).toPandas()
+    duck_pdf = duck.execute(ORACLE_SQL[name]).df()
     # prefix-sum queries pin one persisted copy of their ranged input;
     # the sweep reclaims it between queries (the result is materialized).
     release_prefix_caches()
@@ -92,19 +80,5 @@ def test_query_matches_oracle(spark, duck, name):
     _assert_frames_match(name, spark_pdf, duck_pdf)
 
 
-# NO_ORACLE is EMPTY right now — every declared query has a DuckDB twin —
-# so pytest reports this parametrization as the suite's single SKIP
-# ("got empty parameter set"). That skip is the desired steady state: it
-# only turns into real tests if a future non-SQL-expressible query joins
-# NO_ORACLE, and the guard below keeps the two sets partitioning QUERIES.
-@pytest.mark.parametrize("name", sorted(NO_ORACLE))
-def test_no_oracle_query_runs(spark, name):
-    """Rows-only check for the declared non-SQL-expressible queries —
-    exactly what the driver records for them."""
-    df = QUERIES[name](spark, SF_DIR)
-    assert df.count() >= 0
-    assert df.schema.fields
-
-
 def test_every_query_has_oracle():
-    assert set(QUERIES) == set(ORACLE_SQL) | NO_ORACLE
+    assert set(QUERIES) == set(ORACLE_SQL)

@@ -505,7 +505,7 @@ class TestNeymanSample:
         return spark.createDataFrame(rows, "id bigint, grp string, val double")
 
     def test_allocation_follows_n_sigma_and_caps(self, spark):
-        from ml_hadoop_experiment_spark.operators.stratified import neyman_sample
+        from ml_hadoop_experiment_spark.operators.sampling import neyman_sample
 
         out = neyman_sample(
             self._df(spark), "grp", "val", F.col("id"), total_n=50
@@ -528,14 +528,14 @@ class TestNeymanSample:
         assert sum(alloc.values()) <= 50
 
     def test_budget_exact_when_uncapped(self, spark):
-        from ml_hadoop_experiment_spark.operators.stratified import neyman_sample
+        from ml_hadoop_experiment_spark.operators.sampling import neyman_sample
 
         df = self._df(spark).where("grp != 'C'")
         out = neyman_sample(df, "grp", "val", F.col("id"), total_n=37)
         assert out.count() == 37  # largest-remainder hits the budget exactly
 
     def test_constant_value_falls_back_to_proportional(self, spark):
-        from ml_hadoop_experiment_spark.operators.stratified import neyman_sample
+        from ml_hadoop_experiment_spark.operators.sampling import neyman_sample
 
         rows = [(i, "X" if i < 90 else "Y", 5.0) for i in range(120)]
         df = spark.createDataFrame(rows, "id bigint, grp string, val double")
@@ -547,7 +547,7 @@ class TestNeymanSample:
         assert alloc == {"X": 9, "Y": 3}  # 90:30 -> 9:3
 
     def test_deterministic_across_partitionings(self, spark):
-        from ml_hadoop_experiment_spark.operators.stratified import neyman_sample
+        from ml_hadoop_experiment_spark.operators.sampling import neyman_sample
 
         df = self._df(spark)
         a = set(
@@ -569,7 +569,7 @@ class TestNeymanSample:
     def test_rejects_nonpositive_budget(self, spark):
         import pytest as _pytest
 
-        from ml_hadoop_experiment_spark.operators.stratified import neyman_sample
+        from ml_hadoop_experiment_spark.operators.sampling import neyman_sample
 
         with _pytest.raises(ValueError, match="total_n must be positive"):
             neyman_sample(self._df(spark), "grp", "val", F.col("id"), 0)

@@ -183,7 +183,6 @@ class TestTopkSimilarPairs:
         out = topk_similar_pairs(df, "doc_id", "text", k=10, floor=0.3).collect()
         assert len(out) == 1  # only one pair exists above the floor
 
-    @pytest.mark.nightly
     def test_probe_and_fallback_agree_with_direct_floor(self, spark, corpus):
         """The adaptive probe must be invisible in the result: whether
         the probe satisfies k, falls back, or is disabled, the answer

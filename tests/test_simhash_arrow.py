@@ -1,27 +1,50 @@
-"""r14: the SimHash fingerprint moved from a ~1.5k-node codegen
-expression (32 HOF filter scans per fingerprint) to one Arrow
-``pandas_udf`` projection (guide §4.2/§7.3). These tests pin the ONLY
-thing that rewrite is allowed to change — evaluation strategy — by
-checking bit-identity against the retained expression form on the real
-fixture corpus and on crafted whitespace/empty/null edge cases.
+"""Bit-identity of the Arrow SimHash kernel (``operators.dedup.simhash``)
+against the retired expression form, kept below as the reference.
 
-Tokenization deliberately stays in the JVM (``split(trim(lower(col)),
-'\\s+')`` feeds the UDF), so split/trim/lower semantics cannot drift:
-only the md5/sha256 + vote kernel moved to numpy. The Arrow form lives
-in its OWN module (operators/simhash_fp.py) so operators/dedup.py —
-whose module fingerprint covers the whole MinHash family — stays
-byte-identical to its r13-verified state; ``dedup.simhash`` IS the
-retained expression form and the yardstick here."""
+The expression form computed each fingerprint bit as one
+higher-order-function filter scan over the md5/sha256 hex digests (a
+~1.5k-node Catalyst tree at 32 bits); ``dedup.simhash_sql``, the DuckDB
+twin, still spells the same nibble compares. The Arrow kernel may only
+change the evaluation strategy, so both forms must agree bit-for-bit on
+the real fixture corpus and on crafted whitespace/empty/NULL edge cases.
+
+Tokenization stays in the JVM on both sides (``split(trim(lower(col)),
+'\\s+')``), so split/trim/lower semantics cannot drift: only the
+md5/sha256 + vote kernel runs in numpy."""
 
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from ml_hadoop_experiment_spark.operators.dedup import (
-    simhash as simhash_codegen_expr,
-)
-from ml_hadoop_experiment_spark.operators.simhash_fp import simhash
+from ml_hadoop_experiment_spark.operators.dedup import simhash
+
+
+def simhash_expr_reference(col: Column, bits: int = 16) -> Column:
+    """The retired expression form: bit b is set when more than half of
+    the tokens have hex digit b of their digest >= '8' (md5 up to 32
+    bits, sha2-256 above)."""
+    assert 1 <= bits <= 63
+    tokens = F.split(F.trim(F.lower(col)), r"\s+")
+    digest = (lambda t: F.md5(t)) if bits <= 32 else (lambda t: F.sha2(t, 256))
+    hashes = F.transform(tokens, digest)
+    n = F.size(tokens)
+    fp = F.lit(0).cast("bigint")
+
+    # the loop variable is captured via a factory, not a lambda default:
+    # PySpark reads lambda arity, and a 2-arg lambda is treated as an
+    # (element, index) function
+    def _bit_predicate(b: int):
+        # '8'=56 < '9' < 'a'-'f' — the only chars above are the set-bit ones
+        return lambda h: F.ascii(F.substring(h, b + 1, 1)) >= 56
+
+    for b in range(bits):
+        set_count = F.size(F.filter(hashes, _bit_predicate(b)))
+        bit_on = (set_count * 2) > n  # strict: vote sum > 0
+        fp = fp + F.when(bit_on, F.lit(1 << b).cast("bigint")).otherwise(F.lit(0))
+    return fp
+
 
 #: whitespace-shape edge cases: F.trim strips 0x20 only, Java's \s is
 #: [ \t\n\x0B\f\r], and split(limit=-1) KEEPS leading/trailing empty
@@ -52,7 +75,7 @@ class TestSimhashArrowEquivalence:
         docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
         both = docs.select(
             simhash(F.col("text"), bits).alias("arrow"),
-            simhash_codegen_expr(F.col("text"), bits).alias("expr"),
+            simhash_expr_reference(F.col("text"), bits).alias("expr"),
         )
         bad = both.where(F.col("arrow") != F.col("expr")).count()
         assert bad == 0
@@ -67,7 +90,7 @@ class TestSimhashArrowEquivalence:
         rows = df.select(
             "text",
             simhash(F.col("text"), bits).alias("arrow"),
-            simhash_codegen_expr(F.col("text"), bits).alias("expr"),
+            simhash_expr_reference(F.col("text"), bits).alias("expr"),
         ).collect()
         for r in rows:
             assert r["arrow"] == r["expr"], (bits, r["text"])

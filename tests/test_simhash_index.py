@@ -21,7 +21,6 @@ def _rows(df):
 
 
 class TestSimhashIndexEquivalence:
-    @pytest.mark.nightly
     def test_index_path_equals_per_call_path(self, spark, docs):
         from ml_hadoop_experiment_spark.operators.dedup import simhash_against
         from ml_hadoop_experiment_spark.operators.simhash_index import (

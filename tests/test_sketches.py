@@ -71,7 +71,7 @@ class TestCountMin:
     def test_invariant_and_exactness_under_collisions(self, spark):
         from pyspark.sql import functions as F
 
-        from ml_hadoop_experiment_spark.operators.cms import cms_topk_audit
+        from ml_hadoop_experiment_spark.operators.sketches import cms_topk_audit
 
         # zipf-ish stream of 20 keys into width=4: heavy collisions
         rows = [(f"k{i % 20}",) for i in range(400)] + [("k0",)] * 100
@@ -88,7 +88,7 @@ class TestCountMin:
         assert any(r["n_cms"] > r["n_exact"] for r in out)
 
     def test_wide_sketch_is_exact(self, spark):
-        from ml_hadoop_experiment_spark.operators.cms import cms_topk_audit
+        from ml_hadoop_experiment_spark.operators.sketches import cms_topk_audit
 
         rows = [("a",)] * 5 + [("b",)] * 3 + [("c",)] * 2
         df = spark.createDataFrame(rows, "tok string")
@@ -100,7 +100,7 @@ class TestCountMin:
         assert out == {"a": (5, 5), "b": (3, 3), "c": (2, 2)}
 
     def test_counter_table_bounded(self, spark):
-        from ml_hadoop_experiment_spark.operators.cms import cms_counters
+        from ml_hadoop_experiment_spark.operators.sketches import cms_counters
 
         rows = [(f"k{i}",) for i in range(500)]
         df = spark.createDataFrame(rows, "tok string")

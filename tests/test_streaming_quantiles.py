@@ -205,7 +205,6 @@ class TestStatefulHistogram:
         }
         assert _final_counts(sunk) == want
 
-    @pytest.mark.nightly
     def test_multi_batch_merge_equals_single_batch(self, spark, tmp_path):
         """Three files fed one per micro-batch must finish with the
         same max-merged counts as one big batch — the additive-merge

@@ -90,7 +90,6 @@ class TestStreamingPrioritySample:
         }
         assert got == want
 
-    @pytest.mark.nightly
     def test_multi_batch_equals_single_batch(self, spark, tmp_path):
         """Bottom-k is mergeable: the sample is a pure function of the
         id set, so batch boundaries cannot change it."""

@@ -53,7 +53,6 @@ class TestStreamingHllDistinct:
             regs[j] = max(regs.get(j, 0), rho)
         assert batch == set(regs.items())
 
-    @pytest.mark.nightly
     def test_stream_equals_batch_estimate(self, spark):
         from ml_hadoop_experiment_spark.operators.hll import (
             estimate_from_register_rows,
@@ -94,7 +93,6 @@ class TestStreamingHllDistinct:
             want[et] = est
         assert streamed == want
 
-    @pytest.mark.nightly
     def test_multi_batch_max_merge_equals_single_batch(self, spark, tmp_path):
         """Three parquet files fed one per micro-batch must yield the
         same final registers as the whole table in one batch — the
@@ -216,7 +214,6 @@ class TestStreamingHeavyHitters:
         }
         assert got == exact
 
-    @pytest.mark.nightly
     def test_multi_batch_final_summary_equals_single_batch(
         self, spark, tmp_path
     ):
@@ -255,7 +252,6 @@ class TestStreamingHeavyHitters:
             results[files_per_trigger] = _final_summary(sunk)
         assert results[1] == results[1000]
 
-    @pytest.mark.nightly
     def test_truncation_bounds_state_and_keeps_heavy_item(self, spark):
         """capacity below cardinality: summary stays <= capacity rows
         and the genuinely heavy value survives with the Agarwal-bounded

@@ -1,5 +1,5 @@
 """URL canonicalization + URL-level dedup (functions/url.py,
-operators/urldedup.dedup_by_url): frozen-spec goldens, Spark<->DuckDB
+operators/dedup.dedup_by_url): frozen-spec goldens, Spark<->DuckDB
 parity on adversarial inputs, and the keep-first dedup contract."""
 
 from __future__ import annotations
@@ -122,7 +122,7 @@ class TestCanonicalizeUrl:
 
 class TestDedupByUrl:
     def test_keeps_lowest_id_per_canonical(self, spark):
-        from ml_hadoop_experiment_spark.operators.urldedup import dedup_by_url
+        from ml_hadoop_experiment_spark.operators.dedup import dedup_by_url
 
         rows = [
             (1, "http://Example.com/a?b=2&a=1"),
@@ -144,7 +144,7 @@ class TestDedupByUrl:
         ]
 
     def test_map_only_before_single_digest_shuffle(self, spark):
-        from ml_hadoop_experiment_spark.operators.urldedup import dedup_by_url
+        from ml_hadoop_experiment_spark.operators.dedup import dedup_by_url
 
         df = spark.createDataFrame(
             [(1, "http://a.com/")], "id long, url string"
