@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -23,20 +25,58 @@ _RUNTIME_CONFS = {
 }
 
 
+# string literals and comments: blanked out before the CTE scan
+_SQL_OPAQUE = re.compile(r"'(?:[^']|'')*'|--[^\n]*|/\*.*?\*/", re.S)
+_WITH = re.compile(r"\bWITH\s+(?:RECURSIVE\s+)?", re.I)
+# name [(cols)] AS [[NOT] MATERIALIZED] (
+_CTE_HEAD = re.compile(
+    r"(?P<head>[A-Za-z_]\w*(?P<cols>\s*\([^()]*\))?\s+AS)\s*"
+    r"(?P<hint>(?:NOT\s+)?MATERIALIZED\s*)?\(",
+    re.I,
+)
+_CTE_COMMA = re.compile(r"\s*,\s*")
+
+
+def _close_paren(sql: str, i: int) -> int:
+    depth = 0
+    for j in range(i, len(sql)):
+        depth += {"(": 1, ")": -1}.get(sql[j], 0)
+        if depth == 0:
+            return j
+    raise ValueError(f"unbalanced parenthesis at offset {i}")
+
+
 def _materialize_ctes(sql: str) -> str:
-    """Rewrite every non-recursive CTE head ``name AS (`` to
+    """Rewrite every CTE head ``name AS (`` to
     ``name AS MATERIALIZED (`` — DuckDB inlines plain CTEs PER
     REFERENCE, so an oracle whose fingerprint/codebook CTE is read by
     several union arms or join sides re-evaluates it each time
     (measured r14: dup_clusters' closure 36.6 -> 1.1 s,
     pq_residual_index 28.6 -> 0.3 s at sf0.001, values identical —
-    checked row-for-row for every converted oracle). Recursive heads
-    (``name(cols) AS (``) don't match the pattern and stay inlined, as
-    DuckDB requires. Results are unchanged by construction — this is
-    an evaluation hint, part of the oracle TEXT only."""
-    import re
+    checked row-for-row for every converted oracle). Results are
+    unchanged by construction — this is an evaluation hint, part of the
+    oracle TEXT only.
 
-    return re.sub(r"(\b[a-zA-Z_]\w*\s+AS)\s*\(", r"\1 MATERIALIZED (", sql)
+    Only CTE heads are touched: the scan walks each ``WITH`` list head
+    by head, skipping every body by its parentheses, so a named window
+    (``WINDOW w AS (``) and text inside string literals or comments are
+    left alone. Heads with a column list (``name(cols) AS (``, the
+    recursive form) and heads that already carry a hint stay as they
+    are."""
+    masked = _SQL_OPAQUE.sub(lambda m: " " * len(m.group()), sql)
+    heads = []
+    for w in _WITH.finditer(masked):
+        pos = w.end()
+        while h := _CTE_HEAD.match(masked, pos):
+            if not (h["cols"] or h["hint"]):
+                heads.append((h.end("head"), h.end()))
+            pos = _close_paren(masked, h.end() - 1) + 1
+            if not (c := _CTE_COMMA.match(masked, pos)):
+                break
+            pos = c.end()
+    for start, end in reversed(heads):
+        sql = sql[:start] + " MATERIALIZED (" + sql[end:]
+    return sql
 
 
 def _ensure_confs(spark: SparkSession) -> None:
@@ -50,39 +90,6 @@ def _ensure_confs(spark: SparkSession) -> None:
 #: fixture event-type domain (used by pivot/similarity/salted-join
 #: queries and their VALUES-based oracle dims)
 _EVENT_TYPES = ("click", "error", "purchase", "signup", "view")
-
-
-#: state-store partition cap for the stateful streaming drains. One state
-#: store is instantiated per shuffle partition (per side for a
-#: stream-stream join) and AQE cannot resize stateful plans, so the
-#: partition count must be sized to the workload BEFORE the first
-#: checkpoint — the streaming analog of AQE's batch coalescing. Measured
-#: on the sf0.1 drains (local[32], min of 2, 2026-08-14): interval join
-#: 5.8 s -> 2.2 s (round 4), rollup 1.08 -> 0.71 s, sessionize
-#: 1.22 -> 0.89 s at cap 8 vs the 32-partition session default. A
-#: production deployment sets this to its key-cardinality / throughput
-#: target instead.
-_STREAM_STATE_PARTITIONS = 8
-
-
-def _drained_state_partitions(spark: SparkSession):
-    """Context manager: cap shuffle (= state-store) partitions for a
-    stateful streaming drain, restoring the session value after."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions",
-            str(min(int(prev), _STREAM_STATE_PARTITIONS)),
-        )
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return _cm()
 
 
 def _normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
@@ -128,4 +135,25 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         from ml_hadoop_experiment_spark.plans.optimize import fan_out
 
         df = fan_out(df)
+    return df
+
+
+def _stream_t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Stream a fixture table as micro-batches: ``_t`` for
+    ``readStream``. The schema comes from a batch read — never
+    hard-coded (round 2's frozen ``ts bigint`` schema silently coerced
+    the fixture's µs timestamps and collapsed every event into two
+    windows); the file source needs a directory, so a glob filter keeps
+    it to the one table. ``events.ts`` is normalized as in ``_t``.
+    Streams are not fanned out: ``fan_out`` probes the scan's partition
+    count, which a streaming frame cannot report."""
+    _ensure_confs(spark)
+    wire_schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    df = (
+        spark.readStream.schema(wire_schema)
+        .option("pathGlobFilter", f"{name}.parquet")
+        .parquet(sf_dir)
+    )
+    if name == "events":
+        df = _normalize_event_time(df)
     return df

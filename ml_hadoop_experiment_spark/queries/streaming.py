@@ -10,18 +10,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ml_hadoop_experiment_spark.queries._shared import (
-    _drained_state_partitions,
-    _ensure_confs,
-    _normalize_event_time,
-    _t,
-)
+from ml_hadoop_experiment_spark.queries._shared import _stream_t, _t
 from ml_hadoop_experiment_spark.queries.dedup import SQL_SIMHASH_INCR
 from ml_hadoop_experiment_spark.queries.reference import (
     SQL_UDF_LINEAR_SCORE,
     _LinearScorer,
 )
 from ml_hadoop_experiment_spark.queries.stats import SQL_PSI_DRIFT
+from ml_hadoop_experiment_spark.streaming.drain import drain
 
 
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -31,31 +27,10 @@ def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once. With unique fixture doc_ids the result set equals
     SELECT doc_id FROM documents — which makes a real streaming operator
     fully oracle-checkable."""
-    import uuid
-
     from ml_hadoop_experiment_spark.streaming.stateful import stateful_dedup
 
-    # schema from a batch read — never hard-coded (the round-2 lesson);
-    # the file source needs a directory, so glob-filter to the one table
-    wire_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
-    stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-        .select("doc_id")
-    )
-    out = stateful_dedup(stream, ["doc_id"])
-    sink = f"streaming_dedup_{uuid.uuid4().hex}"
-    with _drained_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(sink)
+    stream = _stream_t(spark, sf_dir, "documents").select("doc_id")
+    return drain(stateful_dedup(stream, ["doc_id"]))
 
 
 SQL_STREAMING_DEDUP = """
@@ -73,8 +48,6 @@ def q_streaming_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch sketch, so the streaming result equals a batch replay —
     and the DuckDB oracle replays that batch estimator over events,
     making a stateful streaming sketch fully oracle-checkable."""
-    import uuid
-
     from ml_hadoop_experiment_spark.operators.hll import (
         estimate_from_register_rows,
     )
@@ -82,26 +55,10 @@ def q_streaming_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_hll_distinct,
     )
 
-    wire_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_type", "user_id")
-    )
+    stream = _stream_t(spark, sf_dir, "events").select("event_type", "user_id")
     out = stateful_hll_distinct(stream, ["event_type"], "user_id", p=8)
-    sink = f"streaming_distinct_{uuid.uuid4().hex}"
-    with _drained_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
     regs = (
-        spark.table(sink)
+        drain(out)
         .groupBy("event_type", "register")
         .agg(F.max("M").alias("M"))
     )
@@ -135,8 +92,6 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin holding rank ceil(q*N)), so the streaming result equals a
     batch replay and the DuckDB oracle replays that batch chain over
     events."""
-    import uuid
-
     from ml_hadoop_experiment_spark.operators.histogram import (
         quantiles_from_histogram,
     )
@@ -144,28 +99,12 @@ def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_histogram,
     )
 
-    wire_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_type", "value")
-    )
+    stream = _stream_t(spark, sf_dir, "events").select("event_type", "value")
     out = stateful_histogram(
         stream, ["event_type"], "value", lo=0.0, hi=500.0, n_bins=1000
     )
-    sink = f"streaming_quantiles_{uuid.uuid4().hex}"
-    with _drained_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
     sketch = (
-        spark.table(sink)
+        drain(out)
         .groupBy("event_type", "bin")
         .agg(F.max("cnt").alias("cnt"))
     )
@@ -204,35 +143,15 @@ def q_streaming_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate superset and the result equals DuckDB's full exact
     aggregation; the truncation path is pytest-gated
     (tests/test_streaming_sketches.py)."""
-    import uuid
-
-    from pyspark.sql import Window
-
     from ml_hadoop_experiment_spark.streaming.sketches import (
         stateful_heavy_hitters,
     )
 
-    wire_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_type", "user_id")
-    )
+    stream = _stream_t(spark, sf_dir, "events").select("event_type", "user_id")
     out = stateful_heavy_hitters(
         stream, ["event_type"], "user_id", capacity=4096
     )
-    sink = f"streaming_hh_{uuid.uuid4().hex}"
-    with _drained_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    sunk = spark.table(sink)
+    sunk = drain(out)
     final = (
         sunk.withColumn(
             "__mx", F.max("seq").over(Window.partitionBy("event_type"))
@@ -271,35 +190,15 @@ def q_streaming_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT (event_type, user_id) by the same hash integers and takes
     the same 8 (the max-seq emission per key is the whole-stream
     sample, the MG convention)."""
-    import uuid
-
-    from pyspark.sql import Window
-
     from ml_hadoop_experiment_spark.streaming.sampling import (
         stateful_priority_sample,
     )
 
-    wire_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_type", "user_id")
-    )
+    stream = _stream_t(spark, sf_dir, "events").select("event_type", "user_id")
     out = stateful_priority_sample(
         stream, ["event_type"], "user_id", k=8, salt=7
     )
-    sink = f"streaming_sample_{uuid.uuid4().hex}"
-    with _drained_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    sunk = spark.table(sink)
+    sunk = drain(out)
     return (
         sunk.withColumn(
             "__mx", F.max("seq").over(Window.partitionBy("event_type"))
@@ -359,16 +258,10 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffles, no state store, no watermark). The canonical streaming
     feature-lookup; drained availableNow, the result set equals the
     batch join, making the streaming plan fully oracle-checkable."""
-    import uuid
-
     from ml_hadoop_experiment_spark.streaming.enrich import stream_static_enrich
 
-    wire_schema = spark.read.parquet(f"{sf_dir}/orders.parquet").schema
-    stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "orders.parquet")
-        .parquet(sf_dir)
-        .select("o_orderkey", "o_custkey", "o_totalprice")
+    stream = _stream_t(spark, sf_dir, "orders").select(
+        "o_orderkey", "o_custkey", "o_totalprice"
     )
     customer = _t(spark, sf_dir, "customer").select(
         F.col("c_custkey"), F.col("c_mktsegment")
@@ -376,16 +269,7 @@ def q_streaming_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream_static_enrich(
         stream, customer, stream["o_custkey"] == customer["c_custkey"]
     ).select("o_orderkey", "c_mktsegment", "o_totalprice")
-    sink = f"streaming_enrich_{uuid.uuid4().hex}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(sink)
+    return drain(out)
 
 
 SQL_STREAMING_ENRICH = """
@@ -401,42 +285,19 @@ def q_streaming_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     watermark admits all fixture rows, the result equals the batch hourly
     rollup — a real streaming window operator, fully oracle-checked.
 
-    The stream schema is taken from a batch read of the same file — never
-    hard-coded (round 2's frozen ``ts bigint`` schema silently coerced the
-    fixture's µs timestamps and collapsed every event into two windows) —
-    then ``ts`` normalizes to TIMESTAMP exactly like the batch loader.
-    Outputs report the window start as an epoch-seconds bigint (portable)."""
-    import uuid
-
+    ``_stream_t`` takes the schema from a batch read and normalizes ``ts``
+    exactly like the batch loader. Outputs report the window start as an
+    epoch-seconds bigint (portable)."""
     from ml_hadoop_experiment_spark.streaming.inference import (
         windowed_event_aggregates,
     )
 
-    _ensure_confs(spark)
-    wire_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = _normalize_event_time(
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _stream_t(spark, sf_dir, "events")
     out = windowed_event_aggregates(
         stream, ts_col="ts", key_col="event_type", value_col="value",
         window="1 hour", watermark="1 hour",
     )
-    sink = f"streaming_rollup_{uuid.uuid4().hex}"
-    # complete mode: a drained finite stream emits every window, including
-    # the final ones append mode would hold back waiting for a watermark
-    # advance that never comes after the last micro-batch
-    with _drained_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(sink).select(
+    return drain(out, "complete").select(
         F.unix_timestamp("window_start").alias("window_start_s"),
         "event_type",
         "n_events",
@@ -463,33 +324,15 @@ def q_streaming_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checked against the lag+running-sum batch formulation (boundary
     semantics verified identical: gap == threshold merges, > splits).
     Outputs epoch-µs session starts (portable; no timestamps)."""
-    import uuid
-
     from ml_hadoop_experiment_spark.streaming.inference import (
         session_window_aggregates,
     )
 
-    _ensure_confs(spark)
-    wire_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = _normalize_event_time(
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _stream_t(spark, sf_dir, "events")
     out = session_window_aggregates(
         stream, ts_col="ts", key_col="user_id", gap="30 minutes", watermark="1 hour"
     )
-    sink = f"streaming_sessionize_{uuid.uuid4().hex}"
-    with _drained_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(sink).select(
+    return drain(out, "complete").select(
         "user_id",
         F.unix_micros("session_start").alias("session_start_us"),
         "n_events",
@@ -523,17 +366,9 @@ def q_streaming_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     Streaming runs it per micro-batch) and drained to completion. Result
     equals the batch ``udf_linear_score``, so a real streaming-inference
     path is fully oracle-checked."""
-    import uuid
-
     from ml_hadoop_experiment_spark.streaming.inference import streaming_inference
 
-    _ensure_confs(spark)
-    wire_schema = spark.read.parquet(f"{sf_dir}/lineitem.parquet").schema
-    stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "lineitem.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _stream_t(spark, sf_dir, "lineitem")
     scored = streaming_inference(
         stream,
         _LinearScorer(),
@@ -543,16 +378,7 @@ def q_streaming_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch_size=4096,
         output_col="score",
     ).select("l_orderkey", "l_linenumber", "score")
-    sink = f"streaming_score_{uuid.uuid4().hex}"
-    q = (
-        scored.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(sink)
+    return drain(scored)
 
 
 SQL_STREAMING_SCORE = SQL_UDF_LINEAR_SCORE
@@ -567,34 +393,14 @@ def q_streaming_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     streamed result equals the batch replay bit-for-bit under any
     micro-batching — the DuckDB oracle replays the same quantization,
     integer sums, and fixed-order double finisher."""
-    import uuid
-
     from ml_hadoop_experiment_spark.streaming.moments import (
         moment_sums,
         moments_from_sums,
     )
 
-    wire_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-        .select("event_type", "value")
-    )
+    stream = _stream_t(spark, sf_dir, "events").select("event_type", "value")
     sums = moment_sums(stream, ["event_type"], "value", scale=100)
-    sink = f"streaming_moments_{uuid.uuid4().hex}"
-    with _drained_state_partitions(spark):
-        q = (
-            sums.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return moments_from_sums(
-        spark.table(sink), ["event_type"], scale=100
-    )
+    return moments_from_sums(drain(sums, "complete"), ["event_type"], scale=100)
 
 
 def _sql_streaming_moments() -> str:
@@ -617,8 +423,6 @@ def q_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     result contract to psi_drift, so the same DuckDB oracle gates it
     (the simhash_index precedent; the stream==batch sketch identity
     is pytest-pinned in test_streaming_quantiles)."""
-    import uuid
-
     from ml_hadoop_experiment_spark.operators.drift import psi_from_counts
     from ml_hadoop_experiment_spark.operators.histogram import (
         histogram_counts,
@@ -627,29 +431,16 @@ def q_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         stateful_histogram,
     )
 
-    wire_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
     stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
+        _stream_t(spark, sf_dir, "events")
         .where(F.col("event_type") == "purchase")
         .select("event_type", "value")
     )
     out = stateful_histogram(
         stream, ["event_type"], "value", lo=0.0, hi=500.0, n_bins=20
     )
-    sink = f"streaming_psi_{uuid.uuid4().hex}"
-    with _drained_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
     live = (
-        spark.table(sink)
+        drain(out)
         .groupBy("bin")
         .agg(F.max("cnt").alias("cnt"))
     )
@@ -665,54 +456,15 @@ def q_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
 SQL_STREAMING_PSI = SQL_PSI_DRIFT
 
 
-def _drained_join_state_partitions(spark: SparkSession, cap: int = 4):
-    """Stream-stream-JOIN variant of ``_shared._drained_state_partitions``:
-    same restore-after context manager, but the cap sizes per-operator
-    STATE-STORE COUNT rather than partitions. A stream-stream join
-    instantiates 4 stores per partition (keyToNumValues +
-    keyWithIndexToValue, per side) where dedup/aggregation run one, and
-    the drain's zero-row watermark-finalization batch pays a commit per
-    store: measured 1.8 s of addBatch for 0 rows at cap 8 (32 stores,
-    `recentProgress[].durationMs`, local[32] sf0.1). cap=4 holds the
-    same ~16-store budget a single-store drain has at 8: the drain fell
-    4.55 -> 2.70 s (min of 2 after warm) while single-store drains keep
-    the default (streaming_dedup REGRESSES 1.93 -> 2.78 below 8 — its
-    per-key Python work wants the parallelism). Production sizes this
-    by key cardinality / throughput, not a constant (BASELINE.md
-    "Round-14 receipts")."""
-    from contextlib import contextmanager
-
-    @contextmanager
-    def _cm():
-        prev = spark.conf.get("spark.sql.shuffle.partitions")
-        spark.conf.set(
-            "spark.sql.shuffle.partitions", str(min(int(prev), cap))
-        )
-        try:
-            yield
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev)
-
-    return _cm()
-
-
 def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream attribution join, drained availableNow: purchases
     within 30 minutes after a click by the same user. Both sides are
     state-store partitioned on user_id and watermarked so join state is
     bounded by the time window — the canonical streaming correlation
     shape the batch oracle mirrors with a plain interval join."""
-    import uuid
-
     from ml_hadoop_experiment_spark.streaming.joins import interval_join
 
-    _ensure_confs(spark)
-    wire_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    stream = _normalize_event_time(
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    stream = _stream_t(spark, sf_dir, "events")
     clicks = stream.where(F.col("event_type") == "click").select(
         "event_id", "ts", "user_id"
     )
@@ -731,20 +483,10 @@ def q_streaming_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("gap_us"),
         F.col("r_value").alias("purchase_value"),
     )
-    sink = f"streaming_ij_{uuid.uuid4().hex}"
     # state stores are per-partition PER JOIN SIDE here — 4 per
     # partition, so the join drain budgets STORES, not partitions
-    # (r14: see _drained_join_state_partitions)
-    with _drained_join_state_partitions(spark, cap=4):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(sink)
+    # (r14: see ``drain``)
+    return drain(out, max_state_partitions=4)
 
 
 SQL_STREAMING_INTERVAL_JOIN = """
@@ -774,8 +516,6 @@ def q_streaming_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     result equals the batch operator's and the oracle IS
     SQL_SIMHASH_INCR — a real streaming content-dedup pipeline,
     hash-gated."""
-    import uuid
-
     from ml_hadoop_experiment_spark.operators.simhash_index import (
         build_simhash_index,
     )
@@ -788,26 +528,12 @@ def q_streaming_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     index = build_simhash_index(
         corpus, "doc_id", "text", bits=32, max_hamming=3
     )
-    wire_schema = spark.read.parquet(f"{sf_dir}/documents.parquet").schema
     stream = (
-        spark.readStream.schema(wire_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        _stream_t(spark, sf_dir, "documents")
         .where(F.col("doc_id") % 10 == 0)
         .select("doc_id", "text")
     )
-    out = stream_simhash_against_index(stream, index, "doc_id", "text")
-    sink = f"streaming_simhash_{uuid.uuid4().hex}"
-    with _drained_state_partitions(spark):
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
-    return spark.table(sink)
+    return drain(stream_simhash_against_index(stream, index, "doc_id", "text"))
 
 
 SQL_STREAMING_SIMHASH = SQL_SIMHASH_INCR

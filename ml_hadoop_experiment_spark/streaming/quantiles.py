@@ -63,7 +63,6 @@ def stateful_histogram(
     lo: float,
     hi: float,
     n_bins: int = 1000,
-    timeout: str = GroupStateTimeout.NoTimeout,
 ) -> DataFrame:
     """Per-key fixed-width histogram across the whole stream:
     ``(*key_cols, bin, cnt)`` rows for occupied bins, emitted after
@@ -113,5 +112,5 @@ def stateful_histogram(
         outputStructType=out_schema,
         stateStructType="counts array<long>",
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -52,7 +52,6 @@ def stateful_priority_sample(
     id_col: str,
     k: int,
     salt: int = 0,
-    timeout: str = GroupStateTimeout.NoTimeout,
 ) -> DataFrame:
     """Per-key bottom-k-by-hash sample across the whole stream:
     ``(*key_cols, seq, id, priority)`` rows — the key's complete
@@ -125,5 +124,5 @@ def stateful_priority_sample(
         outputStructType=out_schema,
         stateStructType="ids array<long>, pris array<long>, seq long",
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -92,7 +92,6 @@ def stateful_hll_distinct(
     key_cols: Sequence[str],
     value_col: str,
     p: int = 8,
-    timeout: str = GroupStateTimeout.NoTimeout,
 ) -> DataFrame:
     """Per-key HLL registers across the whole stream:
     ``(*key_cols, register, M)`` rows emitted after every micro-batch
@@ -147,7 +146,7 @@ def stateful_hll_distinct(
         outputStructType=out_schema,
         stateStructType="regs array<integer>",
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -156,7 +155,6 @@ def stateful_heavy_hitters(
     key_cols: Sequence[str],
     value_col: str,
     capacity: int = 4096,
-    timeout: str = GroupStateTimeout.NoTimeout,
 ) -> DataFrame:
     """Per-key Misra-Gries heavy-hitter candidates across the whole
     stream — the streaming sibling of
@@ -242,5 +240,5 @@ def stateful_heavy_hitters(
             "tokens array<string>, counts array<long>, seq long"
         ),
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -15,10 +15,12 @@ engine the stateful shapes a continuous training-data pipeline needs:
 Scale posture: state lives in the executor state store (RocksDB-backed on a
 real cluster via ``spark.sql.streaming.stateStore.providerClass``), keyed by
 the groupBy columns, so a 1000-executor job partitions state horizontally.
-No driver-side state, no collect. Timeouts are left to the caller's
-``timeoutConf`` knob — dedup state for an unbounded key universe should use
-a TTL via processing-time timeouts (default here: no timeout, correct for
-bounded key spaces like content digests within a retention window).
+No driver-side state, no collect. State never times out
+(``GroupStateTimeout.NoTimeout``): that is correct for bounded key spaces
+like content digests within a retention window. Dedup state for an
+unbounded key universe would need a TTL, i.e. a processing-time timeout
+that the state function also expires, which these operators do not
+implement.
 """
 
 from __future__ import annotations
@@ -40,7 +42,6 @@ def stateful_dedup(
     stream_df: DataFrame,
     key_cols: Sequence[str],
     emit_cols: Sequence[str] | None = None,
-    timeout: str = GroupStateTimeout.NoTimeout,
 ) -> DataFrame:
     """Emit only the first row observed per key across the whole stream.
 
@@ -74,7 +75,7 @@ def stateful_dedup(
         outputStructType=out_schema,
         stateStructType="seen boolean",
         outputMode="append",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 

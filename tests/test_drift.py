@@ -119,8 +119,6 @@ class TestPsiReport:
         """The factored finisher must score a DRAINED streaming
         histogram sketch identically to the batch psi_report on the
         same slices — the streaming_psi query's contract."""
-        import uuid
-
         from ml_hadoop_experiment_spark.operators.drift import (
             psi_from_counts,
             psi_report,
@@ -128,6 +126,7 @@ class TestPsiReport:
         from ml_hadoop_experiment_spark.operators.histogram import (
             histogram_counts,
         )
+        from ml_hadoop_experiment_spark.streaming import drain
         from ml_hadoop_experiment_spark.streaming.quantiles import (
             stateful_histogram,
         )
@@ -141,21 +140,10 @@ class TestPsiReport:
             .where(F.col("event_type") == "purchase")
             .select("event_type", "value")
         )
-        sink = f"t_{uuid.uuid4().hex}"
-        q = (
-            stateful_histogram(
-                stream, ["event_type"], "value", 0.0, 500.0, 20
-            )
-            .writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
+        sunk = drain(
+            stateful_histogram(stream, ["event_type"], "value", 0.0, 500.0, 20)
         )
-        q.awaitTermination(300)
-        live = (
-            spark.table(sink).groupBy("bin").agg(F.max("cnt").alias("cnt"))
-        )
+        live = sunk.groupBy("bin").agg(F.max("cnt").alias("cnt"))
         ref = histogram_counts(
             ev.where(F.col("event_type") == "view"),
             [], "value", 0.0, 500.0, 20,

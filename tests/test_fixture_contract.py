@@ -39,8 +39,9 @@ def test_all_tables_present(sf_dir):
 def test_events_ts_is_a_supported_wire_type(sf_dir):
     t = pq.read_schema(f"{sf_dir}/events.parquet").field("ts").type
     assert str(t) in ("timestamp[us]", "timestamp[ns]", "timestamp[ms]", "int64"), (
-        f"events.ts wire type {t} is new: extend queries._normalize_event_time "
-        "and operators/temporal.epoch_and_scale"
+        f"events.ts wire type {t} is new: extend "
+        "queries._shared._normalize_event_time and "
+        "operators/temporal.epoch_and_scale"
     )
 
 

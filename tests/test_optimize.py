@@ -103,6 +103,28 @@ def _t_fan_out_line() -> int:
     raise AssertionError("fan_out call not found in queries._t")
 
 
+def test_materialize_ctes_rewrites_cte_heads_only():
+    """Only ``WITH``-list heads get the hint: not a named window, not text
+    in a string literal, not a head with a column list."""
+    import duckdb
+
+    from ml_hadoop_experiment_spark.queries._shared import _materialize_ctes
+
+    cases = {
+        "WITH a AS (SELECT 1 AS x), b(y) AS (SELECT 2) "
+        "SELECT sum(x) OVER w AS s FROM a WINDOW w AS (ORDER BY x)": (
+            "WITH a AS MATERIALIZED (SELECT 1 AS x), b(y) AS (SELECT 2) "
+            "SELECT sum(x) OVER w AS s FROM a WINDOW w AS (ORDER BY x)"
+        ),
+        "WITH a AS (SELECT 'k AS (' AS t) SELECT t FROM a": (
+            "WITH a AS MATERIALIZED (SELECT 'k AS (' AS t) SELECT t FROM a"
+        ),
+    }
+    for sql, want in cases.items():
+        assert _materialize_ctes(sql) == want
+        duckdb.sql(want).fetchall()  # still valid SQL
+
+
 def test_partition_sizes(spark):
     df = spark.range(100).repartition(4)
     sizes = partition_sizes(df)

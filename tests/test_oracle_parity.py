@@ -69,9 +69,20 @@ def _assert_frames_match(name: str, spark_pdf: pd.DataFrame, duck_pdf: pd.DataFr
                 assert a == b, f"{name}.{col}[{i}]: {a!r} != {b!r}"
 
 
+def _temp_views(spark) -> set[str]:
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
-    spark_pdf = QUERIES[name](spark, SF_DIR).toPandas()
+    streaming = name.startswith("streaming_")
+    views = _temp_views(spark) if streaming else None
+    df = QUERIES[name](spark, SF_DIR)
+    # a drained stream has stopped and dropped its memory sink by now
+    assert not streaming or (
+        not spark.streams.active and _temp_views(spark) == views
+    ), f"{name} left a stream or a sink view behind"
+    spark_pdf = df.toPandas()
     duck_pdf = duck.execute(ORACLE_SQL[name]).df()
     # prefix-sum queries pin one persisted copy of their ranged input;
     # the sweep reclaims it between queries (the result is materialized).

@@ -4,6 +4,7 @@ dedup and running counts, driven through real multi-batch execution
 
 import pytest
 
+from ml_hadoop_experiment_spark.streaming import drain
 from ml_hadoop_experiment_spark.streaming.stateful import (
     stateful_dedup,
     stateful_running_counts,
@@ -32,22 +33,9 @@ def two_batch_source(spark, tmp_path):
     )
 
 
-def _run_to_completion(stream_df, name, mode):
-    q = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return q
-
-
 def test_stateful_dedup_across_batches(spark, two_batch_source):
-    out = stateful_dedup(two_batch_source, ["k"])
-    _run_to_completion(out, "dedup_sink", "append")
-    rows = {r["k"]: r["v"] for r in spark.sql("SELECT * FROM dedup_sink").collect()}
+    out = drain(stateful_dedup(two_batch_source, ["k"]))
+    rows = {r["k"]: r["v"] for r in out.collect()}
     # one row per distinct key over the whole stream
     assert set(rows) == {"a", "b", "c"}
     assert rows["b"] == 3.0 and rows["c"] == 4.0
@@ -57,8 +45,7 @@ def test_stateful_dedup_across_batches(spark, two_batch_source):
 
 def test_stateful_running_counts(spark, two_batch_source):
     out = stateful_running_counts(two_batch_source, ["k"], value_col="v")
-    _run_to_completion(out, "counts_sink", "update")
-    pdf = spark.sql("SELECT * FROM counts_sink").toPandas()
+    pdf = drain(out, "update").toPandas()
     # final (largest) state per key reflects all batches
     final = pdf.sort_values("count").groupby("k").last()
     assert final.loc["a", "count"] == 3 and final.loc["a", "total"] == 13.0

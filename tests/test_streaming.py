@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ml_hadoop_experiment_spark.streaming import (
+    drain,
     foreach_batch_inference,
     streaming_inference,
     windowed_event_aggregates,
@@ -27,20 +28,72 @@ def stream_source(spark, tmp_path):
     return spark.readStream.schema("f1 double, f2 double").parquet(path)
 
 
+def _temp_views(spark):
+    return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+
+class TestDrain:
+    def test_returned_frame_outlives_its_sink_view(self, spark, stream_source):
+        before = _temp_views(spark)
+        out = drain(stream_source.withColumn("k", F.col("f1") % 2))
+        assert _temp_views(spark) == before
+        assert out.count() == 20
+        got = {r["k"]: r["count"] for r in out.groupBy("k").count().collect()}
+        assert got == {0.0: 10, 1.0: 10}
+
+    def test_timeout_raises_stops_the_stream_and_drops_the_sink(
+        self, spark, monkeypatch
+    ):
+        import sys
+        import time
+
+        from pyspark.sql.functions import pandas_udf
+
+        monkeypatch.setattr(sys.modules[drain.__module__], "DRAIN_TIMEOUT_S", 2)
+
+        @pandas_udf("long")
+        def slow(v: pd.Series) -> pd.Series:
+            time.sleep(30)
+            return v
+
+        # the rate source's micro-batch flavour: a fixed batch of rows that
+        # availableNow reads at once, held up in the UDF past the timeout
+        stream = (
+            spark.readStream.format("rate-micro-batch")
+            .option("rowsPerBatch", 10)
+            .load()
+        )
+        before = _temp_views(spark)
+        partitions = spark.conf.get("spark.sql.shuffle.partitions")
+        with pytest.raises(TimeoutError, match="did not drain within 2 s"):
+            drain(stream.select(slow("value").alias("v")))
+        assert spark.streams.active == []
+        assert _temp_views(spark) == before
+        assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
+
+    def test_stream_failure_propagates_and_drops_the_sink(
+        self, spark, stream_source
+    ):
+        from pyspark.errors import StreamingQueryException
+        from pyspark.sql.functions import pandas_udf
+
+        @pandas_udf("double")
+        def boom(v: pd.Series) -> pd.Series:
+            raise ValueError("boom from the stream")
+
+        before = _temp_views(spark)
+        with pytest.raises(StreamingQueryException, match="boom from the stream"):
+            drain(stream_source.select(boom("f1").alias("b")))
+        assert spark.streams.active == []
+        assert _temp_views(spark) == before
+
+
 def test_streaming_inference(spark, stream_source):
     out = streaming_inference(
         stream_source, None, ["f1", "f2"], lambda m, b: b[0] + b[1],
         output_type="double", output_col="p",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("pred_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
-    rows = spark.sql("SELECT * FROM pred_sink").collect()
+    rows = drain(out).collect()
     assert len(rows) == 20
     assert all(r["p"] == r["f1"] + r["f2"] for r in rows)
 
@@ -84,17 +137,9 @@ def test_windowed_aggregates(spark, tmp_path):
         "ts timestamp, event_type string, value double"
     ).parquet(path)
     agg = windowed_event_aggregates(stream, window="1 minute", watermark="2 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("win_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
     got = {
         (str(r["window_start"]), r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in spark.sql("SELECT * FROM win_sink").collect()
+        for r in drain(agg, "complete").collect()
     }
     assert got[("2026-01-01 00:00:00", "click")] == (2, 3.0)
     assert got[("2026-01-01 00:01:00", "view")] == (1, 5.0)
@@ -125,17 +170,9 @@ def test_session_window_aggregates_boundary_semantics(spark, tmp_path):
     agg = session_window_aggregates(
         stream, ts_col="ts", key_col="user_id", gap="600 seconds", watermark="1 hour"
     )
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("sess_sink")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(60)
     got = {
         (r["user_id"], str(r["session_start"])): r["n_events"]
-        for r in spark.sql("SELECT * FROM sess_sink").collect()
+        for r in drain(agg, "complete").collect()
     }
     assert got == {
         (1, "2026-01-01 00:00:00"): 3,
@@ -174,18 +211,9 @@ def test_interval_join_boundary_semantics(spark, tmp_path):
         upper="30 minutes",
         watermark="1 hour",
     )
-    q = (
-        joined.select("l_event_id", "r_event_id")
-        .writeStream.format("memory")
-        .queryName("ij_sink")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     got = {
         (r["l_event_id"], r["r_event_id"])
-        for r in spark.sql("SELECT * FROM ij_sink").collect()
+        for r in drain(joined.select("l_event_id", "r_event_id")).collect()
     }
     assert got == {(1, 2)}
 
@@ -212,11 +240,7 @@ class TestStreamStaticEnrich:
             [(10, "a"), (20, "b"), (30, "c")], "key long, attr string"
         )
         out = stream_static_enrich(stream, dim, "key").select("id", "attr")
-        q = (out.writeStream.format("memory").queryName("enrich_sink")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        got = {(r["id"], r["attr"]) for r in
-               spark.sql("SELECT * FROM enrich_sink").collect()}
+        got = {(r["id"], r["attr"]) for r in drain(out).collect()}
         assert got == {(1, "a"), (2, "b")}  # unmatched key 99 dropped
 
     def test_left_anti_is_streaming_blocklist(self, spark, tmp_path):
@@ -230,10 +254,7 @@ class TestStreamStaticEnrich:
         )
         blocklist = spark.createDataFrame([(20,)], "key long")
         out = stream_static_enrich(stream, blocklist, "key", how="left_anti")
-        q = (out.writeStream.format("memory").queryName("anti_sink")
-             .outputMode("append").trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        got = sorted(r["id"] for r in spark.sql("SELECT id FROM anti_sink").collect())
+        got = sorted(r["id"] for r in drain(out).select("id").collect())
         assert got == [1, 3]
 
     def test_rejects_wrong_sides(self, spark, tmp_path):
@@ -256,8 +277,6 @@ class TestStreamingSimhash:
     index (streaming/content.stream_simhash_against_index)."""
 
     def test_drained_stream_equals_batch_operator(self, spark, tmp_path):
-        import uuid
-
         from pyspark.sql import functions as F
 
         from ml_hadoop_experiment_spark.operators.simhash_index import (
@@ -292,18 +311,9 @@ class TestStreamingSimhash:
             .parquet(src)
         )
         out = stream_simhash_against_index(stream, index, "doc_id", "text")
-        sink = f"t_stream_simhash_{uuid.uuid4().hex}"
-        q = (
-            out.writeStream.format("memory")
-            .queryName(sink)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(300)
         got = sorted(
             (r["id_new"], r["id_corpus"], r["hamming"])
-            for r in spark.table(sink).collect()
+            for r in drain(out).collect()
         )
         assert got == want and len(got) > 0
         index.unpersist()

@@ -5,23 +5,11 @@ DuckDB twin."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-
-def _drain_complete(sums, spark):
-    sink = f"t_{uuid.uuid4().hex}"
-    q = (
-        sums.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(sink)
+from ml_hadoop_experiment_spark.streaming import drain
 
 
 class TestMomentSums:
@@ -88,8 +76,8 @@ class TestStreamingMoments:
             .parquet(sf_dir)
             .select("event_type", "value")
         )
-        sunk = _drain_complete(
-            moment_sums(stream, ["event_type"], "value"), spark
+        sunk = drain(
+            moment_sums(stream, ["event_type"], "value"), "complete"
         )
         want = {
             r["event_type"]: (r["n"], r["s1"], r["s2"])
@@ -122,8 +110,8 @@ class TestStreamingMoments:
                 .parquet(d)
                 .select("event_type", "value")
             )
-            sunk = _drain_complete(
-                moment_sums(stream, ["event_type"], "value"), spark
+            sunk = drain(
+                moment_sums(stream, ["event_type"], "value"), "complete"
             )
             results[files_per_trigger] = {
                 r["event_type"]: (r["n"], r["s1"], r["s2"])

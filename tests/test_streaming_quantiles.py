@@ -5,23 +5,11 @@ multi-batch additive merge, and the construction-time type guard."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-
-def _drain(out, spark):
-    sink = f"t_{uuid.uuid4().hex}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(sink)
+from ml_hadoop_experiment_spark.streaming import drain
 
 
 def _final_counts(sunk):
@@ -191,11 +179,10 @@ class TestStatefulHistogram:
             .parquet(sf_dir)
             .select("event_type", "value")
         )
-        sunk = _drain(
+        sunk = drain(
             stateful_histogram(
                 stream, ["event_type"], "value", 0.0, 500.0, 1000
-            ),
-            spark,
+            )
         )
         want = {
             (r["event_type"], r["bin"]): r["cnt"]
@@ -228,11 +215,10 @@ class TestStatefulHistogram:
                 .parquet(d)
                 .select("event_type", "value")
             )
-            sunk = _drain(
+            sunk = drain(
                 stateful_histogram(
                     stream, ["event_type"], "value", 0.0, 500.0, 1000
-                ),
-                spark,
+                )
             )
             results[files_per_trigger] = _final_counts(sunk)
         assert results[1] == results[1000]

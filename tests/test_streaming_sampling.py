@@ -4,24 +4,12 @@ order/batch invariance, eviction correctness, bounded state, guards."""
 from __future__ import annotations
 
 import os
-import uuid
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-
-def _drain(out, spark):
-    sink = f"t_{uuid.uuid4().hex}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(sink)
+from ml_hadoop_experiment_spark.streaming import drain
 
 
 def _final(sunk):
@@ -69,11 +57,10 @@ class TestStreamingPrioritySample:
             .select("event_type", "user_id")
         )
         got = _final(
-            _drain(
+            drain(
                 stateful_priority_sample(
                     stream, ["event_type"], "user_id", k=5, salt=7
-                ),
-                spark,
+                )
             )
         )
         w = Window.partitionBy("event_type").orderBy(
@@ -113,11 +100,10 @@ class TestStreamingPrioritySample:
                 .select("event_type", "user_id")
             )
             results[fpt] = _final(
-                _drain(
+                drain(
                     stateful_priority_sample(
                         stream, ["event_type"], "user_id", k=5, salt=7
-                    ),
-                    spark,
+                    )
                 )
             )
         assert results[1] == results[1000]
@@ -139,11 +125,10 @@ class TestStreamingPrioritySample:
             .parquet(d)
             .select("event_type", "user_id")
         )
-        sunk = _drain(
+        sunk = drain(
             stateful_priority_sample(
                 stream, ["event_type"], "user_id", k=3, salt=0
-            ),
-            spark,
+            )
         )
         got = _final(sunk)
         assert len(got) == 3

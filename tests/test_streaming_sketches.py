@@ -7,23 +7,11 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-import uuid
 
 import pytest
 from pyspark.sql import functions as F
 
-
-def _drain(out, spark):
-    sink = f"t_{uuid.uuid4().hex}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(sink)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    return spark.table(sink)
+from ml_hadoop_experiment_spark.streaming import drain
 
 
 def _final_registers(sunk):
@@ -70,8 +58,8 @@ class TestStreamingHllDistinct:
             .parquet(sf_dir)
             .select("event_type", "user_id")
         )
-        sunk = _drain(
-            stateful_hll_distinct(stream, ["event_type"], "user_id", 8), spark
+        sunk = drain(
+            stateful_hll_distinct(stream, ["event_type"], "user_id", 8)
         )
         regs = sunk.groupBy("event_type", "register").agg(
             F.max("M").alias("M")
@@ -117,9 +105,8 @@ class TestStreamingHllDistinct:
                 .parquet(d)
                 .select("event_type", "user_id")
             )
-            sunk = _drain(
-                stateful_hll_distinct(stream, ["event_type"], "user_id", 8),
-                spark,
+            sunk = drain(
+                stateful_hll_distinct(stream, ["event_type"], "user_id", 8)
             )
             if files_per_trigger == 1:
                 # one file per micro-batch: keys emit once per batch
@@ -199,11 +186,10 @@ class TestStreamingHeavyHitters:
             .parquet("/root/testdata/sf0.001")
             .select("event_type", "user_id")
         )
-        sunk = _drain(
+        sunk = drain(
             stateful_heavy_hitters(
                 stream, ["event_type"], "user_id", capacity=1024
-            ),
-            spark,
+            )
         )
         got = _final_summary(sunk)
         exact = {
@@ -239,11 +225,10 @@ class TestStreamingHeavyHitters:
                 .parquet(d)
                 .select("event_type", "user_id")
             )
-            sunk = _drain(
+            sunk = drain(
                 stateful_heavy_hitters(
                     stream, ["event_type"], "user_id", capacity=1024
-                ),
-                spark,
+                )
             )
             if files_per_trigger == 1:
                 assert (
@@ -276,11 +261,10 @@ class TestStreamingHeavyHitters:
             .select("event_type", "user_id")
         )
         cap = 10
-        sunk = _drain(
+        sunk = drain(
             stateful_heavy_hitters(
                 stream, ["event_type"], "user_id", capacity=cap
-            ),
-            spark,
+            )
         )
         got = _final_summary(sunk)
         assert len(got) <= cap
