@@ -13,6 +13,10 @@ their pins here; sweep drivers call :func:`release_pinned` between
 queries. Steady-state callers that WANT a pin to outlive the call
 (the bench's amortized-index entries) opt out via the operators'
 ``register=False`` knobs.
+
+A pin is either a cached plan (``persist``) or a ``localCheckpoint``
+frame, whose rows live in a persisted RDD under a ``LogicalRDD`` plan.
+``unpersist()`` frees only the former; :func:`release` frees both.
 """
 
 from __future__ import annotations
@@ -22,19 +26,29 @@ from typing import List
 _PINNED: List = []
 
 
+def release(df) -> None:
+    """Free what ``df`` pins: its cached plan and, for a
+    ``localCheckpoint`` frame, the RDD its rows live in. Frames that read
+    from a released checkpoint cannot be evaluated afterwards."""
+    df.unpersist()
+    plan = df._jdf.queryExecution().logical()
+    if plan.nodeName() == "LogicalRDD":
+        plan.rdd().unpersist(False)
+
+
 def register_pinned(df) -> None:
     """Track a persisted DataFrame for sweep-boundary release."""
     _PINNED.append(df)
 
 
 def release_pinned() -> int:
-    """Unpersist every registered frame (idempotent, never raises);
+    """:func:`release` every registered frame (idempotent, never raises);
     returns how many were released."""
     n = 0
     while _PINNED:
         df = _PINNED.pop()
         try:
-            df.unpersist()
+            release(df)
             n += 1
         except Exception:
             pass

@@ -171,6 +171,8 @@ def bpe_learn(
         )
     from pyspark import StorageLevel
 
+    from ..common.cache_registry import register_pinned, release
+
     words = df.select(
         F.explode(
             F.split(F.trim(F.lower(F.col(text_col))), WORD_SPLIT_SPARK)
@@ -214,7 +216,7 @@ def bpe_learn(
             # blocks — same rows, O(1) analysis per round (the
             # connected_components precedent, guide §3.3)
             nxt = current.withColumn("__s", col).localCheckpoint()
-            current.unpersist()
+            release(current)  # frees the checkpoint, not only a cache
             current = nxt
         out = current.select(
             F.col("__w").alias("word"),
@@ -225,8 +227,6 @@ def bpe_learn(
     finally:
         # the caller's frame still reads from `current`'s pin; register
         # it so sweep drivers reclaim it between queries
-        from ..common.cache_registry import register_pinned
-
         register_pinned(current)
 
 

@@ -31,6 +31,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ml_hadoop_experiment_spark.common.cache_registry import register_pinned, release
 from ml_hadoop_experiment_spark.functions.hashing import (
     minhash_permutation_params,
     minhash_permute,
@@ -1292,15 +1293,20 @@ def connected_components(
         LAST_CC_STATS["changed"].append(int(n_edges))
         if n_edges <= budget:
             # one task unions the whole (contracted) graph exactly
-            return (
+            labels = (
                 e.coalesce(1)
                 .mapInPandas(_union_find_partition, "id long, root long")
                 .select("id", F.col("root").alias("comp"))
                 .localCheckpoint()
             )
+            release(e)  # materialized into `labels`; never read again
+            register_pinned(labels)
+            return labels
         mapping = e.mapInPandas(
             _union_find_partition, "id long, root long"
         ).localCheckpoint()  # materialize once: reused by steps 2 and 3
+        release(e)
+        register_pinned(mapping)  # the caller's labels read from it
         contracted = (
             mapping.groupBy("id")
             .agg(F.min("root").alias("__r0"), F.collect_set("root").alias("__rs"))

@@ -304,12 +304,17 @@ def unigram_learn(
     model = _seed_model(vocab, seed_multi, max_piece_len).localCheckpoint(
         eager=False
     )
+    register_pinned(model)
     counts = None
     for _ in range(n_iters):
         counts = _estep_counts(vocab, model, max_piece_len).localCheckpoint(
             eager=False
         )
         model = _smoothed(counts).localCheckpoint(eager=False)
+        # each checkpoint persists its rows on first use; the sweep
+        # boundary frees them
+        register_pinned(counts)
+        register_pinned(model)
     from pyspark.sql import Window
 
     w = Window.orderBy(F.col("cnt").desc(), F.col("piece").asc())

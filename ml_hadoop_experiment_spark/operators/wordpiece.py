@@ -148,6 +148,8 @@ def wordpiece_learn(
         )
     from pyspark import StorageLevel
 
+    from ..common.cache_registry import register_pinned, release
+
     words = df.select(
         F.explode(
             F.split(F.trim(F.lower(F.col(text_col))), WORD_SPLIT_SPARK)
@@ -235,7 +237,7 @@ def wordpiece_learn(
             # blocks — same rows, O(1) analysis per round (the
             # connected_components precedent, guide §3.3)
             nxt = current.withColumn("__s", col).localCheckpoint()
-            current.unpersist()
+            release(current)  # frees the checkpoint, not only a cache
             current = nxt
         out = current.select(
             F.col("__w").alias("word"),
@@ -244,8 +246,6 @@ def wordpiece_learn(
         )
         return out, merges
     finally:
-        from ..common.cache_registry import register_pinned
-
         register_pinned(current)
 
 

@@ -286,6 +286,14 @@ FROM assets
 """
 
 
+def _group5(doc_id: int) -> tuple[int, int]:
+    """``(doc_id // 5, doc_id % 5)`` as the near-dup synths' SQL twins
+    compute it: DuckDB's integer ``//`` and ``%`` truncate toward zero
+    (``-7 // 5 = -1``, ``-7 % 5 = -2``) where Python floors."""
+    grp = abs(doc_id) // 5 * (-1 if doc_id < 0 else 1)
+    return grp, doc_id - 5 * grp
+
+
 def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Image CONTENT near-dup (operators/phash.image_near_dup_pairs):
     real 8x8 24-bit BMP blobs are synthesized per document with pure
@@ -335,7 +343,7 @@ def q_image_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
             payloads = []
             for d in pdf["doc_id"]:
                 d = int(d)
-                grp, r = d // 5, d % 5
+                grp, r = _group5(d)
                 gray = np.empty((8, 8), dtype=np.int64)
                 for y in range(8):
                     for x in range(8):
@@ -438,7 +446,7 @@ def q_image_near_dup_mixed(spark: SparkSession, sf_dir: str) -> DataFrame:
             payloads = []
             for d in pdf["doc_id"]:
                 d = int(d)
-                grp, r = d // 5, d % 5
+                grp, r = _group5(d)
                 gray = np.empty((8, 8), dtype=np.int64)
                 for y in range(8):
                     for x in range(8):
@@ -500,7 +508,7 @@ def q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if d % 11 == 0:
                     payloads.append(b"OggS not a wav payload")
                     continue
-                grp, r = d // 5, d % 5
+                grp, r = _group5(d)
                 samples = np.empty(256, dtype=np.int64)
                 for i in range(256):
                     h = int(
@@ -511,7 +519,7 @@ def q_audio_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if r > 0:
                     samples[r * 8] += 500
                 payloads.append(
-                    wav_bytes(samples, rate=16000 + (d % 5) * 1000)
+                    wav_bytes(samples, rate=16000 + r * 1000)
                 )
             yield pd.DataFrame(
                 {"doc_id": pdf["doc_id"], "payload": payloads}
@@ -609,7 +617,7 @@ def q_image_near_dup_jpeg(spark: SparkSession, sf_dir: str) -> DataFrame:
                 if d % 13 == 0:
                     payloads.append(b"GIF89a not a decodable image")
                     continue
-                grp, r = d // 5, d % 5
+                grp, r = _group5(d)
                 gray = np.empty((8, 8), dtype=np.int64)
                 for y in range(8):
                     for x in range(8):

@@ -21,8 +21,9 @@ from ml_hadoop_experiment_spark.streaming.drain import drain
 
 
 def q_streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stateful streaming dedup (applyInPandasWithState) driven to
-    completion: the documents table streamed as micro-batches through
+    """Stateful streaming dedup (a streaming ``dropDuplicates``, its state
+    in Spark's state store) driven to completion: the documents table
+    streamed as micro-batches through
     ``streaming.stateful.stateful_dedup`` on ``doc_id``, emitting each key
     exactly once. With unique fixture doc_ids the result set equals
     SELECT doc_id FROM documents — which makes a real streaming operator

@@ -46,8 +46,9 @@ def drain(
     cap 8 (32 stores, ``recentProgress[].durationMs``, local[32] sf0.1).
     Cap 4 holds the same ~16-store budget a single-store drain has at 8: the
     join drain fell 4.55 -> 2.70 s (min of 2 after warm), while single-store
-    drains keep 8 (streaming_dedup REGRESSES 1.93 -> 2.78 s below 8 — its
-    per-key Python work wants the parallelism). A production deployment
+    drains keep 8 (streaming_dedup REGRESSED 1.93 -> 2.78 s below 8, measured
+    on the retired ``applyInPandasWithState`` dedup, whose per-key Python
+    work wanted the parallelism). A production deployment
     sizes this by key cardinality / throughput, not a constant (BASELINE.md
     "Round-14 receipts").
 

@@ -63,6 +63,28 @@ class TestBpeLearn:
         counts = {r["word"]: r["word_count"] for r in out.collect()}
         assert counts["low"] == 4
 
+    def test_release_pinned_frees_every_round_checkpoint(self, spark):
+        """Each round's localCheckpoint keeps its rows in a persisted RDD
+        that ``unpersist()`` does not reach: the per-round unpin frees all
+        but the last, and the sweep's ``release_pinned`` frees that one."""
+        from ml_hadoop_experiment_spark.common.cache_registry import (
+            release_pinned,
+        )
+        from ml_hadoop_experiment_spark.operators.bpe import bpe_learn
+
+        release_pinned()
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs())
+        docs = spark.createDataFrame(
+            [("low low low lower lowest",), ("new newer newest low",)],
+            "text string",
+        )
+        out, _ = bpe_learn(docs, "text", n_merges=3)
+        out.collect()
+        assert len(set(jsc.getPersistentRDDs()) - before) == 1
+        release_pinned()
+        assert set(jsc.getPersistentRDDs()) - before == set()
+
     def test_guards(self, spark):
         from ml_hadoop_experiment_spark.operators.bpe import bpe_learn
 

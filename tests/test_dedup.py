@@ -441,6 +441,26 @@ def test_connected_components_depth_guard_raises(spark, monkeypatch):
     assert dedup.LAST_CC_STATS["rounds"] >= 2
 
 
+def test_connected_components_releases_every_level(spark):
+    """A level's edge checkpoint is freed once its mapping is materialized;
+    the mappings and labels the result reads from are freed by the sweep's
+    ``release_pinned``, leaving no persisted RDD behind."""
+    from ml_hadoop_experiment_spark.common.cache_registry import release_pinned
+    from ml_hadoop_experiment_spark.operators import dedup
+
+    release_pinned()
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs())
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(300, 360)], "id_a bigint, id_b bigint"
+    ).repartition(8)
+    out = dedup.connected_components(edges, single_task_edges=0).collect()
+    assert {r["comp"] for r in out} == {300}
+    assert dedup.LAST_CC_STATS["rounds"] >= 2
+    release_pinned()
+    assert set(jsc.getPersistentRDDs()) - before == set()
+
+
 def test_connected_components_multi_level_vs_recursive_cte(spark):
     """Depth-2+ contraction on a partition-spanning clone graph, labels
     checked against an independent DuckDB recursive-CTE closure — the

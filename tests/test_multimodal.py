@@ -1,5 +1,6 @@
 """Multimodal plumbing tests: binary columns, metadata, gated decode."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from ml_hadoop_experiment_spark.operators.multimodal import (
@@ -218,3 +219,33 @@ def test_image_near_dup_synth_payload_roundtrip():
         assert payload[:2] == b"BM" and len(payload) == 246
         back = bmp_gray_pixels(payload)
         assert back is not None and (back == gray).all()
+
+
+@pytest.mark.parametrize(
+    "name",
+    ["image_near_dup", "image_near_dup_mixed", "audio_near_dup", "image_near_dup_jpeg"],
+)
+def test_near_dup_synth_negative_doc_id_matches_sql_twin(spark, tmp_path, name):
+    """The synths group documents as their DuckDB twins do, where integer
+    ``//`` and ``%`` truncate toward zero: doc_id -2 is rank -2 of group 0
+    (Python's floor would put it at rank 3 of group -1), so it pairs with
+    doc 3 on both engines."""
+    import duckdb
+    import pandas as pd
+
+    from ml_hadoop_experiment_spark.queries import ORACLE_SQL, QUERIES
+
+    docs = str(tmp_path / "documents.parquet")
+    pd.DataFrame({"doc_id": [-2, 3, 8]}).to_parquet(docs)
+    out = QUERIES[name](spark, str(tmp_path)).select("id_a", "id_b", "hamming")
+    got = sorted(map(tuple, out.collect()))
+    con = duckdb.connect()
+    try:
+        con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{docs}')")
+        want = sorted(
+            con.execute(f"SELECT id_a, id_b, hamming FROM ({ORACLE_SQL[name]})").fetchall()
+        )
+    finally:
+        con.close()
+    assert [p[:2] for p in want] == [(-2, 3)]
+    assert got == want
