@@ -7,6 +7,9 @@ value = total wall-clock of one pass over all bench queries (median of
 BENCH_RUNS runs, default 1 for driver speed; set BENCH_RUNS=3 locally).
 Each query is fully materialized via a count-ish action that forces every
 operator but avoids driver-side result transfer.
+
+$SPARK_GRAFT_CPUS defaults to the number of CPUs this process may run on,
+and the driver heap is an eighth of the machine's RAM, between 1 and 8 GiB.
 """
 
 from __future__ import annotations
@@ -23,7 +26,7 @@ from ml_hadoop_experiment_spark.plans.prefix import release_prefix_caches
 from ml_hadoop_experiment_spark.queries import QUERIES
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = os.environ.get("SPARK_GRAFT_CPUS", "32")
+CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 RUNS = int(os.environ.get("BENCH_RUNS", "2"))
 
 # Headline set: one per operator family (BASELINE.md's bench plan) plus the
@@ -546,6 +549,12 @@ STEADY_PROBES = [
 ]
 
 
+def _driver_heap() -> str:
+    """An eighth of the machine's RAM, between 1 and 8 GiB."""
+    ram_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{max(1024, min(8192, ram_mb // 8))}m"
+
+
 def main() -> None:
     spark = get_session(
         app_name="mlhe-bench",
@@ -553,7 +562,7 @@ def main() -> None:
         shuffle_partitions=int(CPUS),
         extra_conf={
             "spark.ui.enabled": "false",
-            "spark.driver.memory": "16g",
+            "spark.driver.memory": _driver_heap(),
             # The sweep holds ~165 distinct plans x ~3 codegen units each;
             # the default 100-entry generated-class cache evicts EVERY
             # plan between passes, so each timed pass re-pays Janino

@@ -1,4 +1,4 @@
-"""Iterative BPE merge training — the driver-gated N-merge loop.
+"""Iterative BPE merge training: one vocabulary collect, merges on the driver.
 
 ``corpus.bpe_pair_counts`` is ONE trainer iteration's statistic (the
 adjacent-pair frequencies the next merge is picked from). This module
@@ -10,15 +10,22 @@ merge it greedily left-to-right in every word, repeat. The result is
 the merge list and the fully segmented vocabulary — the
 tokenizer-training story end-to-end.
 
-Same execution shape as the oracle'd Lloyd loop
-(``clustering.kmeans_lloyd``): the corpus stream collapses ONCE to the
+Execution shape: the corpus stream collapses ONCE in Spark to the
 distinct-word ``(word, count)`` table (the classic trainer
 optimization — at 100 TB that's millions of rows where the token
-stream is trillions, and it is the ONLY corpus-sized shuffle), the
-frame is pinned, and each iteration is one vocabulary-sized
-aggregation whose single-row argmax is the only thing the driver ever
-holds (N pairs total). Merging is a pure ``aggregate`` fold expression
-— no Python in the per-row path, no UDFs.
+stream is trillions, and it is the ONLY corpus-sized shuffle), and
+that table is collected to the driver in one action, the way
+vocabulary building collects its distinct-value aggregation. The
+merge loop then runs in plain Python over the in-memory word counts,
+as Sennrich's reference trainer does, and the segmented vocabulary
+goes back to Spark as one JSON string literal expanded by ``inline`` —
+a JVM-side frame with no RDD lineage, cheap to broadcast. A vocabulary
+too large for the driver fails loudly at ``spark.driver.maxResultSize``.
+
+Applying merges to new text (:func:`bpe_apply`) stays a pure
+``aggregate`` fold expression — the merge list is one array-of-struct
+literal, so the expression size does not grow with the merge count;
+no Python in the per-row path, no UDFs.
 
 The ENTIRE loop replays in DuckDB (:func:`bpe_learn_sql`): unrolled
 per-iteration CTE chains — pair counts, a 1-row ``best_i``, the same
@@ -36,7 +43,9 @@ Reference parity: criteo/ml-hadoop-experiment has no tokenizer surface
 
 from __future__ import annotations
 
-from typing import List, Optional, Tuple
+import heapq
+import json
+from typing import Dict, List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -63,23 +72,64 @@ def _char_symbols(col_name: str) -> Column:
     )
 
 
-def merge_pair_expr(syms: Column, left: str, right: str) -> Column:
-    """One BPE merge applied to a symbol array: greedy left-to-right,
-    non-overlapping — fold each symbol onto the output, replacing the
-    output's last element with ``left || right`` whenever (last ==
-    left, current == right). ``aaa`` under (a, a) becomes ``[aa, a]``,
-    the standard trainer behavior. Pure codegen fold, no UDF."""
-    merged = F.lit(left + right)
+def _merge_fold(
+    syms: Column, left: Column, right: Column, merged: Column
+) -> Column:
+    """Greedy left-to-right, non-overlapping merge of ``(left, right)``
+    over a symbol array: fold each symbol onto the output, replacing
+    the output's last element with ``merged`` whenever (last == left,
+    current == right)."""
     return F.aggregate(
         syms,
         F.expr("cast(array() as array<string>)"),
         lambda acc, x: F.when(
             (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (x == F.lit(right)),
+            & (F.element_at(acc, -1) == left)
+            & (x == right),
             F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
         ).otherwise(F.concat(acc, F.array(x))),
     )
+
+
+def merge_pair_expr(syms: Column, left: str, right: str) -> Column:
+    """One BPE merge applied to a symbol array: greedy left-to-right,
+    non-overlapping. ``aaa`` under (a, a) becomes ``[aa, a]``, the
+    standard trainer behavior. Pure codegen fold, no UDF; the one-merge
+    case of :func:`_merge_list_expr`."""
+    return _merge_fold(syms, F.lit(left), F.lit(right), F.lit(left + right))
+
+
+def _merge_list_expr(
+    syms: Column, merges: List[Tuple[str, str, int]]
+) -> Column:
+    """Every merge of ``merges`` applied in order, as ONE fold over an
+    ``array<struct<l, r>>`` literal of the merge list with
+    :func:`_merge_fold` nested inside: two ``aggregate`` calls whatever
+    the merge count (one nested fold per merge would put N lambdas into
+    the plan)."""
+    payload = json.dumps([{"l": m[0], "r": m[1]} for m in merges])
+    merge_list = F.from_json(
+        F.lit(payload), "array<struct<l:string,r:string>>"
+    )
+    return F.aggregate(
+        merge_list,
+        syms,
+        lambda acc, m: _merge_fold(
+            acc, m["l"], m["r"], F.concat(m["l"], m["r"])
+        ),
+    )
+
+
+def _merge_word(syms: List[str], left: str, right: str) -> List[str]:
+    """:func:`merge_pair_expr` on the driver: the same greedy
+    left-to-right, non-overlapping fold over one word's symbols."""
+    out: List[str] = []
+    for x in syms:
+        if out and out[-1] == left and x == right:
+            out[-1] = left + right
+        else:
+            out.append(x)
+    return out
 
 
 def _disjoint_prefix(
@@ -99,27 +149,6 @@ def _disjoint_prefix(
         batch.append((left, right, count))
         used |= {left, right}
     return batch
-
-
-def _pair_counts(vocab: DataFrame, syms_col: str) -> DataFrame:
-    """(pair, pair_count) over adjacent symbols, weighted by word
-    count — vocabulary-sized input, map-combined aggregation."""
-    # CASE guard: a fully merged word has size 1, and Spark's
-    # sequence(1, 0) would count DOWN ([1, 0]) where DuckDB's
-    # range(1, 1) is empty — both engines must yield zero pairs
-    pairs = vocab.select(
-        F.explode(
-            F.expr(
-                f"CASE WHEN size({syms_col}) < 2"
-                " THEN cast(array() as array<string>)"
-                f" ELSE transform(sequence(1, size({syms_col}) - 1),"
-                f" j -> concat({syms_col}[j - 1], '{PAIR_SEP}',"
-                f" {syms_col}[j])) END"
-            )
-        ).alias("pair"),
-        F.col("__c"),
-    )
-    return pairs.groupBy("pair").agg(F.sum("__c").alias("pair_count"))
 
 
 def bpe_learn(
@@ -142,26 +171,29 @@ def bpe_learn(
     ``n_merges`` (the SQL twin unrolls exactly ``n_merges``
     iterations, so a short corpus must fail loudly, not diverge).
 
-    Scale: ONE corpus-sized shuffle (the distinct-word collapse, pinned
-    vocabulary-sized), then per ROUND one aggregation over the vocab
-    frame and one bounded collect; each round's symbol column is
-    re-materialized into the pin so plans stay shallow (the Lloyd
-    pattern — no expression stacking across iterations).
+    Scale: ONE Spark action — the corpus-sized distinct-word collapse,
+    collected as ``(word, count)`` rows. The merge rounds run on the
+    driver over that table: pair counts weighted by word count, the
+    (count desc, pair asc) order — Python's code-point string order is
+    Spark's and DuckDB's UTF-8 byte order — and the same greedy fold as
+    :func:`merge_pair_expr`. The returned frame is one JSON literal
+    expanded by ``inline``: nothing is persisted or checkpointed.
 
-    ``merges_per_round`` batches the driver loop (round 13 — a
-    production 30k-merge vocab must not be 30k Spark jobs): each round
-    applies the longest PREFIX of the (count desc, pair asc)-sorted
-    candidates whose pairs are pairwise symbol-DISJOINT, stopping at
-    the first conflict, capped at ``merges_per_round``. Disjoint pairs
-    leave each other's counts untouched and their greedy folds
-    commute, so applying the prefix in one pass equals applying its
-    members sequentially. The one documented divergence from strict
-    one-at-a-time greedy: a batch member's merge can CREATE a pair
-    (containing its new symbol, count bounded by that member's count)
-    that strict greedy would have ranked before a LATER batch member —
-    the merge SET can differ near such ties. The default (1) is the
-    exact Sennrich order and what every declared oracle query uses;
-    the SQL twin replays ``merges_per_round=1`` only.
+    ``merges_per_round`` batches the selection: each round applies the
+    longest PREFIX of the (count desc, pair asc)-sorted candidates
+    whose pairs are pairwise symbol-DISJOINT, stopping at the first
+    conflict, capped at ``merges_per_round``. Disjoint pairs leave each
+    other's counts untouched and their greedy folds commute, so
+    applying the prefix in one pass equals applying its members
+    sequentially. It saves no Spark jobs (the loop runs none); it cuts
+    the driver's pair recounts, which happen once per round. The one
+    documented divergence from strict one-at-a-time greedy: a batch
+    member's merge can CREATE a pair (containing its new symbol, count
+    bounded by that member's count) that strict greedy would have
+    ranked before a LATER batch member — the merge SET can differ near
+    such ties. The default (1) is the exact Sennrich order and what
+    every declared oracle query uses; the SQL twin replays
+    ``merges_per_round=1`` only.
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
@@ -169,65 +201,51 @@ def bpe_learn(
         raise ValueError(
             f"merges_per_round must be positive, got {merges_per_round}"
         )
-    from pyspark import StorageLevel
-
-    from ..common.cache_registry import register_pinned, release
-
-    words = df.select(
-        F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), WORD_SPLIT_SPARK)
-        ).alias("__w")
-    ).where(F.length("__w") >= 2)
-    vocab = (
-        words.groupBy("__w")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .withColumn("__s", _char_symbols("__w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    merges: List[Tuple[str, str, int]] = []
-    current = vocab
-    try:
-        while len(merges) < n_merges:
-            m = min(merges_per_round, n_merges - len(merges))
-            best = (
-                _pair_counts(current, "__s")
-                .orderBy(F.col("pair_count").desc(), F.col("pair").asc())
-                .limit(m)
-                .collect()
-            )
-            if not best:
-                raise ValueError(
-                    f"vocabulary exhausted after {len(merges)} merges"
-                    f" (requested {n_merges})"
-                )
-            batch = _disjoint_prefix(
-                [(r["pair"], int(r["pair_count"])) for r in best]
-            )
-            merges.extend(batch)
-            col = F.col("__s")
-            for left, right, _ in batch:
-                col = merge_pair_expr(col, left, right)
-            # eager localCheckpoint, not persist+count: persist keeps
-            # the FULL logical lineage, so round r's plan carried r
-            # nested merge folds and Catalyst re-analysis grew
-            # quadratically with the merge count (measured gaps
-            # 0.4 -> 1.9 s across 4 wordpiece rounds, r13 receipts);
-            # the checkpoint truncates lineage to the materialized
-            # blocks — same rows, O(1) analysis per round (the
-            # connected_components precedent, guide §3.3)
-            nxt = current.withColumn("__s", col).localCheckpoint()
-            release(current)  # frees the checkpoint, not only a cache
-            current = nxt
-        out = current.select(
-            F.col("__w").alias("word"),
-            F.array_join("__s", PAIR_SEP).alias("segmentation"),
-            F.col("__c").alias("word_count"),
+    rows = (
+        df.select(
+            F.explode(
+                F.split(F.trim(F.lower(F.col(text_col))), WORD_SPLIT_SPARK)
+            ).alias("__w")
         )
-        return out, merges
-    finally:
-        # the caller's frame still reads from `current`'s pin; register
-        # it so sweep drivers reclaim it between queries
-        register_pinned(current)
+        .where(F.length("__w") >= 2)
+        .groupBy("__w")
+        .agg(F.count(F.lit(1)).alias("__c"))
+        .collect()
+    )
+    vocab = [(r["__w"], int(r["__c"]), list(r["__w"])) for r in rows]
+    merges: List[Tuple[str, str, int]] = []
+    while len(merges) < n_merges:
+        counts: Dict[str, int] = {}
+        for _, c, syms in vocab:
+            for left, right in zip(syms, syms[1:]):
+                pair = left + PAIR_SEP + right
+                counts[pair] = counts.get(pair, 0) + c
+        if not counts:
+            raise ValueError(
+                f"vocabulary exhausted after {len(merges)} merges"
+                f" (requested {n_merges})"
+            )
+        m = min(merges_per_round, n_merges - len(merges))
+        best = heapq.nsmallest(
+            m, counts.items(), key=lambda kv: (-kv[1], kv[0])
+        )
+        batch = _disjoint_prefix(best)
+        merges.extend(batch)
+        for left, right, _ in batch:
+            for _, _, syms in vocab:
+                syms[:] = _merge_word(syms, left, right)
+    payload = json.dumps(
+        [
+            {"word": w, "segmentation": PAIR_SEP.join(syms), "word_count": c}
+            for w, c, syms in vocab
+        ]
+    )
+    out = df.sparkSession.sql(
+        "SELECT inline(from_json(:p, 'array<struct<word:string,"
+        "segmentation:string,word_count:bigint>>'))",
+        args={"p": payload},
+    )
+    return out, merges
 
 
 def _merge_fold_sql(syms_expr: str, left_expr: str, right_expr: str) -> str:
@@ -326,14 +344,14 @@ def bpe_apply(
     Out-of-vocabulary words: pass ``merges`` (``bpe_learn``'s ordered
     merge list) and unseen words are segmented by applying the trained
     merges to their character arrays inline — exactly what the trained
-    tokenizer produces on NEW text, as a pure fold-expression chain
-    evaluated only on join misses. WITHOUT ``merges`` an OOV word
-    passes through as one unsegmented token — correct only for
-    same-corpus application (apply to the corpus the vocab was trained
-    on), so cross-corpus callers must pass ``merges``. Words shorter
-    than 2 characters carry no vocab row (the training filter) and
-    segment to themselves under either path; empty strings are
-    dropped.
+    tokenizer produces on NEW text, as one fold over the merge-list
+    literal (:func:`_merge_list_expr`) evaluated only on join misses.
+    WITHOUT ``merges`` an OOV word passes through as one unsegmented
+    token — correct only for same-corpus application (apply to the
+    corpus the vocab was trained on), so cross-corpus callers must pass
+    ``merges``. Words shorter than 2 characters carry no vocab row (the
+    training filter) and segment to themselves under either path; empty
+    strings are dropped.
     """
     words = df.select(
         F.col(id_col).alias("id"),
@@ -345,10 +363,9 @@ def bpe_apply(
         F.col("word").alias("__w"), F.col("segmentation").alias("__seg")
     )
     if merges is not None:
-        syms = _char_symbols("w")
-        for left, right, *_ in merges:
-            syms = merge_pair_expr(syms, left, right)
-        fallback = F.array_join(syms, PAIR_SEP)
+        fallback = F.array_join(
+            _merge_list_expr(_char_symbols("w"), merges), PAIR_SEP
+        )
     else:
         fallback = F.col("w")
     joined = words.join(

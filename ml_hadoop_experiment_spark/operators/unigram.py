@@ -284,10 +284,12 @@ def unigram_learn(
 
     from ..common.cache_registry import register_pinned
 
-    # LAZY materialization only: unlike bpe_learn (whose per-merge
-    # argmax forces a driver round-trip every iteration), nothing here
-    # depends on the driver — so the entire EM chain stays ONE lazy
-    # plan and the first action computes everything in a single job
+    # LAZY materialization only: unlike wordpiece_learn (whose
+    # per-merge argmax forces a driver round-trip every iteration) or
+    # bpe_learn (which collects the word counts and merges on the
+    # driver), nothing here reads back to the driver — so the EM
+    # chain stays ONE lazy plan and the first action computes
+    # everything in a single job
     # (measured: eager per-phase counts cost ~5 s of small-job
     # overhead at sf0.1; lazy, the whole train is ~1.5 s). The
     # per-iteration frames take a lazy localCheckpoint, not a plain

@@ -20,7 +20,9 @@ and implemented by the HuggingFace ``tokenizers`` WordPiece trainer
   piece vocabulary, and a word with any unmatchable position encodes to
   a single ``[UNK]`` token — both per the published algorithm.
 
-Execution shape follows ``bpe.bpe_learn`` exactly: the corpus collapses
+Execution shape is a Lloyd loop of Spark jobs (``bpe.bpe_learn``
+instead collects its word counts once and merges on the driver; this
+trainer still runs every round in Spark): the corpus collapses
 ONCE to the pinned distinct-word ``(word, count)`` frame (the only
 corpus-sized shuffle — at 100 TB the token stream is trillions of rows,
 the vocabulary is millions), each merge is two vocabulary-sized
@@ -50,7 +52,7 @@ from .bpe import (
     WORD_SPLIT_SPARK,
     WORD_SPLIT_SQL,
     _disjoint_prefix,
-    _pair_counts,
+    _merge_fold,
 )
 
 #: BERT-convention continuation marker for word-internal pieces
@@ -80,17 +82,30 @@ def merge_wp_pair_expr(syms: Column, left: str, right: str) -> Column:
     left-to-right, non-overlapping (the ``bpe.merge_pair_expr`` fold);
     the merged symbol is ``left ⊕ strip_cont(right)`` so it inherits
     the left symbol's word-position status."""
-    merged = F.lit(left + _strip_cont(right))
-    return F.aggregate(
-        syms,
-        F.expr("cast(array() as array<string>)"),
-        lambda acc, x: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(left))
-            & (x == F.lit(right)),
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged)),
-        ).otherwise(F.concat(acc, F.array(x))),
+    return _merge_fold(
+        syms, F.lit(left), F.lit(right), F.lit(left + _strip_cont(right))
     )
+
+
+def _pair_counts(vocab: DataFrame, syms_col: str) -> DataFrame:
+    """(pair, pair_count) over adjacent symbols, weighted by word
+    count — vocabulary-sized input, map-combined aggregation."""
+    # CASE guard: a fully merged word has size 1, and Spark's
+    # sequence(1, 0) would count DOWN ([1, 0]) where DuckDB's
+    # range(1, 1) is empty — both engines must yield zero pairs
+    pairs = vocab.select(
+        F.explode(
+            F.expr(
+                f"CASE WHEN size({syms_col}) < 2"
+                " THEN cast(array() as array<string>)"
+                f" ELSE transform(sequence(1, size({syms_col}) - 1),"
+                f" j -> concat({syms_col}[j - 1], '{PAIR_SEP}',"
+                f" {syms_col}[j])) END"
+            )
+        ).alias("pair"),
+        F.col("__c"),
+    )
+    return pairs.groupBy("pair").agg(F.sum("__c").alias("pair_count"))
 
 
 def _symbol_counts(vocab: DataFrame, syms_col: str) -> DataFrame:

@@ -57,7 +57,8 @@ FROM toks t LEFT JOIN vocab v ON t.tok = v.tok
 
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Tokenizer train-then-apply end-to-end (operators/bpe.bpe_learn
-    + bpe_apply): four merges trained on documents, then EVERY document
+    + bpe_apply): four merges trained on the driver from one collect of
+    the documents' word counts, then EVERY document
     segmented into its BPE token stream — (id, n_tokens, tokens) with
     the stream hash-checked whole (the llm_pipeline convention). The
     apply half segments each DISTINCT word exactly once (the trained
@@ -107,15 +108,15 @@ SQL_BPE_PAIRS = _sql_bpe_pairs()
 
 def q_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Iterative BPE merge training (operators/bpe.bpe_learn): FOUR
-    driver-gated merge rounds — pair statistics over the pinned
-    distinct-word vocabulary, argmax under the (count desc, pair asc)
-    total order, greedy left-to-right merge fold — returning the WHOLE
-    segmented vocabulary (word, segmentation, word_count), so the gate
-    hash checks every merge decision on every word. The oracle replays
-    the entire loop in one DuckDB statement of unrolled per-iteration
-    CTEs (the kmeans_ctes precedent for data-dependent iteration).
-    One corpus-sized shuffle total (the distinct-word collapse); each
-    merge is a vocabulary-sized aggregation + a 1-row collect."""
+    merge rounds — weighted pair counts over the distinct-word
+    vocabulary, argmax under the (count desc, pair asc) total order,
+    greedy left-to-right merge fold — returning the WHOLE segmented
+    vocabulary (word, segmentation, word_count), so the gate hash
+    checks every merge decision on every word. The oracle replays the
+    entire loop in one DuckDB statement of unrolled per-iteration CTEs
+    (the kmeans_ctes precedent for data-dependent iteration). One Spark
+    action total: the distinct-word collapse, collected once; the
+    rounds run on the driver over those word counts."""
     from ml_hadoop_experiment_spark.operators.bpe import bpe_learn
 
     docs = _t(spark, sf_dir, "documents")

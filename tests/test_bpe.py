@@ -64,9 +64,9 @@ class TestBpeLearn:
         assert counts["low"] == 4
 
     def test_release_pinned_frees_every_round_checkpoint(self, spark):
-        """Each round's localCheckpoint keeps its rows in a persisted RDD
-        that ``unpersist()`` does not reach: the per-round unpin frees all
-        but the last, and the sweep's ``release_pinned`` frees that one."""
+        """Training persists and checkpoints nothing: the returned frame
+        is a literal, so no persisted RDD is left behind either before or
+        after the sweep's ``release_pinned``."""
         from ml_hadoop_experiment_spark.common.cache_registry import (
             release_pinned,
         )
@@ -81,7 +81,7 @@ class TestBpeLearn:
         )
         out, _ = bpe_learn(docs, "text", n_merges=3)
         out.collect()
-        assert len(set(jsc.getPersistentRDDs()) - before) == 1
+        assert len(set(jsc.getPersistentRDDs()) - before) == 0
         release_pinned()
         assert set(jsc.getPersistentRDDs()) - before == set()
 
@@ -234,19 +234,43 @@ class TestBatchedMerges:
         n = 8
         calls = self._counting_collect(spark, monkeypatch)
         seg1, merges1 = bpe_learn(docs, "text", n)
+        seq_collects = calls["n"]
         out1 = sorted(tuple(r) for r in seg1.collect())
-        seq_rounds = calls["n"] - 1  # minus the result collect
         calls["n"] = 0
         seg4, merges4 = bpe_learn(docs, "text", n, merges_per_round=4)
+        batch_collects = calls["n"]
         out4 = sorted(tuple(r) for r in seg4.collect())
-        batch_rounds = calls["n"] - 1
         # result-equality with m=1 on the fixture (merge LIST and the
-        # full segmented vocabulary), with measurably fewer driver
-        # rounds (the jobs-per-vocab reduction)
+        # full segmented vocabulary); the rounds run on the driver, so
+        # either batch size costs exactly the one vocabulary collect
         assert merges4 == merges1
         assert out4 == out1
-        assert seq_rounds == n
-        assert batch_rounds < seq_rounds, (batch_rounds, seq_rounds)
+        assert seq_collects == 1
+        assert batch_collects == 1
+
+    @pytest.mark.parametrize("n", [1, 8])
+    def test_learn_is_one_collect_and_a_literal_frame(
+        self, spark, monkeypatch, n
+    ):
+        """Training is ONE Spark action whatever the merge count, and
+        the returned vocabulary is a JVM-side literal: no RDD-backed
+        relation (slow in the apply's broadcast join, and a pin to
+        release) and no Python node in its plan."""
+        import re
+
+        from ml_hadoop_experiment_spark.operators.bpe import bpe_learn
+
+        docs = spark.createDataFrame(self.CORPUS, "text string")
+        calls = self._counting_collect(spark, monkeypatch)
+        seg, merges = bpe_learn(docs, "text", n)
+        assert calls["n"] == 1
+        assert len(merges) == n
+        plan = seg._jdf.queryExecution().optimizedPlan().toString()
+        assert not re.search(r"LogicalRDD|ExistingRDD", plan), plan
+        assert not re.search(r"Python|Pandas|Arrow", plan), plan
+        assert seg.schema.simpleString() == (
+            "struct<word:string,segmentation:string,word_count:bigint>"
+        )
 
     def test_wordpiece_batched_equals_sequential(
         self, spark, monkeypatch
@@ -300,3 +324,132 @@ class TestBatchedMerges:
         docs = spark.createDataFrame(self.CORPUS, "text string")
         with pytest.raises(ValueError, match="merges_per_round"):
             bpe_learn(docs, "text", 2, merges_per_round=0)
+
+
+class TestAdversarialTwin:
+    """Spark and the DuckDB twin on words built to split the engines:
+    precomposed and combining-mark accents, CJK, an astral emoji (one
+    code point, two UTF-16 units, four UTF-8 bytes), the JSON and SQL
+    quoting characters, and count ties only the pair string breaks."""
+
+    DOCS = [
+        (1, "café café cafe\u0301 cafe\u0301 cafe\u0301 cafe\u0301 naïve"),
+        (2, "中文 中文 中文 中文 中文 中国 文化"),
+        (3, "😀😀 😀😀 😀😀 😀😀 😀😀 ａａ ａａ ａａ ａａ ａａ a😀b"),
+        (4, "don't don't say\"hi\" say\"hi\" a\\b a\\b a\\b a\\b c:\\\\dir"),
+        (5, "\u00e9\u00e9 e\u0301e\u0301 a b"),
+    ]
+    # The first 8 merges: (a, f) over (c, a), both 6; (c, af); the
+    # combining mark (e, U+0301); then "中 文", "ａ ａ" and "😀 😀", all
+    # 5 — code-point order puts U+FF41 before U+1F600, where UTF-16
+    # order would not; then backslash-b and a-backslash-b, both 4.
+    MERGES = [
+        ("a", "f"), ("c", "af"), ("e", "\u0301"), ("中", "文"),
+        ("ａ", "ａ"), ("😀", "😀"), ("\\", "b"), ("a", "\\b"),
+    ]
+
+    @pytest.fixture(scope="class")
+    def duck(self):
+        import duckdb
+
+        con = duckdb.connect()
+        con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO docs VALUES (?, ?)", self.DOCS)
+        yield con
+        con.close()
+
+    def test_learn_and_apply_match_sql_twin(self, spark, duck):
+        from ml_hadoop_experiment_spark.operators.bpe import (
+            bpe_apply,
+            bpe_apply_sql,
+            bpe_learn,
+            bpe_learn_sql,
+        )
+
+        n = 8
+        docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
+        vocab, merges = bpe_learn(docs, "text", n)
+        assert [(m[0], m[1]) for m in merges] == self.MERGES
+        got = sorted(map(tuple, vocab.collect()))
+        want = sorted(map(tuple, duck.execute(
+            bpe_learn_sql("docs", "text", n)
+        ).fetchall()))
+        assert got == want
+        got = sorted(map(tuple, bpe_apply(
+            docs, "doc_id", "text", vocab, merges=merges
+        ).collect()))
+        want = sorted(map(tuple, duck.execute(
+            bpe_apply_sql("docs", "doc_id", "text", n)
+        ).fetchall()))
+        assert got == want
+
+
+class TestMergeListFold:
+    """``bpe_apply``'s out-of-vocabulary fallback: the whole merge list
+    as one array-of-struct literal folded over each word."""
+
+    TRAIN = [
+        ("low low low lower lowest new newer newest wide wider widest",),
+        ("slow slower slowest deep deeper deepest steep steeper steepest",),
+        ("it's it's don't don't a\\b a\\b",),
+    ]
+    # no word of this corpus is in the training vocabulary
+    NEW = [
+        (1, "lowers newly widen deepen steepness slowness"),
+        (2, "sweeper wideness isn't won't a\\bc lowed"),
+    ]
+
+    def test_fallback_equals_chained_merges(self, spark):
+        from ml_hadoop_experiment_spark.operators.bpe import (
+            PAIR_SEP,
+            _char_symbols,
+            bpe_apply,
+            bpe_learn,
+            merge_pair_expr,
+        )
+
+        train = spark.createDataFrame(self.TRAIN, "text string")
+        vocab, merges = bpe_learn(train, "text", 20)
+        assert len(merges) == 20
+        new = spark.createDataFrame(self.NEW, "doc_id long, text string")
+        trained = {r["word"] for r in vocab.collect()}
+        words = [w for _, t in self.NEW for w in t.split()]
+        assert not trained & set(words)
+
+        got = {
+            r["id"]: r["tokens"].split(PAIR_SEP)
+            for r in bpe_apply(
+                new, "doc_id", "text", vocab, merges=merges
+            ).collect()
+        }
+        syms = _char_symbols("w")
+        for left, right, _ in merges:
+            syms = merge_pair_expr(syms, left, right)
+        chained = {
+            r["w"]: r["s"]
+            for r in spark.createDataFrame([(w,) for w in words], "w string")
+            .select("w", syms.alias("s"))
+            .collect()
+        }
+        for doc_id, text in self.NEW:
+            want = [s for w in text.split() for s in chained[w]]
+            assert got[doc_id] == want, doc_id
+        # the merges do apply to the unseen words
+        assert any(len(chained[w]) < len(w) for w in words)
+
+    def test_fallback_size_does_not_grow_with_merges(self, spark):
+        from ml_hadoop_experiment_spark.operators.bpe import (
+            bpe_apply,
+            bpe_learn,
+        )
+
+        train = spark.createDataFrame(self.TRAIN, "text string")
+        vocab, merges = bpe_learn(train, "text", 20)
+        new = spark.createDataFrame(self.NEW, "doc_id long, text string")
+
+        def n_aggregates(ms):
+            df = bpe_apply(new, "doc_id", "text", vocab, merges=ms)
+            plan = df._jdf.queryExecution().analyzed().toString()
+            return plan.count("aggregate(")
+
+        assert n_aggregates(merges[:1]) == n_aggregates(merges) > 0
