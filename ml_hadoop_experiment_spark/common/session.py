@@ -22,6 +22,16 @@ def session_defaults() -> dict[str, str]:
       (the reference relies on the same mechanism via ``pandas_udf``).
     - maxRecordsPerBatch bounds UDF peak memory (reference exposes the same
       control as ``batch_size``, common/spark_inference.py:130-143).
+    - Python workers fork from :mod:`.pydaemon`, pyspark's daemon with
+      ``zipimporter.invalidate_caches`` guarded by the archive's stat. On
+      CPython < 3.12 every task otherwise re-reads ``pyspark.zip``'s
+      directory about 16 times: 0.27-0.35 s of CPU per task before it
+      touches a row, on a reused worker too (a 1-row ``mapInPandas`` took
+      0.62 s on ``local[4]``, 4-vCPU Xeon). Executors' Python must import
+      this package when the daemon starts, so it has to be installed in
+      their environment (or on their ``PYTHONPATH``); shipping it only
+      with ``--py-files`` is not enough, since those reach a worker after
+      the daemon has started.
     """
     return {
         "spark.sql.adaptive.enabled": "true",
@@ -49,7 +59,13 @@ def session_defaults() -> dict[str, str]:
         # silently ignores it. get_session verifies the live value after
         # getOrCreate and warns when the 100-entry default survived.
         "spark.sql.codegen.cache.maxEntries": "8192",
+        # static too: the daemon starts with the SparkContext
+        "spark.python.daemon.module": "ml_hadoop_experiment_spark.common.pydaemon",
     }
+
+
+#: confs that bind only when the SparkContext is created
+_STATIC_KEYS = ("spark.sql.codegen.cache.maxEntries", "spark.python.daemon.module")
 
 
 def get_session(
@@ -73,26 +89,25 @@ def get_session(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
-    # spark.sql.codegen.cache.maxEntries is a StaticSQLConf: the builder
-    # value binds only when THIS call created the first session in the
-    # JVM. If we attached to a pre-existing session that still runs the
-    # 100-entry default, say so — query-diverse sweeps will thrash the
-    # codegen cache (BASELINE.md "Round-12 re-adjudication").
-    want = session_defaults().get("spark.sql.codegen.cache.maxEntries")
-    if want is not None:
-        try:
-            live = spark.conf.get("spark.sql.codegen.cache.maxEntries")
-        except Exception:
-            live = None
-        if live is not None and live != want:
+    # Static confs bind only when THIS call created the SparkContext, and
+    # its conf holds what bound (the session conf echoes the value asked
+    # for). If we attached to a pre-existing context that runs another
+    # value, say so: a 100-entry codegen cache thrashes on query-diverse
+    # sweeps (BASELINE.md "Round-12 re-adjudication"); pyspark's own
+    # daemon re-reads pyspark.zip on every Python task.
+    try:
+        conf = spark.sparkContext.getConf()
+    except AttributeError:  # Spark Connect: no context to read
+        return spark
+    wanted = {**session_defaults(), **(extra_conf or {})}
+    for key in _STATIC_KEYS:
+        want, live = wanted[key], conf.get(key, "unset")
+        if live != want:
             import warnings
 
             warnings.warn(
-                "spark.sql.codegen.cache.maxEntries is "
-                f"{live} (wanted {want}): static conf ignored by "
-                "getOrCreate on a pre-existing session; query-diverse "
-                "workloads will re-pay codegen compiles on cache "
-                "eviction",
+                f"{key} is {live} (wanted {want}): static conf ignored by "
+                "getOrCreate on a pre-existing session",
                 RuntimeWarning,
                 stacklevel=2,
             )

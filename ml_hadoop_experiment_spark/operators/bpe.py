@@ -132,6 +132,11 @@ def _merge_word(syms: List[str], left: str, right: str) -> List[str]:
     return out
 
 
+def _pairs(syms: List[str]) -> List[str]:
+    """A word's adjacent symbol pairs, each joined by ``PAIR_SEP``."""
+    return [left + PAIR_SEP + right for left, right in zip(syms, syms[1:])]
+
+
 def _disjoint_prefix(
     cands: List[Tuple[str, int]],
 ) -> List[Tuple[str, str, int]]:
@@ -176,7 +181,9 @@ def bpe_learn(
     driver over that table: pair counts weighted by word count, the
     (count desc, pair asc) order — Python's code-point string order is
     Spark's and DuckDB's UTF-8 byte order — and the same greedy fold as
-    :func:`merge_pair_expr`. The returned frame is one JSON literal
+    :func:`merge_pair_expr`. A pair-to-words index keeps the counts:
+    a merge re-folds and re-counts only the words that contain its
+    pair. The returned frame is one JSON literal
     expanded by ``inline``: nothing is persisted or checkpointed.
 
     ``merges_per_round`` batches the selection: each round applies the
@@ -186,7 +193,7 @@ def bpe_learn(
     other's counts untouched and their greedy folds commute, so
     applying the prefix in one pass equals applying its members
     sequentially. It saves no Spark jobs (the loop runs none); it cuts
-    the driver's pair recounts, which happen once per round. The one
+    the driver's scans for the top pairs, one per round. The one
     documented divergence from strict one-at-a-time greedy: a batch
     member's merge can CREATE a pair (containing its new symbol, count
     bounded by that member's count) that strict greedy would have
@@ -213,27 +220,46 @@ def bpe_learn(
         .collect()
     )
     vocab = [(r["__w"], int(r["__c"]), list(r["__w"])) for r in rows]
+    # weighted pair counts, and the words each pair occurs in: a merge
+    # re-counts only the words that contain its pair (Sennrich's
+    # reference trainer keeps the same index)
+    counts: Dict[str, int] = {}
+    where: Dict[str, set] = {}
+    for i, (_, c, syms) in enumerate(vocab):
+        for pair in _pairs(syms):
+            counts[pair] = counts.get(pair, 0) + c
+            where.setdefault(pair, set()).add(i)
     merges: List[Tuple[str, str, int]] = []
     while len(merges) < n_merges:
-        counts: Dict[str, int] = {}
-        for _, c, syms in vocab:
-            for left, right in zip(syms, syms[1:]):
-                pair = left + PAIR_SEP + right
-                counts[pair] = counts.get(pair, 0) + c
         if not counts:
             raise ValueError(
                 f"vocabulary exhausted after {len(merges)} merges"
                 f" (requested {n_merges})"
             )
         m = min(merges_per_round, n_merges - len(merges))
-        best = heapq.nsmallest(
-            m, counts.items(), key=lambda kv: (-kv[1], kv[0])
-        )
+        # only pairs at or above the m-th highest count need the sort key
+        floor = heapq.nlargest(m, counts.values())[-1]
+        best = sorted(
+            (kv for kv in counts.items() if kv[1] >= floor),
+            key=lambda kv: (-kv[1], kv[0]),
+        )[:m]
         batch = _disjoint_prefix(best)
         merges.extend(batch)
         for left, right, _ in batch:
-            for _, _, syms in vocab:
+            for i in list(where[left + PAIR_SEP + right]):
+                _, c, syms = vocab[i]
+                old = _pairs(syms)
                 syms[:] = _merge_word(syms, left, right)
+                new = _pairs(syms)
+                for pair in old:
+                    counts[pair] -= c
+                for pair in new:
+                    counts[pair] = counts.get(pair, 0) + c
+                    where.setdefault(pair, set()).add(i)
+                for pair in set(old).difference(new):
+                    where[pair].discard(i)
+                    if not counts[pair]:
+                        del counts[pair], where[pair]
     payload = json.dumps(
         [
             {"word": w, "segmentation": PAIR_SEP.join(syms), "word_count": c}

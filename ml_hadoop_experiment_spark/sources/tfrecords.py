@@ -32,7 +32,7 @@ import glob
 import gzip
 import os
 import struct
-from typing import Any, Dict, Iterable, Iterator, List, Optional, Tuple
+from typing import Any, Callable, Dict, Iterable, Iterator, List, Optional, Tuple
 
 import numpy as np
 import pandas as pd
@@ -657,57 +657,17 @@ def read_tfrecords(
     specs: FeatureSpecs,
     compression: Optional[str] = "gzip",
 ) -> DataFrame:
-    """Distributed TFRecord source: each task parses its own files.
-
-    Files are listed driver-side (cheap), parsing is executor-side. Part
-    files beginning with ``_`` are skipped (reference tfrecords.py:265-267).
-    """
-    files = sorted(
-        f
-        for f in glob.glob(os.path.join(path, "*"))
-        if not os.path.basename(f).startswith("_")
-    )
-    schema_fields = []
-    for name, spec in specs.items():
-        base = {
-            "int32": "int",
-            "int64": "bigint",
-            "float32": "float",
-            "float64": "double",
-            "string": "string",
-        }[spec.dtype]
-        if isinstance(spec, FixedLenFeature) and not spec.shape:
-            schema_fields.append(f"`{name}` {base}")
-        else:
-            schema_fields.append(f"`{name}` array<{base}>")
-    schema = ", ".join(schema_fields)
+    """Distributed TFRecord source: each task parses its own file (see
+    :func:`_read_source`)."""
     spec_items = dict(specs)
-
-    files_df = spark.createDataFrame([(f,) for f in files], "file string").repartition(
-        max(1, len(files))
+    return _read_source(
+        spark,
+        path,
+        compression,
+        _spark_schema(specs, {}),
+        lambda rec: parse_example_bytes(rec, spec_items),
     )
 
-    def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath in pdf["file"]:
-                rows = [
-                    parse_example_bytes(rec, spec_items)
-                    for rec in read_tfrecord_file(fpath, compression)
-                ]
-                if rows:
-                    yield pd.DataFrame(rows)
-
-    return files_df.mapInPandas(_read, schema)
-
-
-# --------------------------------------------------------------------------
-# Distributed SequenceExample source / sink. The engine-level twins of the
-# reference's driver-side sequence reader (tensorflow/tfrecords.py:60-72):
-# each task parses/writes its own files; only (path, count) reaches the
-# driver. Schema mapping: context scalar spec -> scalar column, context
-# varlen/shaped -> array column, sequence scalar spec -> array (one element
-# per step), sequence varlen/shaped -> array<array>.
-# --------------------------------------------------------------------------
 
 _BASE_TYPES = {
     "int32": "int",
@@ -718,21 +678,61 @@ _BASE_TYPES = {
 }
 
 
-def _sequence_schema(context_specs: FeatureSpecs, sequence_specs: FeatureSpecs) -> str:
+def _spark_schema(context_specs: FeatureSpecs, sequence_specs: FeatureSpecs) -> str:
+    """Context scalar spec -> scalar column, context varlen/shaped ->
+    array; sequence scalar spec -> array (one element per step), sequence
+    varlen/shaped -> array<array>. An Example has context specs only."""
     fields = []
-    for name, spec in context_specs.items():
-        base = _BASE_TYPES[spec.dtype]
-        if isinstance(spec, FixedLenFeature) and not spec.shape:
-            fields.append(f"`{name}` {base}")
-        else:
-            fields.append(f"`{name}` array<{base}>")
-    for name, spec in sequence_specs.items():
-        base = _BASE_TYPES[spec.dtype]
-        if isinstance(spec, FixedLenFeature) and not spec.shape:
-            fields.append(f"`{name}` array<{base}>")
-        else:
-            fields.append(f"`{name}` array<array<{base}>>")
+    for specs, nest in ((context_specs, 0), (sequence_specs, 1)):
+        for name, spec in specs.items():
+            scalar = isinstance(spec, FixedLenFeature) and not spec.shape
+            depth = nest + (0 if scalar else 1)
+            base = _BASE_TYPES[spec.dtype]
+            fields.append(f"`{name}` " + "array<" * depth + base + ">" * depth)
     return ", ".join(fields)
+
+
+def _read_source(
+    spark: SparkSession,
+    path: str,
+    compression: Optional[str],
+    schema: str,
+    parse: Callable[[bytes], Dict[str, Any]],
+) -> DataFrame:
+    """Files are listed driver-side (cheap), parsing is executor-side,
+    one task per file, ``parse`` turning each record into a row. Part
+    files beginning with ``_`` are skipped (reference tfrecords.py:265-267).
+
+    The file list is a JVM-side frame with one partition per file: a
+    ``range`` picking its path out of a literal array. A Python-side list
+    would need a shuffle to spread its few rows over the tasks.
+    """
+    files = sorted(
+        f
+        for f in glob.glob(os.path.join(path, "*"))
+        if not os.path.basename(f).startswith("_")
+    )
+    paths = F.array(*[F.lit(f) for f in files]).cast("array<string>")
+    files_df = spark.range(len(files), numPartitions=max(1, len(files))).select(
+        F.element_at(paths, F.col("id").cast("int") + 1).alias("file")
+    )
+
+    def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for fpath in pdf["file"]:
+                rows = [parse(rec) for rec in read_tfrecord_file(fpath, compression)]
+                if rows:
+                    yield pd.DataFrame(rows)
+
+    return files_df.mapInPandas(_read, schema)
+
+
+# --------------------------------------------------------------------------
+# Distributed SequenceExample source / sink. The engine-level twins of the
+# reference's driver-side sequence reader (tensorflow/tfrecords.py:60-72):
+# each task parses/writes its own files; only (path, count) reaches the
+# driver. Schema mapping: ``_spark_schema``.
+# --------------------------------------------------------------------------
 
 
 def write_sequence_tfrecords(
@@ -791,30 +791,15 @@ def read_sequence_tfrecords(
     sequence_specs: FeatureSpecs,
     compression: Optional[str] = "gzip",
 ) -> DataFrame:
-    """Distributed SequenceExample source; schema per ``_sequence_schema``.
-    Files are listed driver-side, parsed executor-side; ``_*`` part files
-    are skipped like the Example source."""
-    files = sorted(
-        f
-        for f in glob.glob(os.path.join(path, "*"))
-        if not os.path.basename(f).startswith("_")
-    )
-    schema = _sequence_schema(context_specs, sequence_specs)
+    """Distributed SequenceExample source; schema per ``_spark_schema``,
+    files read like the Example source (:func:`_read_source`)."""
     ctx_items, seq_items = dict(context_specs), dict(sequence_specs)
 
-    files_df = spark.createDataFrame([(f,) for f in files], "file string").repartition(
-        max(1, len(files))
+    def _parse(rec: bytes) -> Dict[str, Any]:
+        ctx, seq = parse_sequence_example_bytes(rec, ctx_items, seq_items)
+        ctx.update(seq)
+        return ctx
+
+    return _read_source(
+        spark, path, compression, _spark_schema(context_specs, sequence_specs), _parse
     )
-
-    def _read(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath in pdf["file"]:
-                rows = []
-                for rec in read_tfrecord_file(fpath, compression):
-                    ctx, seq = parse_sequence_example_bytes(rec, ctx_items, seq_items)
-                    ctx.update(seq)
-                    rows.append(ctx)
-                if rows:
-                    yield pd.DataFrame(rows)
-
-    return files_df.mapInPandas(_read, schema)

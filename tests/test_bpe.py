@@ -85,6 +85,34 @@ class TestBpeLearn:
         release_pinned()
         assert set(jsc.getPersistentRDDs()) - before == set()
 
+    def test_merge_refolds_only_words_with_its_pair(self, spark, monkeypatch):
+        """A merge re-folds the words that contain its pair, not the
+        whole vocabulary; the result matches the toy corpus above."""
+        from ml_hadoop_experiment_spark.operators import bpe
+
+        folded = []
+        real = bpe._merge_word
+
+        def _counting(syms, left, right):
+            folded.append("".join(syms))
+            return real(syms, left, right)
+
+        monkeypatch.setattr(bpe, "_merge_word", _counting)
+        docs = spark.createDataFrame(
+            [("low low low lower lowest cat dog fix",), ("new newer newest low",)],
+            "text string",
+        )
+        out, merges = bpe.bpe_learn(docs, "text", n_merges=3)
+        assert [(m[0], m[1]) for m in merges] == [
+            ("l", "o"), ("lo", "w"), ("e", "w"),
+        ]
+        # 'l o' and 'lo w': low, lower, lowest; 'e w': new, newer, newest
+        assert sorted(folded) == sorted(
+            ["low", "lower", "lowest"] * 2 + ["new", "newer", "newest"]
+        )
+        seg = {r["word"]: r["segmentation"] for r in out.collect()}
+        assert seg["newer"] == "n ew e r" and seg["cat"] == "c a t"
+
     def test_guards(self, spark):
         from ml_hadoop_experiment_spark.operators.bpe import bpe_learn
 

@@ -161,6 +161,36 @@ def test_distributed_reader_multi_file(spark, tmp_path):
     assert "MapInPandas" in plan
 
 
+def test_sources_plan_no_shuffle(spark, tmp_path):
+    """The file list is a JVM-side frame with one partition per file, so
+    neither source shuffles before its parse; an empty directory reads
+    as an empty frame with the spec schema."""
+    from ml_hadoop_experiment_spark.sources.tfrecords import (
+        read_sequence_tfrecords,
+        to_example_bytes,
+    )
+
+    specs = {"x": FixedLenFeature((), "int64", default_value=0)}
+    out = tmp_path / "three"
+    out.mkdir()
+    for i in range(3):
+        write_tfrecord_file(
+            str(out / f"part-{i:05d}"), [to_example_bytes({"x": i}, specs)]
+        )
+    for back in (
+        read_tfrecords(spark, str(out), specs),
+        read_sequence_tfrecords(spark, str(out), specs, {}),
+    ):
+        back.collect()
+        plan = back._jdf.queryExecution().executedPlan().toString()
+        assert "Exchange" not in plan and "MapInPandas" in plan
+        assert back.rdd.getNumPartitions() == 3
+        assert sorted(r["x"] for r in back.collect()) == [0, 1, 2]
+    (tmp_path / "empty").mkdir()
+    empty = read_tfrecords(spark, str(tmp_path / "empty"), specs)
+    assert empty.collect() == [] and empty.schema.simpleString() == "struct<x:bigint>"
+
+
 def test_events_reader(tmp_path):
     """Build a synthetic event file with the public wire format and read it
     back (reference golden shape: tests/tensorflow/test_events.py:26-43)."""

@@ -1,10 +1,13 @@
 #!/usr/bin/env python
 """Generate the plan-shape table in SCALE.md from the ACTUAL physical plans
 of every declared query: shuffle count, Python crossings, codegen spans,
-broadcasts, scan column width. Run: python tools/plan_report.py"""
+broadcasts, scan column width, on the tests' smoke fixture
+(``SPARK_GRAFT_SMOKE_DIR``, default as in tests/conftest.py).
+Run: PYTHONPATH=. python tools/plan_report.py"""
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
@@ -15,13 +18,13 @@ from ml_hadoop_experiment_spark.plans.optimize import (
     wholestage_codegen_spans,
 )
 from ml_hadoop_experiment_spark.queries import QUERIES
+from tests.conftest import SF_SMOKE
 
 # A BroadcastNestedLoopJoin is fine when its build side is BOUNDED (a
 # 1-row totals frame, a k-row sketch/dim); above this many build rows
 # it is flagged as data-sized. Matches tests/test_plans.py's guard.
 BNLJ_BOUND = 4096
 
-SF_DIR = "/root/testdata/sf0.001"
 # streaming queries execute eagerly inside the callable; their batch plan
 # against the memory sink is not the streaming plan — report them separately
 STREAMING = {
@@ -40,6 +43,7 @@ STREAMING = {
     "streaming_quantiles",
     "streaming_moments",
     "streaming_psi",
+    "streaming_simhash",
 }
 
 
@@ -67,7 +71,7 @@ def main() -> None:
         if name in STREAMING:
             rows.append((name, "streaming (stateful; plan owned by the micro-batch engine)"))
             continue
-        df = QUERIES[name](spark, SF_DIR)
+        df = QUERIES[name](spark, SF_SMOKE)
         plan = executed_plan_str(df)
         d = describe(plan)
         spans = wholestage_codegen_spans(df)
@@ -93,7 +97,7 @@ def main() -> None:
                     "DATA-SIZED (!))"
                 )
         rows.append((name, cell))
-    print("| query | plan shape (measured at sf0.001) |")
+    print(f"| query | plan shape (measured at {os.path.basename(SF_SMOKE)}) |")
     print("|---|---|")
     for name, cell in rows:
         print(f"| {name} | {cell} |")
