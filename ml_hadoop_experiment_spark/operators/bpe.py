@@ -17,10 +17,12 @@ stream is trillions, and it is the ONLY corpus-sized shuffle), and
 that table is collected to the driver in one action, the way
 vocabulary building collects its distinct-value aggregation. The
 merge loop then runs in plain Python over the in-memory word counts,
-as Sennrich's reference trainer does, and the segmented vocabulary
-goes back to Spark as one JSON string literal expanded by ``inline`` —
-a JVM-side frame with no RDD lineage, cheap to broadcast. A vocabulary
-too large for the driver fails loudly at ``spark.driver.maxResultSize``.
+as Sennrich's reference trainer does (:func:`_train_merges`, which
+``wordpiece.wordpiece_learn`` shares with its own pick and merged
+symbol), and the segmented vocabulary goes back to Spark as one JSON
+string literal expanded by ``inline`` — a JVM-side frame with no RDD
+lineage, cheap to broadcast. A vocabulary too large for the driver
+fails loudly at ``spark.driver.maxResultSize``.
 
 Applying merges to new text (:func:`bpe_apply`) stays a pure
 ``aggregate`` fold expression — the merge list is one array-of-struct
@@ -43,11 +45,10 @@ Reference parity: criteo/ml-hadoop-experiment has no tokenizer surface
 
 from __future__ import annotations
 
-import heapq
 import json
-from typing import Dict, List, Optional, Tuple
+from typing import Callable, Dict, List, Optional, Tuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 #: symbols never contain whitespace (words are split on whitespace), so
@@ -120,13 +121,16 @@ def _merge_list_expr(
     )
 
 
-def _merge_word(syms: List[str], left: str, right: str) -> List[str]:
+def _merge_word(
+    syms: List[str], left: str, right: str, merged: str
+) -> List[str]:
     """:func:`merge_pair_expr` on the driver: the same greedy
-    left-to-right, non-overlapping fold over one word's symbols."""
+    left-to-right, non-overlapping fold over one word's symbols, each
+    ``(left, right)`` occurrence replaced by ``merged``."""
     out: List[str] = []
     for x in syms:
         if out and out[-1] == left and x == right:
-            out[-1] = left + right
+            out[-1] = merged
         else:
             out.append(x)
     return out
@@ -137,30 +141,107 @@ def _pairs(syms: List[str]) -> List[str]:
     return [left + PAIR_SEP + right for left, right in zip(syms, syms[1:])]
 
 
-def _disjoint_prefix(
-    cands: List[Tuple[str, int]],
-) -> List[Tuple[str, str, int]]:
-    """Longest prefix of the sorted ``(pair, count)`` candidates whose
-    pairs share no symbol, STOPPING at the first conflict (skipping
-    past one would reorder the greedy sequence): the safe batch whose
-    one-pass application equals sequential application. Returns
-    ``[(left, right, count)]`` in selection order."""
-    batch: List[Tuple[str, str, int]] = []
-    used: set = set()
-    for pair, count in cands:
-        left, right = pair.split(PAIR_SEP, 1)
-        if batch and ({left, right} & used):
-            break
-        batch.append((left, right, count))
-        used |= {left, right}
-    return batch
+def _distinct_words(df: DataFrame, text_col: str) -> DataFrame:
+    """``(__w, __c)`` distinct-word frame shared by the three trainers:
+    split ``trim(lower(text))`` on the explicit whitespace class, keep
+    words of length >= 2, count each word."""
+    return (
+        df.select(
+            F.explode(
+                F.split(F.trim(F.lower(F.col(text_col))), WORD_SPLIT_SPARK)
+            ).alias("__w")
+        )
+        .where(F.length("__w") >= 2)
+        .groupBy("__w")
+        .agg(F.count(F.lit(1)).alias("__c"))
+    )
+
+
+def _train_merges(
+    spark: SparkSession,
+    vocab: List[Tuple[str, int, List[str]]],
+    n_merges: int,
+    merged: Callable[[str, str], str],
+    pick: Callable[[Dict[str, int], Dict[str, int]], str],
+) -> Tuple[DataFrame, List[Tuple[str, str, int]]]:
+    """The driver merge loop of both pair-merge trainers over the
+    collected ``(word, count, initial symbols)`` vocabulary.
+
+    Each round ``pick(pair_counts, symbol_counts)`` chooses the next
+    pair (counts weighted by word count), every occurrence of it folds
+    to ``merged(left, right)``, and the counts are updated. A
+    pair-to-words index keeps the update incremental: a merge re-folds
+    and re-counts only the words that contain its pair (Sennrich's
+    reference trainer keeps the same index). Returns the segmented
+    vocabulary as one JSON literal expanded by ``inline`` (nothing
+    persisted or checkpointed) and the ordered
+    ``[(left, right, pair_count)]`` merge list."""
+    counts: Dict[str, int] = {}
+    where: Dict[str, set] = {}
+    sym_counts: Dict[str, int] = {}
+    for i, (_, c, syms) in enumerate(vocab):
+        for pair in _pairs(syms):
+            counts[pair] = counts.get(pair, 0) + c
+            where.setdefault(pair, set()).add(i)
+        for sym in syms:
+            sym_counts[sym] = sym_counts.get(sym, 0) + c
+    merges: List[Tuple[str, str, int]] = []
+    while len(merges) < n_merges:
+        if not counts:
+            raise ValueError(
+                f"vocabulary exhausted after {len(merges)} merges"
+                f" (requested {n_merges})"
+            )
+        best = pick(counts, sym_counts)
+        left, right = best.split(PAIR_SEP, 1)
+        new_sym = merged(left, right)
+        merges.append((left, right, counts[best]))
+        for i in list(where[best]):
+            _, c, syms = vocab[i]
+            old = _pairs(syms)
+            n_syms = len(syms)
+            syms[:] = _merge_word(syms, left, right, new_sym)
+            new = _pairs(syms)
+            # each fold of (left, right) trades one left and one right
+            # for one merged symbol
+            k = (n_syms - len(syms)) * c
+            sym_counts[left] -= k
+            sym_counts[right] -= k
+            sym_counts[new_sym] = sym_counts.get(new_sym, 0) + k
+            for pair in old:
+                counts[pair] -= c
+            for pair in new:
+                counts[pair] = counts.get(pair, 0) + c
+                where.setdefault(pair, set()).add(i)
+            for pair in set(old).difference(new):
+                where[pair].discard(i)
+                if not counts[pair]:
+                    del counts[pair], where[pair]
+    payload = json.dumps(
+        [
+            {"word": w, "segmentation": PAIR_SEP.join(syms), "word_count": c}
+            for w, c, syms in vocab
+        ]
+    )
+    out = spark.sql(
+        "SELECT inline(from_json(:p, 'array<struct<word:string,"
+        "segmentation:string,word_count:bigint>>'))",
+        args={"p": payload},
+    )
+    return out, merges
+
+
+def _most_frequent(counts: Dict[str, int], _sym_counts: Dict[str, int]) -> str:
+    """BPE's pick: the highest pair count, ties to the smallest pair
+    string."""
+    top = max(counts.values())
+    return min(pair for pair, c in counts.items() if c == top)
 
 
 def bpe_learn(
     df: DataFrame,
     text_col: str,
     n_merges: int,
-    merges_per_round: int = 1,
 ) -> Tuple[DataFrame, List[Tuple[str, str, int]]]:
     """Train ``n_merges`` BPE merges on the corpus; returns
     ``(segmented_vocab, merges)`` where ``segmented_vocab`` is
@@ -178,100 +259,20 @@ def bpe_learn(
 
     Scale: ONE Spark action — the corpus-sized distinct-word collapse,
     collected as ``(word, count)`` rows. The merge rounds run on the
-    driver over that table: pair counts weighted by word count, the
-    (count desc, pair asc) order — Python's code-point string order is
-    Spark's and DuckDB's UTF-8 byte order — and the same greedy fold as
-    :func:`merge_pair_expr`. A pair-to-words index keeps the counts:
-    a merge re-folds and re-counts only the words that contain its
-    pair. The returned frame is one JSON literal
-    expanded by ``inline``: nothing is persisted or checkpointed.
-
-    ``merges_per_round`` batches the selection: each round applies the
-    longest PREFIX of the (count desc, pair asc)-sorted candidates
-    whose pairs are pairwise symbol-DISJOINT, stopping at the first
-    conflict, capped at ``merges_per_round``. Disjoint pairs leave each
-    other's counts untouched and their greedy folds commute, so
-    applying the prefix in one pass equals applying its members
-    sequentially. It saves no Spark jobs (the loop runs none); it cuts
-    the driver's scans for the top pairs, one per round. The one
-    documented divergence from strict one-at-a-time greedy: a batch
-    member's merge can CREATE a pair (containing its new symbol, count
-    bounded by that member's count) that strict greedy would have
-    ranked before a LATER batch member — the merge SET can differ near
-    such ties. The default (1) is the exact Sennrich order and what
-    every declared oracle query uses; the SQL twin replays
-    ``merges_per_round=1`` only.
+    driver over that table (:func:`_train_merges`): pair counts
+    weighted by word count, the (count desc, pair asc) order —
+    Python's code-point string order is Spark's and DuckDB's UTF-8
+    byte order — and the same greedy fold as :func:`merge_pair_expr`.
+    The returned frame is one JSON literal expanded by ``inline``:
+    nothing is persisted or checkpointed.
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
-    if merges_per_round < 1:
-        raise ValueError(
-            f"merges_per_round must be positive, got {merges_per_round}"
-        )
-    rows = (
-        df.select(
-            F.explode(
-                F.split(F.trim(F.lower(F.col(text_col))), WORD_SPLIT_SPARK)
-            ).alias("__w")
-        )
-        .where(F.length("__w") >= 2)
-        .groupBy("__w")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .collect()
-    )
+    rows = _distinct_words(df, text_col).collect()
     vocab = [(r["__w"], int(r["__c"]), list(r["__w"])) for r in rows]
-    # weighted pair counts, and the words each pair occurs in: a merge
-    # re-counts only the words that contain its pair (Sennrich's
-    # reference trainer keeps the same index)
-    counts: Dict[str, int] = {}
-    where: Dict[str, set] = {}
-    for i, (_, c, syms) in enumerate(vocab):
-        for pair in _pairs(syms):
-            counts[pair] = counts.get(pair, 0) + c
-            where.setdefault(pair, set()).add(i)
-    merges: List[Tuple[str, str, int]] = []
-    while len(merges) < n_merges:
-        if not counts:
-            raise ValueError(
-                f"vocabulary exhausted after {len(merges)} merges"
-                f" (requested {n_merges})"
-            )
-        m = min(merges_per_round, n_merges - len(merges))
-        # only pairs at or above the m-th highest count need the sort key
-        floor = heapq.nlargest(m, counts.values())[-1]
-        best = sorted(
-            (kv for kv in counts.items() if kv[1] >= floor),
-            key=lambda kv: (-kv[1], kv[0]),
-        )[:m]
-        batch = _disjoint_prefix(best)
-        merges.extend(batch)
-        for left, right, _ in batch:
-            for i in list(where[left + PAIR_SEP + right]):
-                _, c, syms = vocab[i]
-                old = _pairs(syms)
-                syms[:] = _merge_word(syms, left, right)
-                new = _pairs(syms)
-                for pair in old:
-                    counts[pair] -= c
-                for pair in new:
-                    counts[pair] = counts.get(pair, 0) + c
-                    where.setdefault(pair, set()).add(i)
-                for pair in set(old).difference(new):
-                    where[pair].discard(i)
-                    if not counts[pair]:
-                        del counts[pair], where[pair]
-    payload = json.dumps(
-        [
-            {"word": w, "segmentation": PAIR_SEP.join(syms), "word_count": c}
-            for w, c, syms in vocab
-        ]
+    return _train_merges(
+        df.sparkSession, vocab, n_merges, str.__add__, _most_frequent
     )
-    out = df.sparkSession.sql(
-        "SELECT inline(from_json(:p, 'array<struct<word:string,"
-        "segmentation:string,word_count:bigint>>'))",
-        args={"p": payload},
-    )
-    return out, merges
 
 
 def _merge_fold_sql(syms_expr: str, left_expr: str, right_expr: str) -> str:

@@ -44,10 +44,10 @@ unrolled per-iteration CTE chains — the ``kmeans_ctes`` /
 ``list_reduce`` whose accumulator is the DP state list (position =
 ``len(acc)``, so the fold needs no index variable).
 
-Tokenization convention shared with ``bpe.py`` BY CONSTRUCTION
-(split ``trim(lower(text))`` on the explicit whitespace class, keep
-words of length >= 2 for training) without importing corpus.py, so
-declared-query fingerprints elsewhere stay untouched.
+Tokenization convention shared with ``bpe.py`` BY CONSTRUCTION:
+training collapses the corpus with ``bpe._distinct_words`` (split
+``trim(lower(text))`` on the explicit whitespace class, keep words of
+length >= 2).
 
 Reference parity: criteo/ml-hadoop-experiment has no tokenizer
 surface (SURVEY.md §2) — north-star extension for LLM data pipelines.
@@ -58,7 +58,12 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .bpe import PAIR_SEP, WORD_SPLIT_SPARK, WORD_SPLIT_SQL
+from .bpe import (
+    PAIR_SEP,
+    WORD_SPLIT_SPARK,
+    WORD_SPLIT_SQL,
+    _distinct_words,
+)
 
 #: probability assigned to an out-of-vocabulary SINGLE character at
 #: encode time (training never sees one: the seed keeps every corpus
@@ -150,23 +155,6 @@ def viterbi_seg_expr(
     # unsegmentable word -> final element is the sentinel -> seg is NULL,
     # exactly the "no legal segmentation" contract
     return F.element_at(dp, -1)["seg"]
-
-
-def _train_words(df: DataFrame, text_col: str) -> DataFrame:
-    """``(__w, __c)`` distinct-word frame — the bpe_learn tokenization
-    (trim/lower, explicit whitespace class, length >= 2)."""
-    return (
-        df.select(
-            F.explode(
-                F.split(
-                    F.trim(F.lower(F.col(text_col))), WORD_SPLIT_SPARK
-                )
-            ).alias("__w")
-        )
-        .where(F.length("__w") >= 2)
-        .groupBy("__w")
-        .agg(F.count(F.lit(1)).alias("__c"))
-    )
 
 
 def _seed_model(
@@ -284,12 +272,10 @@ def unigram_learn(
 
     from ..common.cache_registry import register_pinned
 
-    # LAZY materialization only: unlike wordpiece_learn (whose
-    # per-merge argmax forces a driver round-trip every iteration) or
-    # bpe_learn (which collects the word counts and merges on the
-    # driver), nothing here reads back to the driver — so the EM
-    # chain stays ONE lazy plan and the first action computes
-    # everything in a single job
+    # LAZY materialization only: unlike bpe_learn and wordpiece_learn
+    # (which collect the word counts and merge on the driver), nothing
+    # here reads back to the driver — so the EM chain stays ONE lazy
+    # plan and the first action computes everything in a single job
     # (measured: eager per-phase counts cost ~5 s of small-job
     # overhead at sf0.1; lazy, the whole train is ~1.5 s). The
     # per-iteration frames take a lazy localCheckpoint, not a plain
@@ -299,7 +285,7 @@ def unigram_learn(
     # Exchange nodes at n_iters=2 for the encode composition — the
     # optimizer, not execution, became the cost); the checkpoint cuts
     # each iteration's plan at a LogicalRDD while staying lazy.
-    vocab = _train_words(df, text_col).persist(
+    vocab = _distinct_words(df, text_col).persist(
         StorageLevel.MEMORY_AND_DISK
     )
     register_pinned(vocab)

@@ -20,21 +20,21 @@ and implemented by the HuggingFace ``tokenizers`` WordPiece trainer
   piece vocabulary, and a word with any unmatchable position encodes to
   a single ``[UNK]`` token — both per the published algorithm.
 
-Execution shape is a Lloyd loop of Spark jobs (``bpe.bpe_learn``
-instead collects its word counts once and merges on the driver; this
-trainer still runs every round in Spark): the corpus collapses
-ONCE to the pinned distinct-word ``(word, count)`` frame (the only
-corpus-sized shuffle — at 100 TB the token stream is trillions of rows,
-the vocabulary is millions), each merge is two vocabulary-sized
-aggregations (pair counts + symbol counts) joined and argmax'd under a
-TOTAL order (score desc, pair asc), and only the 1-row argmax ever
-reaches the driver. Merging and encoding are pure fold expressions —
-no UDF, no Python in the per-row path.
+Execution shape is ``bpe.bpe_learn``'s: the corpus collapses ONCE to
+the distinct-word ``(word, count)`` table (the only corpus-sized
+shuffle — at 100 TB the token stream is trillions of rows, the
+vocabulary is millions), collected to the driver in one action, and
+the merge rounds run there in the trainer loop both families share
+(``bpe._train_merges``). Each round picks the pair with the best
+likelihood gain under a TOTAL order (score desc, pair asc); the
+segmented vocabulary returns as one literal frame. Encoding is a pure
+fold expression — no UDF, no Python in the per-row path.
 
 Cross-engine determinism of the score: pair/symbol counts are exact
-BIGINTs; the score is ONE IEEE double division of exactly-representable
-integers (counts < 2^53, product guarded), so Spark and DuckDB order
-candidates identically bit-for-bit.
+integers; the score is ONE IEEE double division of the counts cast to
+double, the symbol counts multiplied as doubles — the expression the
+DuckDB twin orders by, so the driver and the twin rank candidates
+identically bit-for-bit.
 
 Reference parity: criteo/ml-hadoop-experiment has no tokenizer surface
 (SURVEY.md §2) — north-star extension for LLM data pipelines.
@@ -42,7 +42,7 @@ Reference parity: criteo/ml-hadoop-experiment has no tokenizer surface
 
 from __future__ import annotations
 
-from typing import List, Tuple
+from typing import Dict, List, Tuple
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -51,8 +51,8 @@ from .bpe import (
     PAIR_SEP,
     WORD_SPLIT_SPARK,
     WORD_SPLIT_SQL,
-    _disjoint_prefix,
-    _merge_fold,
+    _distinct_words,
+    _train_merges,
 )
 
 #: BERT-convention continuation marker for word-internal pieces
@@ -63,67 +63,34 @@ CONT = "##"
 UNK = "[UNK]"
 
 
-def _wp_symbols(col_name: str) -> Column:
-    """``array<string>`` initial WordPiece symbols: bare first
-    character, ``##``-prefixed continuations."""
-    return F.expr(
-        f"transform(sequence(1, length({col_name})), i -> CASE WHEN i = 1"
-        f" THEN substring({col_name}, i, 1)"
-        f" ELSE '{CONT}' || substring({col_name}, i, 1) END)"
-    )
+def _merged(left: str, right: str) -> str:
+    """The WordPiece merged symbol: ``left`` plus ``right`` without its
+    ``##``, so it inherits the left symbol's word-position status
+    (``t ##h`` -> ``th``, ``##a ##b`` -> ``##ab``)."""
+    return left + (right[len(CONT):] if right.startswith(CONT) else right)
 
 
-def _strip_cont(sym: str) -> str:
-    return sym[len(CONT):] if sym.startswith(CONT) else sym
+def _best_gain(counts: Dict[str, int], sym_counts: Dict[str, int]) -> str:
+    """WordPiece's pick: the highest likelihood gain
+    ``count(ab) / (count(a) * count(b))``, ties to the smallest pair
+    string. Each count is cast to float BEFORE multiplying — the IEEE
+    expression the DuckDB twin orders by (Python's exact integer
+    product would round differently above 2^53)."""
 
+    def key(pair: str) -> Tuple[float, str]:
+        left, right = pair.split(PAIR_SEP, 1)
+        score = float(counts[pair]) / (
+            float(sym_counts[left]) * float(sym_counts[right])
+        )
+        return -score, pair
 
-def merge_wp_pair_expr(syms: Column, left: str, right: str) -> Column:
-    """One WordPiece merge applied to a symbol array: greedy
-    left-to-right, non-overlapping (the ``bpe.merge_pair_expr`` fold);
-    the merged symbol is ``left ⊕ strip_cont(right)`` so it inherits
-    the left symbol's word-position status."""
-    return _merge_fold(
-        syms, F.lit(left), F.lit(right), F.lit(left + _strip_cont(right))
-    )
-
-
-def _pair_counts(vocab: DataFrame, syms_col: str) -> DataFrame:
-    """(pair, pair_count) over adjacent symbols, weighted by word
-    count — vocabulary-sized input, map-combined aggregation."""
-    # CASE guard: a fully merged word has size 1, and Spark's
-    # sequence(1, 0) would count DOWN ([1, 0]) where DuckDB's
-    # range(1, 1) is empty — both engines must yield zero pairs
-    pairs = vocab.select(
-        F.explode(
-            F.expr(
-                f"CASE WHEN size({syms_col}) < 2"
-                " THEN cast(array() as array<string>)"
-                f" ELSE transform(sequence(1, size({syms_col}) - 1),"
-                f" j -> concat({syms_col}[j - 1], '{PAIR_SEP}',"
-                f" {syms_col}[j])) END"
-            )
-        ).alias("pair"),
-        F.col("__c"),
-    )
-    return pairs.groupBy("pair").agg(F.sum("__c").alias("pair_count"))
-
-
-def _symbol_counts(vocab: DataFrame, syms_col: str) -> DataFrame:
-    """(sym, sym_count): occurrences of each symbol across the current
-    segmentations, weighted by word count — the denominators of the
-    likelihood-gain score. Vocabulary-sized, map-combined."""
-    return (
-        vocab.select(F.explode(F.col(syms_col)).alias("sym"), F.col("__c"))
-        .groupBy("sym")
-        .agg(F.sum("__c").alias("sym_count"))
-    )
+    return min(counts, key=key)
 
 
 def wordpiece_learn(
     df: DataFrame,
     text_col: str,
     n_merges: int,
-    merges_per_round: int = 1,
 ) -> Tuple[DataFrame, List[Tuple[str, str, int]]]:
     """Train ``n_merges`` WordPiece merges; returns ``(segmented_vocab,
     merges)`` where ``segmented_vocab`` is ``(word, segmentation,
@@ -137,131 +104,21 @@ def wordpiece_learn(
     pairs before ``n_merges`` (the SQL twin unrolls exactly
     ``n_merges`` iterations — a short corpus must fail loudly).
 
-    Scale: ONE corpus-sized shuffle (the pinned distinct-word
-    collapse); per ROUND two vocabulary-sized aggregations, one
-    broadcast-joined argmax, one bounded collect.
-
-    ``merges_per_round`` batches the driver loop exactly as
-    :func:`~.bpe.bpe_learn` does (the shared ``_disjoint_prefix``
-    rule): the longest conflict-free prefix of the (score desc, pair
-    asc)-sorted candidates applies in one pass. Disjoint pairs leave
-    each other's pair counts AND symbol counts (hence scores)
-    untouched, so APPLICATION commutes — but WordPiece batched
-    SELECTION diverges from strict sequential more readily than BPE's:
-    a merge's created pairs carry a small new-symbol denominator and
-    routinely outscore the next batch member (where BPE's created
-    pairs are count-bounded by the merged pair). Batching here is the
-    documented-approximate scale mode for large vocabularies; default
-    1 is the exact sequential order and what the declared oracle
-    queries and the SQL twin replay.
+    Scale: ONE Spark action — the distinct-word collapse, collected as
+    ``(word, count)`` rows. The merge rounds run on the driver in
+    ``bpe._train_merges`` with :func:`_best_gain` as the pick and
+    :func:`_merged` as the merged symbol; the returned frame is one
+    JSON literal expanded by ``inline``: no cache, no RDD lineage.
     """
     if n_merges < 1:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
-    if merges_per_round < 1:
-        raise ValueError(
-            f"merges_per_round must be positive, got {merges_per_round}"
-        )
-    from pyspark import StorageLevel
-
-    from ..common.cache_registry import register_pinned, release
-
-    words = df.select(
-        F.explode(
-            F.split(F.trim(F.lower(F.col(text_col))), WORD_SPLIT_SPARK)
-        ).alias("__w")
-    ).where(F.length("__w") >= 2)
-    vocab = (
-        words.groupBy("__w")
-        .agg(F.count(F.lit(1)).alias("__c"))
-        .withColumn("__s", _wp_symbols("__w"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    rows = _distinct_words(df, text_col).collect()
+    vocab = [
+        (w, int(c), [w[0]] + [CONT + ch for ch in w[1:]]) for w, c in rows
+    ]
+    return _train_merges(
+        df.sparkSession, vocab, n_merges, _merged, _best_gain
     )
-    merges: List[Tuple[str, str, int]] = []
-    current = vocab
-    try:
-        while len(merges) < n_merges:
-            m = min(merges_per_round, n_merges - len(merges))
-            pairs = _pair_counts(current, "__s").select(
-                "pair",
-                "pair_count",
-                F.substring_index("pair", PAIR_SEP, 1).alias("__l"),
-                F.substring_index("pair", PAIR_SEP, -1).alias("__r"),
-            )
-            syms = _symbol_counts(current, "__s")
-            scored = (
-                pairs.join(
-                    F.broadcast(
-                        syms.select(
-                            F.col("sym").alias("__l"),
-                            F.col("sym_count").alias("__cl"),
-                        )
-                    ),
-                    "__l",
-                )
-                .join(
-                    F.broadcast(
-                        syms.select(
-                            F.col("sym").alias("__r"),
-                            F.col("sym_count").alias("__cr"),
-                        )
-                    ),
-                    "__r",
-                )
-                .select(
-                    "pair",
-                    "pair_count",
-                    # cast EACH count to double BEFORE multiplying: a
-                    # long*long product overflows (throws under ANSI)
-                    # at web-corpus symbol counts, while the double
-                    # product is exact below 2^53 and ordered
-                    # identically by DuckDB (which would widen to
-                    # HUGEINT) — the cross-engine guard the module
-                    # docstring promises
-                    (
-                        F.col("pair_count").cast("double")
-                        / (
-                            F.col("__cl").cast("double")
-                            * F.col("__cr").cast("double")
-                        )
-                    ).alias("score"),
-                )
-            )
-            best = (
-                scored.orderBy(F.col("score").desc(), F.col("pair").asc())
-                .limit(m)
-                .collect()
-            )
-            if not best:
-                raise ValueError(
-                    f"vocabulary exhausted after {len(merges)} merges"
-                    f" (requested {n_merges})"
-                )
-            batch = _disjoint_prefix(
-                [(r["pair"], int(r["pair_count"])) for r in best]
-            )
-            merges.extend(batch)
-            col = F.col("__s")
-            for left, right, _ in batch:
-                col = merge_wp_pair_expr(col, left, right)
-            # eager localCheckpoint, not persist+count: persist keeps
-            # the FULL logical lineage, so round r's plan carried r
-            # nested merge folds and Catalyst re-analysis grew
-            # quadratically with the merge count (measured gaps
-            # 0.4 -> 1.9 s across 4 wordpiece rounds, r13 receipts);
-            # the checkpoint truncates lineage to the materialized
-            # blocks — same rows, O(1) analysis per round (the
-            # connected_components precedent, guide §3.3)
-            nxt = current.withColumn("__s", col).localCheckpoint()
-            release(current)  # frees the checkpoint, not only a cache
-            current = nxt
-        out = current.select(
-            F.col("__w").alias("word"),
-            F.array_join("__s", PAIR_SEP).alias("segmentation"),
-            F.col("__c").alias("word_count"),
-        )
-        return out, merges
-    finally:
-        register_pinned(current)
 
 
 def greedy_seg_expr(
@@ -391,9 +248,9 @@ def wordpiece_encode(
 
 
 def _wp_merge_fold_sql(syms_expr: str, left: str, right: str) -> str:
-    """DuckDB twin of :func:`merge_wp_pair_expr` (the boxed-VARCHAR[]
+    """DuckDB twin of the WordPiece merge fold (the boxed-VARCHAR[]
     ``list_reduce`` of ``bpe._merge_fold_sql``, with the merged symbol
-    stripping the right side's ``##``)."""
+    stripping the right side's ``##`` as :func:`_merged` does)."""
     merged = (
         f"acc[-1] || CASE WHEN starts_with(x[1], '{CONT}')"
         f" THEN substring(x[1], {len(CONT) + 1}) ELSE x[1] END"

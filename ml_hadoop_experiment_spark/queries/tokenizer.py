@@ -222,8 +222,8 @@ def q_wordpiece_learn(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary (word, segmentation, word_count) so the gate hash checks
     every merge decision on every word. Oracle replays the full loop as
     unrolled CTEs (the bpe_merges precedent). One corpus-sized shuffle
-    (the pinned distinct-word collapse); per merge two vocab-sized
-    aggregations + a 1-row collect."""
+    (the distinct-word collapse) and one collect; the merges run on
+    the driver."""
     from ml_hadoop_experiment_spark.operators.wordpiece import (
         wordpiece_learn,
     )

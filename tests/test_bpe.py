@@ -64,13 +64,16 @@ class TestBpeLearn:
         assert counts["low"] == 4
 
     def test_release_pinned_frees_every_round_checkpoint(self, spark):
-        """Training persists and checkpoints nothing: the returned frame
-        is a literal, so no persisted RDD is left behind either before or
-        after the sweep's ``release_pinned``."""
+        """Neither trainer persists or checkpoints anything: the
+        returned frame is a literal, so no persisted RDD is left behind
+        either before or after the sweep's ``release_pinned``."""
         from ml_hadoop_experiment_spark.common.cache_registry import (
             release_pinned,
         )
         from ml_hadoop_experiment_spark.operators.bpe import bpe_learn
+        from ml_hadoop_experiment_spark.operators.wordpiece import (
+            wordpiece_learn,
+        )
 
         release_pinned()
         jsc = spark.sparkContext._jsc
@@ -79,9 +82,11 @@ class TestBpeLearn:
             [("low low low lower lowest",), ("new newer newest low",)],
             "text string",
         )
-        out, _ = bpe_learn(docs, "text", n_merges=3)
-        out.collect()
-        assert len(set(jsc.getPersistentRDDs()) - before) == 0
+        for learn in (bpe_learn, wordpiece_learn):
+            out, _ = learn(docs, "text", n_merges=3)
+            out.collect()
+            left = set(jsc.getPersistentRDDs()) - before
+            assert left == set(), learn.__name__
         release_pinned()
         assert set(jsc.getPersistentRDDs()) - before == set()
 
@@ -93,9 +98,9 @@ class TestBpeLearn:
         folded = []
         real = bpe._merge_word
 
-        def _counting(syms, left, right):
+        def _counting(syms, left, right, merged):
             folded.append("".join(syms))
-            return real(syms, left, right)
+            return real(syms, left, right, merged)
 
         monkeypatch.setattr(bpe, "_merge_word", _counting)
         docs = spark.createDataFrame(
@@ -233,6 +238,9 @@ class TestBpeLearn:
 
 
 class TestBatchedMerges:
+    """Both trainers batch every merge round behind ONE vocabulary
+    collect; the rounds run on the driver."""
+
     CORPUS = [
         ("low low low lower lowest new newer newest",),
         ("wide wider widest low slow slower slowest",),
@@ -253,29 +261,6 @@ class TestBatchedMerges:
         monkeypatch.setattr(cls, "collect", counting)
         return calls
 
-    def test_batched_equals_sequential_and_cuts_rounds(
-        self, spark, monkeypatch
-    ):
-        from ml_hadoop_experiment_spark.operators.bpe import bpe_learn
-
-        docs = spark.createDataFrame(self.CORPUS, "text string")
-        n = 8
-        calls = self._counting_collect(spark, monkeypatch)
-        seg1, merges1 = bpe_learn(docs, "text", n)
-        seq_collects = calls["n"]
-        out1 = sorted(tuple(r) for r in seg1.collect())
-        calls["n"] = 0
-        seg4, merges4 = bpe_learn(docs, "text", n, merges_per_round=4)
-        batch_collects = calls["n"]
-        out4 = sorted(tuple(r) for r in seg4.collect())
-        # result-equality with m=1 on the fixture (merge LIST and the
-        # full segmented vocabulary); the rounds run on the driver, so
-        # either batch size costs exactly the one vocabulary collect
-        assert merges4 == merges1
-        assert out4 == out1
-        assert seq_collects == 1
-        assert batch_collects == 1
-
     @pytest.mark.parametrize("n", [1, 8])
     def test_learn_is_one_collect_and_a_literal_frame(
         self, spark, monkeypatch, n
@@ -283,75 +268,28 @@ class TestBatchedMerges:
         """Training is ONE Spark action whatever the merge count, and
         the returned vocabulary is a JVM-side literal: no RDD-backed
         relation (slow in the apply's broadcast join, and a pin to
-        release) and no Python node in its plan."""
+        release) and no Python node in its plan — for BPE and
+        WordPiece alike."""
         import re
 
         from ml_hadoop_experiment_spark.operators.bpe import bpe_learn
-
-        docs = spark.createDataFrame(self.CORPUS, "text string")
-        calls = self._counting_collect(spark, monkeypatch)
-        seg, merges = bpe_learn(docs, "text", n)
-        assert calls["n"] == 1
-        assert len(merges) == n
-        plan = seg._jdf.queryExecution().optimizedPlan().toString()
-        assert not re.search(r"LogicalRDD|ExistingRDD", plan), plan
-        assert not re.search(r"Python|Pandas|Arrow", plan), plan
-        assert seg.schema.simpleString() == (
-            "struct<word:string,segmentation:string,word_count:bigint>"
-        )
-
-    def test_wordpiece_batched_equals_sequential(
-        self, spark, monkeypatch
-    ):
-        """Equality fixture where the commutation provably holds:
-        2-char words over disjoint alphabets — merging one word
-        creates NO new pairs (size-1 symbol arrays) and touches no
-        other word's symbol counts, so batched selection == strict
-        sequential. (On corpora with longer words WordPiece batching
-        is documented-approximate: a merge's created pairs have small
-        new-symbol denominators and jump the score queue.)"""
         from ml_hadoop_experiment_spark.operators.wordpiece import (
             wordpiece_learn,
         )
 
-        docs = spark.createDataFrame(
-            [("ab ab ab ab cd cd cd ef ef gh ij kl",)], "text string"
-        )
-        n = 6
-        calls = self._counting_collect(spark, monkeypatch)
-        seg1, merges1 = wordpiece_learn(docs, "text", n)
-        out1 = sorted(tuple(r) for r in seg1.collect())
-        seq_rounds = calls["n"] - 1
-        calls["n"] = 0
-        seg3, merges3 = wordpiece_learn(
-            docs, "text", n, merges_per_round=3
-        )
-        out3 = sorted(tuple(r) for r in seg3.collect())
-        batch_rounds = calls["n"] - 1
-        assert merges3 == merges1
-        assert out3 == out1
-        assert seq_rounds == n
-        assert batch_rounds < seq_rounds, (batch_rounds, seq_rounds)
-
-    def test_disjoint_prefix_stops_at_conflict(self):
-        from ml_hadoop_experiment_spark.operators.bpe import (
-            _disjoint_prefix,
-        )
-
-        got = _disjoint_prefix(
-            [("a b", 9), ("c d", 8), ("b e", 7), ("f g", 6)]
-        )
-        # "b e" shares 'b' with the first pick: the prefix STOPS there
-        # (skipping would reorder the greedy sequence), so "f g" is
-        # excluded even though it conflicts with nothing
-        assert got == [("a", "b", 9), ("c", "d", 8)]
-
-    def test_rejects_nonpositive_batch(self, spark):
-        from ml_hadoop_experiment_spark.operators.bpe import bpe_learn
-
         docs = spark.createDataFrame(self.CORPUS, "text string")
-        with pytest.raises(ValueError, match="merges_per_round"):
-            bpe_learn(docs, "text", 2, merges_per_round=0)
+        calls = self._counting_collect(spark, monkeypatch)
+        for learn in (bpe_learn, wordpiece_learn):
+            calls["n"] = 0
+            seg, merges = learn(docs, "text", n)
+            assert calls["n"] == 1, learn.__name__
+            assert len(merges) == n
+            plan = seg._jdf.queryExecution().optimizedPlan().toString()
+            assert not re.search(r"LogicalRDD|ExistingRDD", plan), plan
+            assert not re.search(r"Python|Pandas|Arrow", plan), plan
+            assert seg.schema.simpleString() == (
+                "struct<word:string,segmentation:string,word_count:bigint>"
+            )
 
 
 class TestAdversarialTwin:

@@ -2,7 +2,13 @@
 runs in Spark AND in DuckDB (oracle SQL over the same parquet), results must
 match exactly after sorting columns by name and rows by value.
 
-Runs at sf0.001 for speed; the driver runs the same contract at sf0.01.
+Runs at sf0.001 for speed. The same contract at sf0.01 is a sweep run
+once per round, with its pass count and time recorded in CHANGES.md;
+point ``SPARK_GRAFT_ORACLE_DIR`` at the sf0.01 fixture, the sibling of
+the sf0.001 default below:
+
+    SPARK_GRAFT_ORACLE_DIR=<testdata>/sf0.01 \
+        python -m pytest tests/test_oracle_parity.py -q
 """
 
 from __future__ import annotations

@@ -11,15 +11,17 @@ import duckdb
 import pytest
 from pyspark.sql import functions as F
 
+from ml_hadoop_experiment_spark.operators.bpe import _merge_word
 from ml_hadoop_experiment_spark.operators.wordpiece import (
     UNK,
+    _merged,
     greedy_seg_expr,
-    merge_wp_pair_expr,
     wordpiece_encode,
     wordpiece_encode_sql,
     wordpiece_learn,
     wordpiece_learn_sql,
 )
+from ml_hadoop_experiment_spark.queries._shared import _materialize_ctes
 
 ROWS = [
     (1, "the cat sat on the mat"),
@@ -59,27 +61,19 @@ class TestLearn:
         _, merges = wordpiece_learn(df, "text", n_merges=1)
         assert merges[0][:2] == ("x", "##y")
 
-    def test_merge_keeps_left_prefix_status(self, spark):
+    def test_merge_keeps_left_prefix_status(self):
         """Merging ('##a', '##b') yields '##ab'; merging ('t', '##h')
         yields 'th' — the continuation marker belongs to the word
         position, not the merge."""
-        df = spark.createDataFrame([("xab",), ("thx",)], "w string")
-        out = df.select(
-            F.array_join(
-                merge_wp_pair_expr(
-                    F.expr(
-                        "transform(sequence(1, length(w)), i -> CASE"
-                        " WHEN i = 1 THEN substring(w, i, 1)"
-                        " ELSE '##' || substring(w, i, 1) END)"
-                    ),
-                    "##a",
-                    "##b",
-                ),
-                " ",
-            ).alias("s")
-        ).collect()
-        assert out[0]["s"] == "x ##ab"
-        assert out[1]["s"] == "t ##h ##x"
+        assert _merge_word(
+            ["x", "##a", "##b"], "##a", "##b", _merged("##a", "##b")
+        ) == ["x", "##ab"]
+        assert _merge_word(
+            ["t", "##h", "##x"], "t", "##h", _merged("t", "##h")
+        ) == ["th", "##x"]
+        assert _merge_word(
+            ["t", "##h", "##x"], "##a", "##b", _merged("##a", "##b")
+        ) == ["t", "##h", "##x"]
 
     def test_learn_matches_duckdb_twin(self, spark, docs, con):
         vocab, _ = wordpiece_learn(docs, "text", n_merges=4)
@@ -97,6 +91,13 @@ class TestLearn:
             wordpiece_learn(docs, "text", n_merges=0)
         with pytest.raises(ValueError):
             wordpiece_learn_sql("docs", "text", 0)
+
+    def test_exhausted_vocabulary_raises(self, spark):
+        """One merge ('a', '##b') leaves no pair; merge 2 must fail
+        loudly, not silently diverge from the unrolled SQL."""
+        df = spark.createDataFrame([("ab ab",)], "text string")
+        with pytest.raises(ValueError, match="exhausted after 1"):
+            wordpiece_learn(df, "text", n_merges=2)
 
 
 class TestEncode:
@@ -158,3 +159,60 @@ class TestEncode:
         plan = enc._jdf.queryExecution().executedPlan().toString()
         for marker in ("BatchEvalPython", "ArrowEvalPython", "InPandas"):
             assert marker not in plan
+
+
+class TestAdversarialTwin:
+    """The driver trainer and the DuckDB twin on words built to split
+    the engines: precomposed and combining-mark accents, CJK, an astral
+    emoji (one code point, two UTF-16 units, four UTF-8 bytes),
+    fullwidth letters, the JSON and SQL quoting characters, and score
+    ties only the pair string breaks."""
+
+    DOCS = [
+        (1, "caf\u00e9 caf\u00e9 cafe\u0301 na\u00efve"),
+        (2, "中文 中文 中文 中国 文化"),
+        (3, "😀😀 😀😀 😀😀 ａａ ａａ ａａ"),
+        (4, "n't \"q\" a\\b a\\b"),
+        (5, "\u00e9\u00e9 e\u0301"),
+    ]
+    # Words seen once with symbols seen nowhere else score 1.0, so the
+    # pair string orders them ('"' < '#' < U+6587). '##e' +
+    # '##\u0301' merges into a decomposed '##é' that
+    # sorts before the precomposed one ('e' < U+00E9); the last two
+    # merges tie at 1/3 and code-point order puts U+FF41 before
+    # U+1F600, where UTF-16 order would not.
+    MERGES = [
+        ('"', "##q"), ('"q', '##"'), ("##'", "##t"), ("##\u00ef", "##v"),
+        ("文", "##化"), ("##\\", "##b"), ("##\u00efv", "##e"),
+        ("##e", "##\u0301"), ("e", "##\u0301"), ("a", "##\\b"),
+        ("n", "##'t"), ("##f", "##e\u0301"), ("##f", "##\u00e9"),
+        ("\u00e9", "##\u00e9"), ("ａ", "##ａ"), ("😀", "##😀"),
+    ]
+
+    @pytest.fixture(scope="class")
+    def duck(self):
+        con = duckdb.connect()
+        con.execute("CREATE TABLE docs (doc_id BIGINT, text VARCHAR)")
+        con.executemany("INSERT INTO docs VALUES (?, ?)", self.DOCS)
+        yield con
+        con.close()
+
+    def test_learn_and_encode_match_sql_twin(self, spark, duck):
+        n = len(self.MERGES)
+        docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
+        vocab, merges = wordpiece_learn(docs, "text", n)
+        assert [(m[0], m[1]) for m in merges] == self.MERGES
+        # the unrolled chain reads each round's CTE several times:
+        # materialize it, as the declared oracles do
+        got = sorted(map(tuple, vocab.collect()))
+        want = sorted(map(tuple, duck.execute(
+            _materialize_ctes(wordpiece_learn_sql("docs", "text", n))
+        ).fetchall()))
+        assert got == want
+        got = sorted(map(tuple, wordpiece_encode(
+            docs, "doc_id", "text", vocab
+        ).collect()))
+        want = sorted(map(tuple, duck.execute(_materialize_ctes(
+            wordpiece_encode_sql("docs", "doc_id", "text", n)
+        )).fetchall()))
+        assert got == want
