@@ -912,9 +912,15 @@ def simhash(col: Column, bits: int = 16) -> Column:
     0.84 s, streaming_simhash 15.6 -> 2.6 s). ``simhash_sql`` is the
     value-identical DuckDB twin; tests/test_simhash_arrow.py pins
     bit-identity against the expression form.
+
+    The fingerprint column is non-nullable (``coalesce(kernel, 0)``; the
+    kernel already returns 0 for NULL or empty input). A nullable one lets
+    a ``bit_count(fp_a ^ fp_b) <= d`` join condition infer
+    ``isnotnull(fp)``, which Catalyst pushes below the projection, so each
+    probe side planned the kernel twice.
     """
     tokens = F.split(F.trim(F.lower(col)), r"\s+")
-    return _simhash_arrow_udf(bits)(tokens)
+    return F.coalesce(_simhash_arrow_udf(bits)(tokens), F.lit(0).cast("long"))
 
 
 def simhash_sql(expr: str, bits: int = 16) -> str:

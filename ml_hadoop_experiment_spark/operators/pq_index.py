@@ -729,7 +729,8 @@ def route_index_to_storage(
 
     The write is eager (one job); the returned index is otherwise the
     same PQIndex contract (same codebooks/centroids travel with it),
-    so every probe helper composes unchanged.
+    so every probe helper composes unchanged. The stored form replaces
+    the in-memory one: ``index`` is unpersisted once written.
     """
     if index.centroids is None:
         raise ValueError(
@@ -738,6 +739,7 @@ def route_index_to_storage(
         )
     spark = index.codes.sparkSession
     index.codes.write.partitionBy("list_id").mode(mode).parquet(path)
+    index.unpersist()
     codes = spark.read.parquet(path)
     return PQIndex(
         codes,

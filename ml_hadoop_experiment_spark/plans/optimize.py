@@ -51,7 +51,11 @@ def wholestage_codegen_spans(df: DataFrame) -> int:
     return len(ids)
 
 
-def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def fan_out(
+    df: DataFrame,
+    min_partitions: int | None = None,
+    partitions: int | None = None,
+) -> DataFrame:
     """Repartition ONLY when the plan yields fewer partitions than the
     cluster's parallelism — the guard that makes narrow scans compute-bound
     work parallel without ever adding a shuffle at scale.
@@ -69,10 +73,16 @@ def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     every engine operator that matters: portable hash, md5 digests, column
     expressions). Not for ``F.rand``-seeded columns, whose draw depends on
     partition assignment.
+
+    ``partitions`` is ``df``'s partition count when the caller already
+    knows it (``queries._shared._t`` keeps it per file); otherwise it is
+    probed from the physical plan.
     """
     spark = df.sparkSession
     target = min_partitions or spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() >= target:
+    if partitions is None:
+        partitions = df.rdd.getNumPartitions()
+    if partitions >= target:
         return df
     return df.repartition(target)
 

@@ -2,7 +2,9 @@
 
 from __future__ import annotations
 
+import os
 import re
+import stat
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -113,6 +115,71 @@ def _normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
     return df.withColumn(col, F.timestamp_micros(F.expr(f"{col} div 1000")))
 
 
+#: Confs that the inferred parquet schema (the first four) and the scan's
+#: partition count (the rest) depend on: part of each memo key in ``_scan``.
+_SCAN_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.files.maxPartitionBytes",
+    "spark.sql.files.openCostInBytes",
+    "spark.sql.files.minPartitionNum",
+    "spark.sql.files.maxPartitionNum",
+    # minPartitionNum's default
+    "spark.sql.leafNodeDefaultParallelism",
+)
+
+#: path -> (key, schema, scan partition count or None); see ``_scan``.
+#: No lock: an entry is used only while its key matches, so threads that
+#: race on one path cost each other at most a repeated probe.
+_SCANS: dict = {}
+
+
+def _scan_key(spark: SparkSession, path: str) -> tuple | None:
+    """The memo key of a local parquet file: its stat identity, the
+    session's default parallelism and ``_SCAN_CONFS``. None for anything
+    ``os.stat`` cannot vouch for (a remote URI, a dataset directory whose
+    part files change under an unchanged directory stat)."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return None
+    if not stat.S_ISREG(st.st_mode):
+        return None
+    conf = spark.conf
+    return (
+        st.st_mtime_ns,
+        st.st_size,
+        st.st_ino,
+        spark.sparkContext.defaultParallelism,
+        *(conf.get(k, None) for k in _SCAN_CONFS),
+    )
+
+
+def _scan(
+    spark: SparkSession, path: str, count: bool = False
+) -> tuple[DataFrame, int | None]:
+    """A fresh parquet scan of ``path`` and, with ``count``, its partition
+    count. A first load infers the schema (a one-task footer job) and
+    probes the count from the physical plan; both are kept under
+    ``_scan_key``, and a later load with the same key reads with the
+    known schema, which starts no job, and reuses the count."""
+    key = _scan_key(spark, path)
+    memo = _SCANS.get(path)
+    if key is not None and memo is not None and memo[0] == key:
+        _, schema, parts = memo
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema, parts = df.schema, None
+    if count and parts is None:
+        parts = df.rdd.getNumPartitions()
+    if key is not None:
+        _SCANS[path] = (key, schema, parts)
+    return df, parts
+
+
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load a fixture table; fan compute-heavy tables out to parallelism.
 
@@ -124,31 +191,41 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     scale. All declared queries are row-value deterministic (portable hash /
     digests / pure expressions), so repartitioning never changes results.
 
+    The table's schema and scan partition count are memoized per process
+    (``_scan``), keyed by the file's ``(path, st_mtime_ns, st_size,
+    st_ino)``, the session's ``defaultParallelism`` and the confs in
+    ``_SCAN_CONFS``. A warm load starts no Spark job and builds no plan;
+    it misses, and probes the file as a first load does, when the file is
+    rewritten, one of those confs or the parallelism changes, or the path
+    is not a local file. Every load returns a fresh DataFrame, so two loads
+    of one table self-join with distinct attribute ids.
+
     The events table's ``ts`` is normalized to TIMESTAMP here (see
     ``_normalize_event_time``) — queries never see the wire type.
     """
+    from ml_hadoop_experiment_spark.plans.optimize import fan_out
+
     _ensure_confs(spark)
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    fan = name in _FAN_OUT_TABLES
+    df, parts = _scan(spark, f"{sf_dir}/{name}.parquet", count=fan)
+    if fan:
+        df = fan_out(df, partitions=parts)
     if name == "events":
         df = _normalize_event_time(df)
-    if name in _FAN_OUT_TABLES:
-        from ml_hadoop_experiment_spark.plans.optimize import fan_out
-
-        df = fan_out(df)
     return df
 
 
 def _stream_t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Stream a fixture table as micro-batches: ``_t`` for
-    ``readStream``. The schema comes from a batch read — never
-    hard-coded (round 2's frozen ``ts bigint`` schema silently coerced
-    the fixture's µs timestamps and collapsed every event into two
-    windows); the file source needs a directory, so a glob filter keeps
-    it to the one table. ``events.ts`` is normalized as in ``_t``.
-    Streams are not fanned out: ``fan_out`` probes the scan's partition
-    count, which a streaming frame cannot report."""
+    ``readStream``. The schema comes from the batch scan, memoized as in
+    ``_t`` (same key, same misses) — never hard-coded (round 2's frozen
+    ``ts bigint`` schema silently coerced the fixture's µs timestamps and
+    collapsed every event into two windows); the file source needs a
+    directory, so a glob filter keeps it to the one table. ``events.ts``
+    is normalized as in ``_t``. Streams are not fanned out: a streaming
+    frame cannot report its scan's partition count."""
     _ensure_confs(spark)
-    wire_schema = spark.read.parquet(f"{sf_dir}/{name}.parquet").schema
+    wire_schema = _scan(spark, f"{sf_dir}/{name}.parquet")[0].schema
     df = (
         spark.readStream.schema(wire_schema)
         .option("pathGlobFilter", f"{name}.parquet")

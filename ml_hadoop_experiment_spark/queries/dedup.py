@@ -376,6 +376,7 @@ def q_near_dup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     SQL; what differs is WHERE the corpus work happens (index build,
     amortized across batches) — see SCALE.md "near_dup_incr
     steady-state index A/B"."""
+    from ml_hadoop_experiment_spark.common.cache_registry import register_pinned
     from ml_hadoop_experiment_spark.operators.dedup import (
         build_corpus_index,
         near_dup_against_index,
@@ -388,6 +389,10 @@ def q_near_dup_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, "doc_id", "text", shingle_size=3, num_hashes=8,
         bands=4, rows_per_band=2,
     )
+    # the caller owns the index's two pins; a sweep frees them between
+    # queries, as it does build_simhash_index's
+    register_pinned(index.tokens)
+    register_pinned(index.bands_frame)
     return near_dup_against_index(new, index, "doc_id", "text", threshold=0.3)
 
 

@@ -56,9 +56,10 @@ def test_fan_out_scan_only_placement_contract():
     fan_out is called ONLY immediately after a parquet scan (before any
     shuffle), where the probe reads leaf-scan partitioning and triggers
     nothing. The contract is pinned HERE, mechanically: every call site
-    of fan_out inside the engine package must be _t's scan-adjacent one.
-    A new call site fails this test until its placement is audited and
-    listed below."""
+    of fan_out inside the engine package must be _t's scan-adjacent one,
+    which takes the scan and its partition count from ``_scan`` (the
+    memoized probe of the same leaf scan). A new call site fails this
+    test until its placement is audited and listed below."""
     import re
     from pathlib import Path
 
@@ -78,17 +79,23 @@ def test_fan_out_scan_only_placement_contract():
     assert call_sites == [
         ("queries/_shared.py", _t_fan_out_line())
     ], call_sites
-    # and that one site sits in _t, directly after the parquet scan
+    # and that one site sits in _t, directly after the parquet scan, and
+    # _scan's own partition probe runs on the bare scan
     from ml_hadoop_experiment_spark.queries import _shared as q
     import inspect
 
     src = inspect.getsource(q._t)
-    scan_pos = src.index("spark.read.parquet")
-    call_pos = src.index("fan_out(df)")
+    scan_pos = src.index("_scan(spark")
+    call_pos = src.index("fan_out(df")
     between = src[scan_pos:call_pos]
     assert "groupBy" not in between and "join" not in between and (
         "repartition" not in between
     ), "_t must not shuffle between the scan and the fan_out probe"
+    scan_src = inspect.getsource(q._scan)
+    assert ".parquet(path)" in scan_src
+    assert "df.rdd.getNumPartitions()" in scan_src
+    for op in ("groupBy", "join", "repartition"):
+        assert op not in scan_src, f"_scan must count the bare scan, not a {op}"
 
 
 def _t_fan_out_line() -> int:
@@ -98,7 +105,7 @@ def _t_fan_out_line() -> int:
 
     src, start = inspect.getsourcelines(q._t)
     for i, line in enumerate(src):
-        if "fan_out(df)" in line:
+        if "fan_out(df" in line:
             return start + i
     raise AssertionError("fan_out call not found in queries._t")
 

@@ -79,10 +79,19 @@ def _temp_views(spark) -> set[str]:
     return {t.name for t in spark.catalog.listTables() if t.isTemporary}
 
 
+def _persisted_rdds(spark) -> set[int]:
+    """Ids of the session's persisted RDDs. ``ann._ROUTED_STEADY`` is the
+    one store meant to outlive a query: it keeps the routed index that
+    ``ivf_pq_routed_steady`` probes, which reads its parquet copy and so
+    pins no RDD; the invariant below holds for it with no exemption."""
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
 @pytest.mark.parametrize("name", sorted(QUERIES))
 def test_query_matches_oracle(spark, duck, name):
     streaming = name.startswith("streaming_")
     views = _temp_views(spark) if streaming else None
+    rdds = _persisted_rdds(spark)
     df = QUERIES[name](spark, SF_DIR)
     # a drained stream has stopped and dropped its memory sink by now
     assert not streaming or (
@@ -94,6 +103,8 @@ def test_query_matches_oracle(spark, duck, name):
     # the sweep reclaims it between queries (the result is materialized).
     release_prefix_caches()
     release_pinned()
+    left = _persisted_rdds(spark) - rdds
+    assert not left, f"{name} left persisted RDDs {sorted(left)} behind"
     _assert_frames_match(name, spark_pdf, duck_pdf)
 
 

@@ -90,3 +90,46 @@ class TestSimhashIndexEquivalence:
             assert got == want
         finally:
             index.unpersist()
+
+
+def _plan_nodes(df) -> list:
+    """Node names of the executed plan's tree. A cached side is the leaf
+    ``InMemoryTableScan``: the plan it caches is not one of its children."""
+
+    def walk(node, out):
+        if node.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            node = node.executedPlan()
+        out.append(node.nodeName())
+        ch = node.children()
+        for i in range(ch.size()):
+            walk(ch.apply(i), out)
+        return out
+
+    return walk(df._jdf.queryExecution().executedPlan(), [])
+
+
+def test_probe_side_runs_the_kernel_once(spark, docs):
+    """The fingerprint is non-nullable, so the ``bit_count(xor) <= d`` join
+    condition infers no ``isnotnull(fp)`` filter to push below the
+    projection: the probe side plans one ``ArrowEvalPython``, and the
+    index side stays a scan of the pinned blocks."""
+    from ml_hadoop_experiment_spark.operators.dedup import simhash
+    from ml_hadoop_experiment_spark.operators.simhash_index import (
+        build_simhash_index,
+        simhash_against_index,
+    )
+
+    fp = docs.select(simhash(F.col("text"), 32).alias("fp"))
+    assert fp.schema["fp"].nullable is False
+    corpus = docs.where(F.col("doc_id") % 10 != 0)
+    new = docs.where(F.col("doc_id") % 10 == 0)
+    index = build_simhash_index(
+        corpus, "doc_id", "text", bits=32, max_hamming=3, register=False
+    )
+    try:
+        probe = simhash_against_index(new, index, "doc_id", "text")
+        nodes = _plan_nodes(probe)
+        assert nodes.count("ArrowEvalPython") == 1, nodes
+        assert nodes.count("InMemoryTableScan") == 1, nodes
+    finally:
+        index.unpersist()
