@@ -29,6 +29,20 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(len(os.sched_getaffinity(0))))
 RUNS = int(os.environ.get("BENCH_RUNS", "2"))
 
+
+def free_record_name(directory: str, name: str) -> str:
+    """``name`` if no file in ``directory`` has it, else the first free
+    one of ``<stem>_<CPUS>c.json``, ``<stem>_<CPUS>c_2.json``, ...: a
+    sweep never replaces a committed record (a sweep on another host's
+    core count would otherwise take its name)."""
+    stem = name[: -len(".json")]
+    candidates = [name, f"{stem}_{CPUS}c.json"]
+    candidates += [f"{stem}_{CPUS}c_{i}.json" for i in range(2, 1000)]
+    return next(
+        n for n in candidates if not os.path.exists(os.path.join(directory, n))
+    )
+
+
 # Headline set: one per operator family (BASELINE.md's bench plan) plus the
 # join pipeline. Cheap metadata-only queries are excluded.
 BENCH_QUERIES = [
@@ -707,7 +721,9 @@ def main() -> None:
     # of stdout, which truncates the first ~15 per-query entries; write the
     # complete dict next to it so every round has the full per-query sweep
     # on disk (BASELINE.md "Durable bench records"). Round number = 1 + the
-    # newest driver round seen in CORRECTNESS_r*.json; overwrite-safe.
+    # newest round seen in CORRECTNESS_r*.json. An existing record
+    # is never replaced: a taken name gets the core count as a suffix,
+    # then a counter.
     local_record = "BENCH_LOCAL (write failed)"
     try:
         import glob as _glob
@@ -738,7 +754,8 @@ def main() -> None:
         # the filename so it can never be mistaken for an anchor record.
         if not canary_quiet:
             name = name.replace(".json", "_noisy.json")
-        with open(os.path.join(here, name), "w") as f:
+        name = free_record_name(here, name)
+        with open(os.path.join(here, name), "x") as f:
             json.dump(out, f, indent=1, sort_keys=True)
         local_record = name  # only advertise the record once it exists
     except Exception:

@@ -295,35 +295,38 @@ def _learn_ctes(relation: str, text_expr: str, n_merges: int):
     """The shared CTE chain of the training loop: returns
     ``(ctes, final_vocab_cte)`` where the final CTE holds the fully
     segmented vocabulary ``(w, c, s array<varchar>)`` — consumed by
-    both :func:`bpe_learn_sql` and :func:`bpe_apply_sql`."""
+    both :func:`bpe_learn_sql` and :func:`bpe_apply_sql`. Every head is
+    ``AS MATERIALIZED``: DuckDB inlines a plain CTE at each reference,
+    and round i reads ``v{i}`` twice, so an unhinted chain doubles per
+    merge."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
     ctes = [
         (
-            "w0 AS (SELECT unnest(regexp_split_to_array(trim(lower("
+            "w0 AS MATERIALIZED (SELECT unnest(regexp_split_to_array(trim(lower("
             f"{text_expr})), '{WORD_SPLIT_SQL}')) AS w FROM {relation})"
         ),
         (
-            "v0 AS (SELECT w, count(*) AS c, list_transform(range(1, "
+            "v0 AS MATERIALIZED (SELECT w, count(*) AS c, list_transform(range(1, "
             "len(w) + 1), i -> substring(w, i, 1)) AS s "
             "FROM w0 WHERE len(w) >= 2 GROUP BY w)"
         ),
     ]
     for i in range(n_merges):
         ctes.append(
-            f"pc{i} AS (SELECT pair, sum(c) AS pair_count FROM ("
+            f"pc{i} AS MATERIALIZED (SELECT pair, sum(c) AS pair_count FROM ("
             f"SELECT unnest(list_transform(range(1, len(s)), "
             f"j -> s[j] || '{PAIR_SEP}' || s[j + 1])) AS pair, c "
             f"FROM v{i}) GROUP BY pair)"
         )
         ctes.append(
-            f"best{i} AS (SELECT split_part(pair, '{PAIR_SEP}', 1) AS l, "
+            f"best{i} AS MATERIALIZED (SELECT split_part(pair, '{PAIR_SEP}', 1) AS l, "
             f"split_part(pair, '{PAIR_SEP}', 2) AS r FROM pc{i} "
             f"ORDER BY pair_count DESC, pair ASC LIMIT 1)"
         )
         fold = _merge_fold_sql("v.s", "b.l", "b.r")
         ctes.append(
-            f"v{i + 1} AS (SELECT v.w, v.c, {fold} AS s "
+            f"v{i + 1} AS MATERIALIZED (SELECT v.w, v.c, {fold} AS s "
             f"FROM v{i} v, best{i} b)"
         )
     return ctes, f"v{n_merges}"

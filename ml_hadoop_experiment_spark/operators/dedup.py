@@ -22,6 +22,7 @@ reproducibility is not needed (see functions/hashing.py docstring).
 
 from __future__ import annotations
 
+import hashlib
 import logging
 import math
 from typing import List, Optional
@@ -853,9 +854,11 @@ _SIMHASH_ARROW_UDFS: dict = {}
 def _simhash_arrow_udf(bits: int):
     """Vectorized SimHash vote kernel: an Arrow ``pandas_udf`` taking the
     TOKEN ARRAY column and returning the ``bits``-bit fingerprint. Per
-    batch: md5/sha256 each token once (hashlib — C speed), extract the
-    top bit of each digest nibble with two numpy shifts, sum votes per
-    bit, pack the sign bits.
+    batch: flatten the token arrays and factorize them, so each DISTINCT
+    token is hashed once (md5/sha256 via hashlib — C speed); extract the
+    top bit of each used digest nibble with two numpy shifts; give each
+    token occurrence its bit row by inverse id; ``np.add.reduceat`` sums
+    the votes per document; pack the sign bits.
 
     Nibble b of the hex digest >= '8' == bit 7 (even b) / bit 3 (odd b)
     of digest byte b//2; vote rule ``2 * set_count > n`` strict; NULL or
@@ -863,31 +866,36 @@ def _simhash_arrow_udf(bits: int):
     if bits in _SIMHASH_ARROW_UDFS:
         return _SIMHASH_ARROW_UDFS[bits]
     assert 1 <= bits <= 63, "bigint fingerprint holds at most 63 bits"
-    import hashlib
-
     nbytes = (bits + 1) // 2  # digest bytes that carry the used nibbles
     hasher = hashlib.md5 if bits <= 32 else hashlib.sha256
-    digest_len = 16 if bits <= 32 else 32
+    weights = np.int64(1) << np.arange(bits, dtype=np.int64)
 
     @F.pandas_udf("long")
     def _fp(tokens: pd.Series) -> pd.Series:
-        shifts = np.arange(bits, dtype=np.uint64)
+        lens = np.fromiter(
+            (0 if t is None else len(t) for t in tokens), np.int64, len(tokens)
+        )
         out = np.zeros(len(tokens), dtype=np.int64)
-        for i, toks in enumerate(tokens):
-            if toks is None or len(toks) == 0:
-                continue
-            n = len(toks)
-            buf = b"".join(hasher(t.encode("utf-8")).digest() for t in toks)
-            arr = np.frombuffer(buf, dtype=np.uint8).reshape(n, digest_len)
-            arr = arr[:, :nbytes]
-            # even nibble index 2j = high nibble of byte j (>= 8 == top
-            # bit); odd nibble 2j+1 = low nibble (its bit 3)
-            mat = np.empty((n, 2 * nbytes), dtype=np.uint8)
-            mat[:, 0::2] = arr >> 7
-            mat[:, 1::2] = (arr >> 3) & 1
-            votes = mat[:, :bits].sum(axis=0, dtype=np.int64)
-            fp_bits = (votes * 2 > n).astype(np.uint64)
-            out[i] = int((fp_bits << shifts).sum())
+        rows = np.flatnonzero(lens)
+        if rows.size == 0:
+            return pd.Series(out)
+        codes, uniq = pd.factorize(
+            np.concatenate([tokens.iat[i] for i in rows]), use_na_sentinel=False
+        )
+        digests = np.frombuffer(
+            b"".join(hasher(t.encode("utf-8")).digest()[:nbytes] for t in uniq),
+            dtype=np.uint8,
+        ).reshape(len(uniq), nbytes)
+        # even nibble index 2j = high nibble of byte j (>= 8 == top
+        # bit); odd nibble 2j+1 = low nibble (its bit 3)
+        token_bits = np.empty((len(uniq), 2 * nbytes), dtype=np.uint8)
+        token_bits[:, 0::2] = digests >> 7
+        token_bits[:, 1::2] = (digests >> 3) & 1
+        n = lens[rows]
+        votes = np.add.reduceat(
+            token_bits[codes, :bits], np.cumsum(n) - n, axis=0, dtype=np.int64
+        )
+        out[rows] = (votes * 2 > n[:, None]) @ weights
         return pd.Series(out)
 
     _SIMHASH_ARROW_UDFS[bits] = _fp
@@ -966,17 +974,14 @@ def simhash_block_bounds(bits: int, max_hamming: int) -> List[tuple]:
     return bounds
 
 
-def _simhash_block_frame(
-    fp: DataFrame, bits: int, max_hamming: int
-) -> DataFrame:
+def _simhash_blocks(fp: DataFrame, bits: int, max_hamming: int) -> DataFrame:
     """(id, fp, part, block) pigeonhole rows for a ``(id, fp)`` frame —
     one row per disjoint fingerprint segment per doc. Single-scan
     blocking (the round-3 minhash banding lesson): ONE explode of an
     array(struct(part, block)) column, not one union arm per segment —
     union arms re-evaluate the fingerprint per arm AND per join side
-    (measured 2.6x slower at sf0.1). The exploded frame auto-persists
-    above the measured crossover so the fingerprint computes exactly
-    once; toy inputs skip the materialization stage overhead."""
+    (measured 2.6x slower at sf0.1). Never persists, so a streaming
+    frame and the pinned corpus index build on it unchanged."""
     entries = F.array(
         *[
             F.struct(
@@ -990,12 +995,22 @@ def _simhash_block_frame(
             )
         ]
     )
-    parts = fp.select("id", "fp", F.explode(entries).alias("__e")).select(
+    return fp.select("id", "fp", F.explode(entries).alias("__e")).select(
         "id",
         "fp",
         F.col("__e.part").alias("part"),
         F.col("__e.block").alias("block"),
     )
+
+
+def _simhash_block_frame(
+    fp: DataFrame, bits: int, max_hamming: int
+) -> DataFrame:
+    """:func:`_simhash_blocks` for a per-call join: the exploded frame
+    auto-persists above the measured crossover so the fingerprint
+    computes exactly once; toy inputs skip the materialization stage
+    overhead."""
+    parts = _simhash_blocks(fp, bits, max_hamming)
     if _estimated_input_bytes(fp) > AUTO_PERSIST_BYTES:
         parts = parts.persist()
     return parts
@@ -1027,9 +1042,8 @@ def simhash_against(
     corrupting the result (sides are joined by role, not pooled).
 
     Steady-state posture: the corpus block frame is a pure function of
-    the corpus — persist ``_simhash_block_frame`` of the corpus
-    fingerprints across batches the same way ``build_corpus_index``
-    persists the MinHash band frame (the frame auto-persists above
+    the corpus — pin it across batches with
+    ``simhash_index.build_simhash_index`` (the frame auto-persists above
     ``AUTO_PERSIST_BYTES`` within one call already).
     """
     fp_new = new_df.select(

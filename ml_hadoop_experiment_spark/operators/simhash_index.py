@@ -9,7 +9,17 @@ rotation, not once per batch — exactly the argument (and the API shape)
 of :class:`~.dedup.NearDupCorpusIndex` / ``build_corpus_index`` for the
 MinHash pipeline (SCALE.md "near_dup_incr steady-state index A/B").
 
-It composes dedup.py's ``simhash`` fingerprint and block-frame builder.
+It composes dedup.py's ``simhash`` fingerprint and its block rows.
+
+Partitioning contract: the pinned block rows are hash-partitioned by
+corpus document ``id``. A probe dedups its candidate pairs on a key
+that contains the corpus id, so when the probe side is broadcast and
+the index side is streamed through the join, the ``.distinct()`` is
+already clustered: its partial and final aggregates run inside the
+join's stage, with no shuffle, on as many tasks as the index has
+partitions. This is the build-once, query-many layout of Odyssey
+(VLDB 2023) and REPOSE (ICDE 2021): partition the index once, by the
+key every query needs.
 
 Reference parity: criteo/ml-hadoop-experiment has no dedup surface at
 all (its ~2.1k LoC are ML-inference glue; see SURVEY.md §2) — this is
@@ -23,15 +33,16 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .dedup import _simhash_block_frame, simhash
+from .dedup import _simhash_blocks, simhash
 
 
 class SimHashCorpusIndex:
     """Pinned ``(id, fp, part, block)`` pigeonhole rows of a corpus,
-    plus the fingerprint/blocking parameters used to build them — the
-    parameters travel with the index so every batch is fingerprinted
-    and blocked identically to the corpus (a bits or radius mismatch
-    between sides would silently destroy the pigeonhole guarantee).
+    hash-partitioned by ``id``, plus the fingerprint/blocking
+    parameters used to build them — the parameters travel with the
+    index so every batch is fingerprinted and blocked identically to
+    the corpus (a bits or radius mismatch between sides would silently
+    destroy the pigeonhole guarantee).
 
     Build with :func:`build_simhash_index`; feed to
     :func:`simhash_against_index`; :meth:`unpersist` when the corpus
@@ -60,12 +71,23 @@ def build_simhash_index(
     """Precompute and pin the corpus block frame ``simhash_against``
     derives per call: one ``bits``-wide fingerprint scan over the
     corpus plus the ``max_hamming + 1`` pigeonhole rows per document.
-    Persisted at MEMORY_AND_DISK (spill-safe — at 100 TB the block
-    frame is ~(d+1) skinny rows per doc, landing on local disk rather
-    than OOM) and, with ``eager``, materialized here so the first
-    batch's job doesn't pay the corpus fingerprint scan. The block
-    construction is dedup.py's own ``_simhash_block_frame`` — shared
-    code, so index blocking can never drift from the per-call path's.
+    Exactly one frame is persisted, at ``storage_level`` (default
+    MEMORY_AND_DISK: spill-safe — at 100 TB the block frame is ~(d+1)
+    skinny rows per doc, landing on local disk rather than OOM) and,
+    with ``eager``, materialized here so the first batch's job doesn't
+    pay the corpus fingerprint scan. The block rows come from dedup.py's
+    own ``_simhash_blocks`` — shared code, so index blocking can never
+    drift from the per-call path's.
+
+    The last operator before the persist is ``repartition(n, "id")``
+    with ``n = max(defaultParallelism, the block rows' partition
+    count)``; an explicit count makes it a by-number repartition, which
+    adaptive execution does not coalesce, so the cached plan reports
+    ``hashpartitioning(id, n)``. It must come last: the fingerprint's
+    ``ArrowEvalPython`` and the block explode's ``Generate`` both drop
+    their child's partitioning, so a corpus repartitioned before
+    fingerprinting is cached as unknown partitioning and every probe
+    shuffles again for its ``.distinct()``.
 
     ``register=True`` (default) tracks the pin with
     ``common.cache_registry`` so sweep drivers reclaim it between
@@ -81,16 +103,14 @@ def build_simhash_index(
         F.col(id_col).alias("id"),
         simhash(F.col(text_col), bits).alias("fp"),
     )
-    blocks = _simhash_block_frame(fp_corp, bits, max_hamming)
-    level = storage_level or StorageLevel.MEMORY_AND_DISK
-    current = blocks.storageLevel
-    if not current.useMemory and not current.useDisk:
-        blocks = blocks.persist(level)
-    elif storage_level is not None and current != storage_level:
-        # _simhash_block_frame auto-persisted at its own level; honor
-        # the caller's explicit request instead of silently ignoring it
-        blocks.unpersist()
-        blocks = blocks.persist(level)
+    blocks = _simhash_blocks(fp_corp, bits, max_hamming)
+    n = max(
+        blocks.sparkSession.sparkContext.defaultParallelism,
+        blocks.rdd.getNumPartitions(),
+    )
+    blocks = blocks.repartition(n, "id").persist(
+        storage_level or StorageLevel.MEMORY_AND_DISK
+    )
     if eager:
         blocks.count()
     if register:
@@ -115,12 +135,19 @@ def simhash_against_index(
     segment-keyed join against the pinned frame. Recall stays EXACT at
     the declared radius (pigeonhole over ``max_hamming + 1`` disjoint
     segments, verified by ``bit_count(xor)``).
+
+    When the batch side fits under the broadcast threshold, the join
+    streams the index and keeps its ``id`` partitioning through the
+    ``id_corpus`` alias, so the candidate ``.distinct()`` plans no
+    exchange (see the module docstring). A batch too large to broadcast
+    plans a sort-merge join on ``(part, block)`` and shuffles for the
+    ``.distinct()`` as the per-call path does.
     """
     fp_new = new_df.select(
         F.col(id_col).alias("id"),
         simhash(F.col(text_col), index.bits).alias("fp"),
     )
-    n = _simhash_block_frame(fp_new, index.bits, index.max_hamming).alias("n")
+    n = _simhash_blocks(fp_new, index.bits, index.max_hamming).alias("n")
     c = index.blocks.alias("c")
     cands = (
         n.join(

@@ -267,16 +267,20 @@ def _wp_merge_fold_sql(syms_expr: str, left: str, right: str) -> str:
 
 def _learn_ctes(relation: str, text_expr: str, n_merges: int):
     """Shared training CTE chain: returns ``(ctes, final_vocab_cte)``
-    with the final CTE holding ``(w, c, s array<varchar>)``."""
+    with the final CTE holding ``(w, c, s array<varchar>)``. Every head
+    is ``AS MATERIALIZED``: DuckDB inlines a plain CTE at each
+    reference, and round i reads ``v{i}`` through ``pc{i}``, ``sc{i}``
+    twice and ``v{i+1}``, so an unhinted chain grows about 4x per
+    merge."""
     if n_merges < 1:
         raise ValueError(f"n_merges must be positive, got {n_merges}")
     ctes = [
         (
-            "w0 AS (SELECT unnest(regexp_split_to_array(trim(lower("
+            "w0 AS MATERIALIZED (SELECT unnest(regexp_split_to_array(trim(lower("
             f"{text_expr})), '{WORD_SPLIT_SQL}')) AS w FROM {relation})"
         ),
         (
-            "v0 AS (SELECT w, count(*) AS c, list_transform(range(1, "
+            "v0 AS MATERIALIZED (SELECT w, count(*) AS c, list_transform(range(1, "
             "len(w) + 1), i -> CASE WHEN i = 1 THEN substring(w, i, 1) "
             f"ELSE '{CONT}' || substring(w, i, 1) END) AS s "
             "FROM w0 WHERE len(w) >= 2 GROUP BY w)"
@@ -284,19 +288,19 @@ def _learn_ctes(relation: str, text_expr: str, n_merges: int):
     ]
     for i in range(n_merges):
         ctes.append(
-            f"pc{i} AS (SELECT pair, sum(c) AS pair_count FROM ("
+            f"pc{i} AS MATERIALIZED (SELECT pair, sum(c) AS pair_count FROM ("
             f"SELECT unnest(list_transform(range(1, len(s)), "
             f"j -> s[j] || '{PAIR_SEP}' || s[j + 1])) AS pair, c "
             f"FROM v{i}) GROUP BY pair)"
         )
         ctes.append(
-            f"sc{i} AS (SELECT sym, sum(c) AS sym_count FROM ("
+            f"sc{i} AS MATERIALIZED (SELECT sym, sum(c) AS sym_count FROM ("
             f"SELECT unnest(s) AS sym, c FROM v{i}) GROUP BY sym)"
         )
         # likelihood-gain argmax: ONE double division of exact integer
         # counts on both engines -> bit-identical ordering
         ctes.append(
-            f"best{i} AS (SELECT split_part(pair, '{PAIR_SEP}', 1) AS l, "
+            f"best{i} AS MATERIALIZED (SELECT split_part(pair, '{PAIR_SEP}', 1) AS l, "
             f"split_part(pair, '{PAIR_SEP}', 2) AS r FROM pc{i} "
             f"JOIN sc{i} a ON a.sym = split_part(pair, '{PAIR_SEP}', 1) "
             f"JOIN sc{i} b ON b.sym = split_part(pair, '{PAIR_SEP}', 2) "
@@ -306,7 +310,7 @@ def _learn_ctes(relation: str, text_expr: str, n_merges: int):
         )
         fold = _wp_merge_fold_sql("v.s", "b.l", "b.r")
         ctes.append(
-            f"v{i + 1} AS (SELECT v.w, v.c, {fold} AS s "
+            f"v{i + 1} AS MATERIALIZED (SELECT v.w, v.c, {fold} AS s "
             f"FROM v{i} v, best{i} b)"
         )
     return ctes, f"v{n_merges}"

@@ -16,11 +16,12 @@ which makes a real streaming content-dedup pipeline fully
 oracle-checkable.
 
 Why a separate entry point instead of reusing
-``simhash_against_index``: the batch path's block builder auto-persists
-above a size threshold and finishes with ``.distinct()`` — caching is
-illegal on a streaming plan, and streaming de-duplication must be the
-stateful ``dropDuplicates`` (per-key state, exactly-once emission per
-candidate pair across ALL batches, not per-batch).
+``simhash_against_index``: the batch path finishes with ``.distinct()``,
+and streaming de-duplication must be the stateful ``dropDuplicates``
+(per-key state, exactly-once emission per candidate pair across ALL
+batches, not per-batch). The block rows are the batch path's own
+``_simhash_blocks``, which never persists (caching is illegal on a
+streaming plan).
 
 Reference parity: criteo/ml-hadoop-experiment has no streaming surface
 (SURVEY.md §2.10) — north-star extension for LLM data pipelines.
@@ -31,7 +32,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ..operators.dedup import simhash, simhash_block_bounds
+from ..operators.dedup import _simhash_blocks, simhash
 from ..operators.simhash_index import SimHashCorpusIndex
 
 
@@ -58,30 +59,11 @@ def stream_simhash_against_index(
         F.col(id_col).alias("id"),
         simhash(F.col(text_col), index.bits).alias("fp"),
     )
-    # single-scan pigeonhole blocking (the _simhash_block_frame
-    # construction, re-spelled without its cache heuristics: persist is
-    # illegal on a streaming plan)
-    entries = F.array(
-        *[
-            F.struct(
-                F.lit(part).alias("part"),
-                F.shiftright(F.col("fp"), start)
-                .bitwiseAND(F.lit((1 << width) - 1))
-                .alias("block"),
-            )
-            for part, (start, width) in enumerate(
-                simhash_block_bounds(index.bits, index.max_hamming)
-            )
-        ]
-    )
-    n = (
-        fp_new.select("id", "fp", F.explode(entries).alias("__e"))
-        .select(
-            F.col("id").alias("id_new"),
-            F.col("fp").alias("fp_a"),
-            F.col("__e.part").alias("part"),
-            F.col("__e.block").alias("block"),
-        )
+    n = _simhash_blocks(fp_new, index.bits, index.max_hamming).select(
+        F.col("id").alias("id_new"),
+        F.col("fp").alias("fp_a"),
+        "part",
+        "block",
     )
     c = index.blocks.select(
         F.col("id").alias("id_corpus"),

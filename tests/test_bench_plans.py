@@ -27,6 +27,19 @@ SF_SMOKE = os.environ.get("SPARK_GRAFT_SMOKE_DIR", "/root/testdata/sf0.001")
 _EXECUTES_ON_BUILD = {"ivf_topk", "streaming_dedup", "streaming_rollup"}
 
 
+def test_record_name_never_replaces_a_record(tmp_path):
+    name = "BENCH_LOCAL_r15.json"
+    assert bench.free_record_name(str(tmp_path), name) == name
+    (tmp_path / name).write_text("{}")
+    taken = f"BENCH_LOCAL_r15_{bench.CPUS}c.json"
+    assert bench.free_record_name(str(tmp_path), name) == taken
+    (tmp_path / taken).write_text("{}")
+    assert (
+        bench.free_record_name(str(tmp_path), name)
+        == f"BENCH_LOCAL_r15_{bench.CPUS}c_2.json"
+    )
+
+
 def test_bench_set_is_declared():
     missing = [n for n in bench.BENCH_QUERIES if n not in QUERIES]
     assert not missing, f"bench names without declared queries: {missing}"

@@ -419,3 +419,44 @@ class TestMergeListFold:
             return plan.count("aggregate(")
 
         assert n_aggregates(merges[:1]) == n_aggregates(merges) > 0
+
+
+@pytest.mark.parametrize(
+    "module, fn", [("bpe", "bpe_learn_sql"), ("wordpiece", "wordpiece_learn_sql")]
+)
+def test_learn_twin_is_materialized_without_a_wrapper(module, fn):
+    """The unrolled learn chains read each round's vocabulary several
+    times; DuckDB inlines a plain CTE at every reference, so unhinted
+    heads grow the statement 2-4x per merge (WordPiece took 6 s at five
+    merges). ``_learn_ctes`` emits ``AS MATERIALIZED`` heads itself: 16
+    merges answer in well under a second with no
+    ``queries._shared._materialize_ctes`` around them."""
+    import importlib
+    import time
+
+    import duckdb
+
+    from ml_hadoop_experiment_spark.queries._shared import _materialize_ctes
+
+    learn_sql = getattr(
+        importlib.import_module(f"ml_hadoop_experiment_spark.operators.{module}"), fn
+    )
+    con = duckdb.connect()
+    con.execute("CREATE TABLE docs (text VARCHAR)")
+    con.executemany(
+        "INSERT INTO docs VALUES (?)",
+        [
+            ("the quick brown fox jumps over the lazy dog",),
+            ("pack my box with five dozen liquor jugs",),
+        ],
+    )
+    sql = learn_sql("docs", "text", 16)
+    # every head already carries the hint; checked before running, since
+    # an unhinted 16-merge chain runs for minutes
+    assert _materialize_ctes(sql) == sql
+    t0 = time.perf_counter()
+    rows = con.execute(sql).fetchall()
+    elapsed = time.perf_counter() - t0
+    con.close()
+    assert len(rows) == 16  # every distinct word of >= 2 characters
+    assert elapsed < 1.0, elapsed

@@ -66,6 +66,8 @@ EDGE_TEXTS = [
     "The  QUICK   brown\tfox",
     " leading and trailing  ",
     "a " * 50 + "b",
+    # more votes per bit than a uint8 holds
+    "a " * 300 + "b c",
 ]
 
 

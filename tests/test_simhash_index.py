@@ -53,17 +53,78 @@ class TestSimhashIndexEquivalence:
             build_simhash_index,
         )
 
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
         corpus = docs.where(F.col("doc_id") % 10 != 0)
         index = build_simhash_index(
-            corpus, "doc_id", "text", bits=16, max_hamming=2
+            corpus, "doc_id", "text", bits=16, max_hamming=2, register=False
         )
         try:
             lvl = index.blocks.storageLevel
-            assert lvl.useMemory or lvl.useDisk
+            assert lvl.useMemory and lvl.useDisk  # MEMORY_AND_DISK default
+            assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
             # (d+1) pigeonhole rows per corpus doc
             assert index.blocks.count() == corpus.count() * 3
         finally:
             index.unpersist()
+        assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+    def test_explicit_storage_level_is_honoured(self, spark, docs):
+        from pyspark import StorageLevel
+
+        from ml_hadoop_experiment_spark.operators.simhash_index import (
+            build_simhash_index,
+        )
+
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keySet())
+        index = build_simhash_index(
+            docs, "doc_id", "text", storage_level=StorageLevel.DISK_ONLY,
+            register=False,
+        )
+        try:
+            assert index.blocks.storageLevel == StorageLevel.DISK_ONLY
+            assert len(set(jsc.getPersistentRDDs().keySet()) - before) == 1
+        finally:
+            index.unpersist()
+
+    def test_duplicate_rows_keep_set_semantics(self, spark, docs):
+        """Repeated ``(id, text)`` rows on both sides repeat candidate
+        pairs; the probe's ``.distinct()`` still answers each pair once,
+        as the per-call path and the DuckDB twin's ``SELECT DISTINCT``
+        do."""
+        import duckdb
+
+        from ml_hadoop_experiment_spark.operators.dedup import simhash_against
+        from ml_hadoop_experiment_spark.operators.simhash_index import (
+            build_simhash_index,
+            simhash_against_index,
+        )
+        from ml_hadoop_experiment_spark.queries import ORACLE_SQL
+
+        dup = docs.unionAll(docs.where(F.col("doc_id") % 3 == 0))
+        new = dup.where(F.col("doc_id") % 10 == 0)
+        corpus = dup.where(F.col("doc_id") % 10 != 0)
+        index = build_simhash_index(
+            corpus, "doc_id", "text", bits=32, max_hamming=3, register=False
+        )
+        try:
+            got = _rows(simhash_against_index(new, index, "doc_id", "text"))
+        finally:
+            index.unpersist()
+        want = _rows(
+            simhash_against(new, corpus, "doc_id", "text", bits=32, max_hamming=3)
+        )
+        con = duckdb.connect()
+        con.register("documents", dup.toPandas())
+        oracle = sorted(
+            tuple(r) for r in con.execute(
+                f"SELECT id_new, id_corpus, hamming FROM ({ORACLE_SQL['simhash_index']})"
+            ).fetchall()
+        )
+        con.close()
+        assert got == want == oracle
+        assert got and len(got) == len(set(got))
 
     def test_parameters_travel_with_index(self, spark, docs):
         """A batch filtered through the index uses the INDEX's bits and
@@ -131,5 +192,57 @@ def test_probe_side_runs_the_kernel_once(spark, docs):
         nodes = _plan_nodes(probe)
         assert nodes.count("ArrowEvalPython") == 1, nodes
         assert nodes.count("InMemoryTableScan") == 1, nodes
+    finally:
+        index.unpersist()
+
+
+def test_index_is_partitioned_by_corpus_id(spark, docs):
+    """The repartition by ``id`` is the cached plan's last operator, so
+    the pinned relation reports ``hashpartitioning(id, n)``."""
+    from ml_hadoop_experiment_spark.operators.simhash_index import (
+        build_simhash_index,
+    )
+
+    corpus = docs.where(F.col("doc_id") % 10 != 0)
+    index = build_simhash_index(
+        corpus, "doc_id", "text", bits=32, max_hamming=3, register=False
+    )
+    try:
+        cached = (
+            index.blocks._jdf.queryExecution().withCachedData()
+            .cacheBuilder().cachedPlan()
+        )
+        if cached.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+            cached = cached.executedPlan()
+        n = max(spark.sparkContext.defaultParallelism, corpus.rdd.getNumPartitions())
+        part = cached.outputPartitioning().toString()
+        assert part.startswith("hashpartitioning(id#"), part
+        assert part.endswith(f", {n})"), part
+    finally:
+        index.unpersist()
+
+
+def test_probe_dedups_inside_the_join_stage(spark, docs):
+    """With the batch side broadcast and the index side streamed, the
+    candidate ``.distinct()`` is already clustered by the corpus id: no
+    shuffle outside the cached relation, one broadcast, and both
+    aggregates sit directly above the join."""
+    from ml_hadoop_experiment_spark.operators.simhash_index import (
+        build_simhash_index,
+        simhash_against_index,
+    )
+
+    corpus = docs.where(F.col("doc_id") % 10 != 0)
+    new = docs.where(F.col("doc_id") % 10 == 0)
+    index = build_simhash_index(
+        corpus, "doc_id", "text", bits=32, max_hamming=3, register=False
+    )
+    try:
+        nodes = _plan_nodes(simhash_against_index(new, index, "doc_id", "text"))
+        assert "Exchange" not in nodes, nodes
+        assert nodes.count("BroadcastExchange") == 1, nodes
+        assert nodes[:4] == [
+            "HashAggregate", "HashAggregate", "Project", "BroadcastHashJoin"
+        ], nodes
     finally:
         index.unpersist()

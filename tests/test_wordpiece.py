@@ -21,7 +21,6 @@ from ml_hadoop_experiment_spark.operators.wordpiece import (
     wordpiece_learn,
     wordpiece_learn_sql,
 )
-from ml_hadoop_experiment_spark.queries._shared import _materialize_ctes
 
 ROWS = [
     (1, "the cat sat on the mat"),
@@ -202,17 +201,15 @@ class TestAdversarialTwin:
         docs = spark.createDataFrame(self.DOCS, "doc_id long, text string")
         vocab, merges = wordpiece_learn(docs, "text", n)
         assert [(m[0], m[1]) for m in merges] == self.MERGES
-        # the unrolled chain reads each round's CTE several times:
-        # materialize it, as the declared oracles do
         got = sorted(map(tuple, vocab.collect()))
         want = sorted(map(tuple, duck.execute(
-            _materialize_ctes(wordpiece_learn_sql("docs", "text", n))
+            wordpiece_learn_sql("docs", "text", n)
         ).fetchall()))
         assert got == want
         got = sorted(map(tuple, wordpiece_encode(
             docs, "doc_id", "text", vocab
         ).collect()))
-        want = sorted(map(tuple, duck.execute(_materialize_ctes(
+        want = sorted(map(tuple, duck.execute(
             wordpiece_encode_sql("docs", "doc_id", "text", n)
-        )).fetchall()))
+        ).fetchall()))
         assert got == want
