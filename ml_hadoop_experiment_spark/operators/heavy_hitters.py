@@ -33,26 +33,36 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
+def _mg_fold(
+    summary: pd.Series, values: pd.Series, capacity: int
+) -> pd.Series:
+    """Fold one batch of ``values`` into a Misra-Gries ``summary``
+    (token -> count): add the batch's ``value_counts`` (C-speed, NULLs
+    dropped), then re-bound by the mergeable-summaries reduction —
+    subtract the (capacity+1)-th largest count, keep positives — which
+    Agarwal et al. prove preserves the N/(capacity+1) undercount bound.
+    The one MG step of the batch operator and the stream
+    (``streaming/sketches.stateful_heavy_hitters``)."""
+    vc = values.value_counts()
+    s = vc if summary.empty else summary.add(vc, fill_value=0)
+    if len(s) > capacity:
+        thr = s.nlargest(capacity + 1).iloc[-1]
+        s = s[s > thr] - thr
+    return s
+
+
 def mg_candidates(
     tokens: DataFrame, token_col: str, capacity: int
 ) -> DataFrame:
     """Per-partition Misra-Gries summaries, unioned: (token, mg_count)
     with at most ``capacity`` rows per partition. Map-only (no shuffle).
-
-    Vectorized MG: each Arrow batch is folded in with ``value_counts``
-    (C-speed) and the summary is re-bounded by the mergeable-summaries
-    reduction — subtract the (capacity+1)-th largest count, keep
-    positives — which Agarwal et al. prove preserves the N/(capacity+1)
-    undercount bound. No per-row Python."""
+    Each Arrow batch folds in through :func:`_mg_fold`; no per-row
+    Python."""
 
     def summarize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         s = pd.Series(dtype="float64")
         for pdf in batches:
-            vc = pdf[token_col].dropna().value_counts()
-            s = vc.copy() if s.empty else s.add(vc, fill_value=0)
-            if len(s) > capacity:
-                thr = s.nlargest(capacity + 1).iloc[-1]
-                s = s[s > thr] - thr
+            s = _mg_fold(s, pdf[token_col], capacity)
         if len(s):
             yield pd.DataFrame(
                 {"token": s.index.astype(str), "mg_count": s.astype("int64").values}

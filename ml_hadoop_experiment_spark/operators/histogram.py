@@ -10,15 +10,17 @@ cross-engine-reproducible merge, and equi-depth boundaries shift with
 every batch. The fixed-width histogram is the missing form — declare
 ``(lo, hi, n_bins)`` up front and the sketch is an array of
 ``n_bins`` integer counts: exactly mergeable (counts add), bounded
-forever, and every step integer-or-IEEE-double deterministic, so a
-STREAMING fold (``streaming/quantiles.stateful_histogram``) finishes
-through the SAME estimator as the batch path and hash-matches a DuckDB
-replay. The trade is declared resolution: the estimate is the LOWER
-EDGE of the bin holding rank ``ceil(q*N)`` — error bounded by one bin
-width, the classic monitoring-quantile posture (Prometheus histograms
-work this way — public knowledge).
+forever, and every step integer-or-IEEE-double deterministic. The
+stream sketch is :func:`histogram_counts` itself run on a streaming
+frame and drained in ``"update"`` mode: Spark's state store adds each
+micro-batch's counts, so ``max(cnt)`` per (key, bin) over the drained
+rows finishes through the SAME estimator as the batch path and
+hash-matches a DuckDB replay. The trade is declared resolution: the
+estimate is the LOWER EDGE of the bin holding rank ``ceil(q*N)`` —
+error bounded by one bin width, the classic monitoring-quantile
+posture (Prometheus histograms work this way — public knowledge).
 
-Binning contract (shared by Spark expression, pandas fold, and SQL):
+Binning contract (shared by the Spark expression and the SQL twin):
 ``bin = floor(clamp((v - lo) / width, 0, n_bins - 1))`` with
 ``width = (hi - lo) / n_bins`` computed ONCE in Python and embedded as
 the same double literal everywhere (the clamp happens in DOUBLE before
@@ -34,7 +36,7 @@ that bounded frame only. At 100 TB this is the cheapest quantile
 answer that still merges across arbitrary repartitionings.
 
 Reference parity: criteo/ml-hadoop-experiment has no quantile surface
-(SURVEY.md §2) — north-star extension, paired with the streaming twin.
+(SURVEY.md §2) — north-star extension, batch and streamed.
 """
 
 from __future__ import annotations
@@ -88,7 +90,7 @@ def fixed_width_bin_expr(
 ) -> Column:
     """Bin index of ``col`` under the module's binning contract —
     pure codegen, map-only. Callers must exclude NULL/NaN upstream
-    (:func:`histogram_counts` and the streaming fold both do)."""
+    (:func:`histogram_counts` does)."""
     width = _geometry(lo, hi, n_bins)
     scaled = (col.cast("double") - F.lit(float(lo))) / F.lit(width)
     # clamp in DOUBLE before floor/cast: a far-out-of-range value must
@@ -110,13 +112,13 @@ def histogram_counts(
     hi: float,
     n_bins: int,
 ) -> DataFrame:
-    """``(*key_cols, bin, cnt)`` for occupied bins — the batch producer
-    of the sketch (the streaming producer is
-    ``streaming/quantiles.stateful_histogram``; both feed
-    :func:`quantiles_from_histogram`). NULL and NaN values are both
-    skipped — NaN is NOT null in Spark, and the streaming fold's
-    pandas ``dropna`` drops both, so the explicit isnan test is what
-    keeps the batch, stream, and DuckDB producers on one rule."""
+    """``(*key_cols, bin, cnt)`` for occupied bins — the producer of
+    the sketch for :func:`quantiles_from_histogram`, batch or streamed
+    (drain a streaming frame in ``"update"`` mode and finish with
+    ``max(cnt)`` per (key, bin), see ``queries.q_streaming_quantiles``).
+    NULL and NaN values are both skipped — NaN is NOT null in Spark,
+    so the explicit isnan test is what keeps the Spark and DuckDB
+    producers on one rule."""
     return (
         df.where(finite_filter(F.col(value_col)))
         .select(

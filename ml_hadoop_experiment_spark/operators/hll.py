@@ -65,12 +65,22 @@ def _check_p(p: int) -> None:
 
 
 def hll_register_rows(
-    df: DataFrame, value_col: Column, p: int = 8
+    df: DataFrame,
+    value_col: Column,
+    p: int = 8,
+    key_cols: Sequence[str] = (),
 ) -> DataFrame:
-    """``(register, M)`` rows — one per OCCUPIED register, ``M`` = max
-    rho of the values hashing there. The whole sketch: a groupBy over
-    at most ``2^p`` keys (map-side combine does the real work; the
-    exchange moves at most ``m`` rows however large the input).
+    """``(*key_cols, register, M)`` rows — one per OCCUPIED register of
+    each key, ``M`` = max rho of the key's values hashing there. The
+    whole sketch: a groupBy over at most ``keys x 2^p`` groups
+    (map-side combine does the real work; the exchange moves at most
+    ``m`` rows per key however large the input).
+
+    On a streaming frame this is the stream sketch too: drained in
+    ``"update"`` mode, Spark's state store keeps the max-merged
+    registers and each micro-batch emits the registers it raised, so
+    ``max(M)`` per (key, register) over the drained rows is the
+    whole-stream sketch (see ``queries.q_streaming_distinct``).
 
     register = value of the first p/4 md5 hex nibbles; rho = 1 + the
     number of leading zero BITS of the remaining nibbles (clamped at
@@ -100,8 +110,8 @@ def hll_register_rows(
     rho = F.least(zn * 4 + intra + 1, F.lit(RHO_CAP))
     return (
         df.where(value_col.isNotNull())
-        .select(reg.alias("register"), rho.alias("rho"))
-        .groupBy("register")
+        .select(*key_cols, reg.alias("register"), rho.alias("rho"))
+        .groupBy(*key_cols, "register")
         .agg(F.max("rho").alias("M"))
     )
 
@@ -110,9 +120,9 @@ def estimate_from_register_rows(
     regs: DataFrame, p: int, key_cols: Sequence[str] = ()
 ) -> DataFrame:
     """The estimator half of the sketch, separated so ANY producer of
-    ``(*key_cols, register, M)`` rows — the batch scan below, or the
-    streaming state operator in ``streaming/sketches.py`` — finishes
-    through the identical arithmetic: exact BIGINT harmonic sum,
+    ``(*key_cols, register, M)`` rows — :func:`hll_register_rows` over a
+    table, or the max-merged rows it emitted as an update-mode stream —
+    finishes through the identical arithmetic: exact BIGINT harmonic sum,
     one double division, the linear-counting correction branch, one
     round. Returns ``(*key_cols, n_est)`` (one global row when
     ``key_cols`` is empty)."""
@@ -250,9 +260,10 @@ def hll_keyed_estimate_sql(
     out_key: str = "key",
 ) -> str:
     """DuckDB twin of ``estimate_from_register_rows`` over per-key
-    register rows built from ``relation`` — the batch oracle for the
-    streaming HLL (``streaming/sketches.py``): same nibble decoding,
-    same exact-integer harmonic sum and correction branch, per key."""
+    register rows built from ``relation`` — the oracle for the keyed
+    HLL, batch or streamed (``queries.q_streaming_distinct``): same
+    nibble decoding, same exact-integer harmonic sum and correction
+    branch, per key."""
     _check_p(p)
     m = 1 << p
     alpha = _alpha(m)

@@ -40,26 +40,30 @@ SELECT doc_id FROM documents
 
 
 def q_streaming_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming distinct-count sketch
-    (streaming/sketches.stateful_hll_distinct): distinct users per
-    event type with HLL registers as the per-key state (m=256 ints per
-    key FOREVER, vs exact-distinct state that grows with cardinality),
-    drained availableNow. The emitted (key, register, M) rows are
-    max-merged and finished through the SAME estimator expression as
-    the batch sketch, so the streaming result equals a batch replay —
-    and the DuckDB oracle replays that batch estimator over events,
-    making a stateful streaming sketch fully oracle-checkable."""
+    """Streaming distinct-count sketch: distinct users per event type
+    with HLL registers as the per-key state (at most m=256 register
+    rows per key FOREVER, vs exact-distinct state that grows with
+    cardinality). The batch operator ``operators.hll.hll_register_rows``
+    runs on the stream itself, drained availableNow in update mode: its
+    ``groupBy(event_type, register).agg(max(rho))`` keeps the
+    max-merged registers in Spark's state store, with no Python
+    worker. The emitted (key, register, M) rows are max-merged and
+    finished through the SAME estimator expression as the batch
+    sketch, so the streaming result equals a batch replay — and the
+    DuckDB oracle replays that batch estimator over events.
+
+    Checkpoints written by the earlier version of this stream, which
+    held a register array per key in a Python state function, cannot
+    be resumed: the state schema differs."""
     from ml_hadoop_experiment_spark.operators.hll import (
         estimate_from_register_rows,
-    )
-    from ml_hadoop_experiment_spark.streaming.sketches import (
-        stateful_hll_distinct,
+        hll_register_rows,
     )
 
     stream = _stream_t(spark, sf_dir, "events").select("event_type", "user_id")
-    out = stateful_hll_distinct(stream, ["event_type"], "user_id", p=8)
+    out = hll_register_rows(stream, F.col("user_id"), 8, ["event_type"])
     regs = (
-        drain(out)
+        drain(out, "update")
         .groupBy("event_type", "register")
         .agg(F.max("M").alias("M"))
     )
@@ -82,30 +86,34 @@ SQL_STREAMING_DISTINCT = _sql_streaming_distinct()
 
 
 def q_streaming_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming quantile sketch
-    (streaming/quantiles.stateful_histogram): p50/p90/p99 of event
-    value per event type with a fixed-width histogram as the per-key
-    state (1000 longs per key FOREVER, vs exact quantile state that
-    grows with cardinality), drained availableNow. The emitted
-    (key, bin, cnt) rows are max-merged (counts only grow) and
+    """Streaming quantile sketch: p50/p90/p99 of event value per event
+    type with a fixed-width histogram as the per-key state (at most
+    1000 bin counts per key FOREVER, vs exact quantile state that grows
+    with cardinality). The batch operator
+    ``operators.histogram.histogram_counts`` runs on the stream itself,
+    drained availableNow in update mode: Spark's state store adds each
+    micro-batch's (key, bin) counts, with no Python worker. The
+    emitted (key, bin, cnt) rows are max-merged (counts only grow) and
     finished through the SAME estimator as the batch sketch
     (operators/histogram.quantiles_from_histogram — lower edge of the
     bin holding rank ceil(q*N)), so the streaming result equals a
     batch replay and the DuckDB oracle replays that batch chain over
-    events."""
+    events.
+
+    Checkpoints written by the earlier version of this stream, which
+    held a count array per key in a Python state function, cannot be
+    resumed: the state schema differs."""
     from ml_hadoop_experiment_spark.operators.histogram import (
+        histogram_counts,
         quantiles_from_histogram,
-    )
-    from ml_hadoop_experiment_spark.streaming.quantiles import (
-        stateful_histogram,
     )
 
     stream = _stream_t(spark, sf_dir, "events").select("event_type", "value")
-    out = stateful_histogram(
+    out = histogram_counts(
         stream, ["event_type"], "value", lo=0.0, hi=500.0, n_bins=1000
     )
     sketch = (
-        drain(out)
+        drain(out, "update")
         .groupBy("event_type", "bin")
         .agg(F.max("cnt").alias("cnt"))
     )
@@ -415,21 +423,20 @@ SQL_STREAMING_MOMENTS = _sql_streaming_moments()
 
 def q_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming drift monitor: the purchase-event value stream folds
-    into the bounded histogram state (streaming/quantiles.
-    stateful_histogram), and the drained sketch is scored against a
-    STATIC reference slice (view events, batch-binned on the same
-    grid) by the PSI finisher (operators/drift.psi_from_counts) —
-    the composition an ingestion pipeline actually runs: sketch the
-    live side, hold the reference, alert on sum(psi_term). Identical
-    result contract to psi_drift, so the same DuckDB oracle gates it
-    (the simhash_index precedent; the stream==batch sketch identity
-    is pytest-pinned in test_streaming_quantiles)."""
+    into the bounded histogram state (``histogram_counts`` on the
+    stream, drained in update mode as in ``q_streaming_quantiles``;
+    the same checkpoint break applies), and the drained sketch is
+    scored against a STATIC reference slice (view events, batch-binned
+    on the same grid) by the PSI finisher (operators/drift.
+    psi_from_counts) — the composition an ingestion pipeline actually
+    runs: sketch the live side, hold the reference, alert on
+    sum(psi_term). Identical result contract to psi_drift, so the same
+    DuckDB oracle gates it (the simhash_index precedent; the
+    stream==batch sketch identity is pytest-pinned in
+    test_streaming_quantiles)."""
     from ml_hadoop_experiment_spark.operators.drift import psi_from_counts
     from ml_hadoop_experiment_spark.operators.histogram import (
         histogram_counts,
-    )
-    from ml_hadoop_experiment_spark.streaming.quantiles import (
-        stateful_histogram,
     )
 
     stream = (
@@ -437,11 +444,11 @@ def q_streaming_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("event_type") == "purchase")
         .select("event_type", "value")
     )
-    out = stateful_histogram(
+    out = histogram_counts(
         stream, ["event_type"], "value", lo=0.0, hi=500.0, n_bins=20
     )
     live = (
-        drain(out)
+        drain(out, "update")
         .groupBy("bin")
         .agg(F.max("cnt").alias("cnt"))
     )

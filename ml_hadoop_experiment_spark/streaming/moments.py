@@ -1,14 +1,16 @@
 """Whole-stream running moments (count / mean / std) per key — the
 drift-monitor primitive, as a NATIVE streaming aggregation.
 
-Unlike the sketch family (`streaming/sketches.py`, `quantiles.py` —
-custom state via ``applyInPandasWithState``), running sums are the
-one stateful shape Structured Streaming aggregates natively: a
-streaming ``groupBy().agg(count, sum, sum of squares)`` keeps exactly
-three numbers of state per key in the state store, with partial
-aggregation inside every micro-batch. The Spark-first rule of this
-repo applies — when the engine has the operator, use it; Python state
-is for shapes it lacks.
+Like the HLL and histogram stream sketches (the batch operators in
+``operators/hll.py`` and ``operators/histogram.py`` drained in update
+mode), running sums are a stateful shape Structured Streaming
+aggregates natively: a streaming ``groupBy().agg(count, sum, sum of
+squares)`` keeps exactly three numbers of state per key in the state
+store, with partial aggregation inside every micro-batch. The
+Spark-first rule of this repo applies — when the engine has the
+operator, use it; Python state (``streaming/sketches.py`` and
+``streaming/sampling.py``) is for the order-dependent shapes it
+lacks.
 
 The exactness trick is FIXED-POINT sums: summing raw doubles is
 addition-order dependent (a stream and a batch replay would disagree

@@ -15,8 +15,8 @@ hash and takes the same k. Bottom-k-by-hash is also mergeable
 per-batch fold is exact, not approximate.
 
 State per key is EXACTLY ``k`` (id, priority) pairs forever — the
-bounded-state property shared with the HLL registers (1 KiB) and the
-Misra-Gries counters in ``streaming/sketches.py``. Emission is the
+bounded-state property shared with the HLL registers, the histogram
+counts and the Misra-Gries counters in ``streaming/sketches.py``. Emission is the
 key's full current sample after every batch it appears in, tagged
 with a per-key ``seq``; the whole-stream sample is the max-seq
 emission (the MG convention — the sample set is not monotone per id:

@@ -127,9 +127,6 @@ class TestPsiReport:
             histogram_counts,
         )
         from ml_hadoop_experiment_spark.streaming import drain
-        from ml_hadoop_experiment_spark.streaming.quantiles import (
-            stateful_histogram,
-        )
 
         sf_dir = "/root/testdata/sf0.001"
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
@@ -141,7 +138,8 @@ class TestPsiReport:
             .select("event_type", "value")
         )
         sunk = drain(
-            stateful_histogram(stream, ["event_type"], "value", 0.0, 500.0, 20)
+            histogram_counts(stream, ["event_type"], "value", 0.0, 500.0, 20),
+            "update",
         )
         live = sunk.groupBy("bin").agg(F.max("cnt").alias("cnt"))
         ref = histogram_counts(

@@ -119,6 +119,22 @@ def test_vocab_build_partial_aggregation(spark):
     assert plan.count("Exchange hashpartitioning") == 1, plan
 
 
+def test_plan_report_counts_a_cached_plan_once(spark):
+    """A probe of the pinned SimHash index reads a cached relation whose
+    AQE plan prints its final and its initial plan; the plan-shape table
+    counts the final one only: the index's one hash repartition and the
+    two fingerprint projections (probe side and index side)."""
+    import sys
+
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+    from tools.plan_report import describe
+
+    plan = executed_plan_str(QUERIES["simhash_index"](spark, SF_DIR))
+    assert "== Initial Plan ==" in plan
+    d = describe(plan)
+    assert (d["shuffles"], d["python"]) == (1, 2), plan
+
+
 def test_inference_udf_is_arrow(spark):
     """The inference column must evaluate as ArrowEvalPython (vectorized),
     not row-at-a-time BatchEvalPython."""

@@ -1,6 +1,7 @@
-"""Streaming fixed-width histogram quantiles: hand-computed batch
-goldens, bin-clamp boundaries, stream==batch sketch identity,
-multi-batch additive merge, and the construction-time type guard."""
+"""Fixed-width histogram quantiles: hand-computed batch goldens,
+bin-clamp boundaries, and the batch operator run as an update-mode
+stream — stream==batch sketch identity, multi-batch additive merge,
+NULL/NaN skipping and non-double value columns."""
 
 from __future__ import annotations
 
@@ -9,6 +10,7 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from ml_hadoop_experiment_spark.operators.histogram import histogram_counts
 from ml_hadoop_experiment_spark.streaming import drain
 
 
@@ -162,15 +164,25 @@ class TestQuantilesFromHistogram:
             )
 
 
-class TestStatefulHistogram:
-    def test_stream_sketch_equals_batch_counts(self, spark):
-        from ml_hadoop_experiment_spark.operators.histogram import (
-            histogram_counts,
-        )
-        from ml_hadoop_experiment_spark.streaming.quantiles import (
-            stateful_histogram,
-        )
+def _streamed_counts(spark, df, path):
+    """Write ``df`` as one parquet source, stream it through
+    ``histogram_counts`` and return the max-merged counts."""
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+    stream = spark.readStream.schema(df.schema).parquet(path)
+    counts = histogram_counts(stream, ["event_type"], "value", 0.0, 500.0, 1000)
+    return _final_counts(drain(counts, "update"))
 
+
+def _batch_counts(df):
+    return _final_counts(
+        histogram_counts(df, ["event_type"], "value", 0.0, 500.0, 1000)
+    )
+
+
+class TestStatefulHistogram:
+    """``histogram_counts`` run on a stream and drained in update mode."""
+
+    def test_stream_sketch_equals_batch_counts(self, spark):
         sf_dir = "/root/testdata/sf0.001"
         ev = spark.read.parquet(f"{sf_dir}/events.parquet")
         stream = (
@@ -180,26 +192,17 @@ class TestStatefulHistogram:
             .select("event_type", "value")
         )
         sunk = drain(
-            stateful_histogram(
+            histogram_counts(
                 stream, ["event_type"], "value", 0.0, 500.0, 1000
-            )
+            ),
+            "update",
         )
-        want = {
-            (r["event_type"], r["bin"]): r["cnt"]
-            for r in histogram_counts(
-                ev, ["event_type"], "value", 0.0, 500.0, 1000
-            ).collect()
-        }
-        assert _final_counts(sunk) == want
+        assert _final_counts(sunk) == _batch_counts(ev)
 
     def test_multi_batch_merge_equals_single_batch(self, spark, tmp_path):
         """Three files fed one per micro-batch must finish with the
-        same max-merged counts as one big batch — the additive-merge
-        property the state fold relies on."""
-        from ml_hadoop_experiment_spark.streaming.quantiles import (
-            stateful_histogram,
-        )
-
+        same max-merged counts as one big batch — the additive merge
+        the state store's running count relies on."""
         ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         d = str(tmp_path / "ev")
         os.makedirs(d, exist_ok=True)
@@ -216,31 +219,39 @@ class TestStatefulHistogram:
                 .select("event_type", "value")
             )
             sunk = drain(
-                stateful_histogram(
+                histogram_counts(
                     stream, ["event_type"], "value", 0.0, 500.0, 1000
-                )
+                ),
+                "update",
             )
             results[files_per_trigger] = _final_counts(sunk)
         assert results[1] == results[1000]
 
-    def test_non_numeric_value_column_rejected_at_construction(self, spark):
-        from ml_hadoop_experiment_spark.streaming.quantiles import (
-            stateful_histogram,
+    def test_null_and_nan_values_ignored(self, spark, tmp_path):
+        """A stream with NULL and NaN values counts the same bins as the
+        same stream without them."""
+        ev = spark.read.parquet(
+            "/root/testdata/sf0.001/events.parquet"
+        ).select("event_type", "value")
+        bad = ev.limit(40).withColumn(
+            "value",
+            F.when(F.rand(3) < 0.5, F.lit(None)).otherwise(
+                F.lit(float("nan"))
+            ),
         )
+        with_bad = _streamed_counts(
+            spark, ev.unionByName(bad), str(tmp_path / "with")
+        )
+        without = _streamed_counts(spark, ev, str(tmp_path / "without"))
+        assert with_bad == without == _batch_counts(ev)
 
-        base = spark.createDataFrame(
-            [("a", "1.5")], "event_type string, value string"
-        )
-        with pytest.raises(TypeError, match="non-decimal numeric"):
-            stateful_histogram(base, ["event_type"], "value", 0.0, 1.0, 10)
-        with pytest.raises(TypeError, match="non-decimal numeric"):
-            stateful_histogram(
-                base.withColumn(
-                    "value", F.col("value").cast("decimal(10,2)")
-                ),
-                ["event_type"],
-                "value",
-                0.0,
-                1.0,
-                10,
-            )
+    @pytest.mark.parametrize("dtype", ["string", "decimal(10,2)"])
+    def test_stream_equals_batch_for(self, spark, tmp_path, dtype):
+        """String and decimal values bin through Spark's own
+        ``CAST(value AS DOUBLE)`` in the stream as in the batch
+        operator, so both count the same bins."""
+        ev = spark.read.parquet(
+            "/root/testdata/sf0.001/events.parquet"
+        ).select("event_type", F.col("value").cast(dtype).alias("value"))
+        streamed = _streamed_counts(spark, ev, str(tmp_path / "src"))
+        assert streamed == _batch_counts(ev)

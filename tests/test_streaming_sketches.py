@@ -1,16 +1,16 @@
-"""Streaming HLL: the Python register fold must equal the batch
-expression's registers exactly, multi-batch max-merge must equal the
-one-shot stream, and the finished estimate must equal the batch path."""
+"""Stream sketches: the HLL stream (the batch register operator drained
+in update mode) must equal the batch registers and estimate, merge
+across micro-batches, and ignore NULL values; the Misra-Gries stream
+must keep exact summaries untruncated and bounded ones truncated."""
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 import pytest
 from pyspark.sql import functions as F
 
+from ml_hadoop_experiment_spark.operators.hll import hll_register_rows
 from ml_hadoop_experiment_spark.streaming import drain
 
 
@@ -23,31 +23,19 @@ def _final_registers(sunk):
     }
 
 
+def _streamed_registers(spark, df, path, value_col="user_id"):
+    """Write ``df`` as one parquet source, stream it through the
+    register operator and return the max-merged registers."""
+    df.coalesce(1).write.mode("overwrite").parquet(path)
+    stream = spark.readStream.schema(df.schema).parquet(path)
+    regs = hll_register_rows(stream, F.col(value_col), 8, ["event_type"])
+    return _final_registers(drain(regs, "update"))
+
+
 class TestStreamingHllDistinct:
-    def test_python_fold_matches_batch_expression_registers(self, spark):
-        from ml_hadoop_experiment_spark.operators.hll import hll_register_rows
-        from ml_hadoop_experiment_spark.streaming.sketches import (
-            register_and_rho,
-        )
-
-        ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
-        batch = {
-            (r["register"], r["M"])
-            for r in hll_register_rows(ev, F.col("user_id"), 8).collect()
-        }
-        regs: dict = {}
-        for r in ev.select("user_id").collect():
-            j, rho = register_and_rho(str(int(r["user_id"])), 8)
-            regs[j] = max(regs.get(j, 0), rho)
-        assert batch == set(regs.items())
-
     def test_stream_equals_batch_estimate(self, spark):
         from ml_hadoop_experiment_spark.operators.hll import (
             estimate_from_register_rows,
-            hll_register_rows,
-        )
-        from ml_hadoop_experiment_spark.streaming.sketches import (
-            stateful_hll_distinct,
         )
 
         sf_dir = "/root/testdata/sf0.001"
@@ -59,7 +47,8 @@ class TestStreamingHllDistinct:
             .select("event_type", "user_id")
         )
         sunk = drain(
-            stateful_hll_distinct(stream, ["event_type"], "user_id", 8)
+            hll_register_rows(stream, F.col("user_id"), 8, ["event_type"]),
+            "update",
         )
         regs = sunk.groupBy("event_type", "register").agg(
             F.max("M").alias("M")
@@ -84,11 +73,7 @@ class TestStreamingHllDistinct:
     def test_multi_batch_max_merge_equals_single_batch(self, spark, tmp_path):
         """Three parquet files fed one per micro-batch must yield the
         same final registers as the whole table in one batch — the
-        mergeability the state fold relies on."""
-        from ml_hadoop_experiment_spark.streaming.sketches import (
-            stateful_hll_distinct,
-        )
-
+        mergeability the state store's max-merge relies on."""
         ev = spark.read.parquet("/root/testdata/sf0.001/events.parquet")
         d = str(tmp_path / "ev")
         os.makedirs(d, exist_ok=True)
@@ -106,55 +91,54 @@ class TestStreamingHllDistinct:
                 .select("event_type", "user_id")
             )
             sunk = drain(
-                stateful_hll_distinct(stream, ["event_type"], "user_id", 8)
+                hll_register_rows(
+                    stream, F.col("user_id"), 8, ["event_type"]
+                ),
+                "update",
             )
-            if files_per_trigger == 1:
-                # one file per micro-batch: keys emit once per batch
-                n_batches = sunk.select("event_type").groupBy(
-                    "event_type"
-                ).count()
             results[files_per_trigger] = _final_registers(sunk)
         assert results[1] == results[1000]
 
-    def test_null_values_ignored(self, spark):
-        from ml_hadoop_experiment_spark.streaming.sketches import (
-            register_and_rho,
+    def test_null_values_ignored(self, spark, tmp_path):
+        """A stream with NULL user_id rows builds the same registers as
+        the same stream without them."""
+        ev = spark.read.parquet(
+            "/root/testdata/sf0.001/events.parquet"
+        ).select("event_type", "user_id")
+        nulls = ev.limit(50).withColumn(
+            "user_id", F.lit(None).cast(ev.schema["user_id"].dataType)
         )
-        from ml_hadoop_experiment_spark.operators.hll import _check_p
+        with_nulls = _streamed_registers(
+            spark, ev.unionByName(nulls), str(tmp_path / "with")
+        )
+        without = _streamed_registers(spark, ev, str(tmp_path / "without"))
+        assert with_nulls == without
+        assert with_nulls == {
+            (r["event_type"], r["register"]): r["M"]
+            for r in hll_register_rows(
+                ev, F.col("user_id"), 8, ["event_type"]
+            ).collect()
+        }
 
-        with pytest.raises(ValueError):
-            _check_p(10)
-        # deterministic replica: same value, same (register, rho)
-        assert register_and_rho("42", 8) == register_and_rho("42", 8)
-
-    def test_non_integral_value_column_rejected_at_construction(self, spark):
-        """Float/bool/decimal values would stringify differently here
-        than Spark's CAST(value AS STRING) (1.5 -> "1", true -> "1") —
-        the guard fails FAST at construction instead of silently
-        building a divergent sketch."""
-        from ml_hadoop_experiment_spark.streaming.sketches import (
-            stateful_hll_distinct,
+    @pytest.mark.parametrize(
+        "value", ["value", "value > 100.0"], ids=["double", "boolean"]
+    )
+    def test_stream_equals_batch_for(self, spark, tmp_path, value):
+        """Double and boolean values hash through Spark's own
+        ``CAST(value AS STRING)`` in the stream as in the batch
+        operator, so both build the same registers."""
+        ev = spark.read.parquet(
+            "/root/testdata/sf0.001/events.parquet"
+        ).select("event_type", F.expr(value).alias("value"))
+        streamed = _streamed_registers(
+            spark, ev, str(tmp_path / "src"), "value"
         )
-
-        base = spark.createDataFrame(
-            [("a", 1.5), ("a", 2.0)], "event_type string, value double"
-        )
-        with pytest.raises(TypeError, match="must be string or integral"):
-            stateful_hll_distinct(base, ["event_type"], "value", p=8)
-        with pytest.raises(TypeError, match="must be string or integral"):
-            stateful_hll_distinct(
-                base.withColumn("value", F.col("value") > 1.7),
-                ["event_type"],
-                "value",
-                p=8,
-            )
-        # string and integral columns pass the guard (construction only)
-        stateful_hll_distinct(
-            base.withColumn("value", F.col("value").cast("string")),
-            ["event_type"],
-            "value",
-            p=8,
-        )
+        assert streamed == {
+            (r["event_type"], r["register"]): r["M"]
+            for r in hll_register_rows(
+                ev, F.col("value"), 8, ["event_type"]
+            ).collect()
+        }
 
 
 def _final_summary(sunk):

@@ -18,7 +18,6 @@ from ml_hadoop_experiment_spark.plans.optimize import (
     wholestage_codegen_spans,
 )
 from ml_hadoop_experiment_spark.queries import QUERIES
-from tests.conftest import SF_SMOKE
 
 # A BroadcastNestedLoopJoin is fine when its build side is BOUNDED (a
 # 1-row totals frame, a k-row sketch/dim); above this many build rows
@@ -47,7 +46,25 @@ STREAMING = {
 }
 
 
+def final_plan(plan: str) -> str:
+    """``plan`` without its ``== Initial Plan ==`` subtrees. An adaptive
+    plan that has run (such as the cached plan of an ``InMemoryRelation``
+    built under AQE) prints its final plan and then its initial plan;
+    only the final plan executes, so only it is counted."""
+    kept, skip_from = [], None
+    for line in plan.splitlines():
+        # column of the node text, past the tree's " :|+-" indent marks
+        col = len(line) - len(line.lstrip(" :|+-"))
+        if skip_from is not None and col >= skip_from:
+            continue  # inside the initial plan's subtree
+        skip_from = col if line.strip(" :|+-") == "== Initial Plan ==" else None
+        if skip_from is None:
+            kept.append(line)
+    return "\n".join(kept)
+
+
 def describe(plan: str) -> dict:
+    plan = final_plan(plan)
     return {
         "shuffles": len(re.findall(r"Exchange (?:hash|range|SinglePartition)", plan)),
         "broadcasts": plan.count("BroadcastExchange"),
@@ -60,6 +77,10 @@ def describe(plan: str) -> dict:
 
 
 def main() -> None:
+    # imported here, not at the top, so that tests importing describe()
+    # do not load their own conftest a second time
+    from tests.conftest import SF_SMOKE
+
     spark = get_session(
         app_name="plan-report",
         master="local[4]",
