@@ -19,13 +19,16 @@ GUARDED = sys.version_info < (3, 12)
 def test_session_workers_run_the_guard(spark):
     def _report(batches):
         fn = zipimport.zipimporter.invalidate_caches
+        uds = os.environ.get("PYTHON_UNIX_DOMAIN_ENABLED")
         for _ in batches:
-            yield pd.DataFrame({"src": [fn.__code__.co_filename]})
+            yield pd.DataFrame({"src": [fn.__code__.co_filename], "uds": [uds]})
 
-    rows = spark.range(2, numPartitions=2).mapInPandas(_report, "src string").collect()
+    rows = spark.range(2, numPartitions=2).mapInPandas(_report, "src string, uds string").collect()
     srcs = {r["src"] for r in rows}
     assert len(srcs) == 1
     assert srcs.pop().endswith(os.path.join("common", "pydaemon.py")) == GUARDED
+    # the worker factory talks to the daemon over a Unix domain socket
+    assert {(r["uds"] or "").lower() for r in rows} == {"true"}
 
 
 def _write_zip(path, modules):
@@ -112,6 +115,7 @@ def test_get_session_warns_on_each_static_conf_it_could_not_bind(spark, monkeypa
     other = {
         "spark.sql.codegen.cache.maxEntries": "4096",
         "spark.python.daemon.module": "pyspark.daemon",
+        "spark.python.unix.domain.socket.enabled": "false",
     }
     with monkeypatch.context() as m:
         m.setattr(session, "session_defaults", lambda: {**session_defaults(), **other})
